@@ -77,3 +77,29 @@ def registry():
 
     tweetdb_spark.load_all_operators()
     return tweetdb_spark
+
+
+def forced_gate_forms(registry, spark, monkeypatch, key):
+    """Run ``key`` with ``guards.size_gate`` forced to the direct form,
+    then to the scale form; return both results as row multisets
+    (Counter: NULL-safe, no sorted()).
+
+    Also asserts the two executed plans differ, so an equality test
+    built on this cannot pass vacuously because the gate ignored the
+    override and both runs took the same branch.  Expression ids and
+    plan ids are masked first: they differ between any two builds.
+    """
+    import re
+    from collections import Counter
+
+    from tweetdb_spark import guards
+
+    rows, plans = [], []
+    for min_bytes in (1 << 60, 0):
+        monkeypatch.setattr(guards, "TWO_PASS_MIN_BYTES", min_bytes)
+        df = registry.QUERIES[key](spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plans.append(re.sub(r"#\d+|plan_id=\d+", "", plan))
+        rows.append(Counter(map(tuple, df.collect())))
+    assert plans[0] != plans[1], f"{key}: forcing the size gate left the plan unchanged"
+    return rows

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, forced_gate_forms
 
 
 @pytest.fixture(scope="module")
@@ -170,25 +170,6 @@ def test_minhash_lsh_scale_cap_is_topk_of_exact(q, registry, spark, monkeypatch)
         for r in q("dedup_minhash_lsh").collect()
     }
     assert full == {(r.doc_a, r.doc_b, r.jaccard_dist) for r in exact}
-
-
-def test_minhash_verdicts_single_exchange_equals_two_level(
-    registry, spark, monkeypatch
-):
-    """r17 optimization round: the single-exchange member collapse
-    (engaged below the shared 32 MiB stats gate) must be row-identical
-    to the two-level md5-then-token-set collapse — the token-set
-    partition is a coarsening of the md5 partition, so the member
-    min-window reproduces the two-level ts_rep exactly.  Counter
-    multiset (NULL-safe, no sorted())."""
-    from collections import Counter
-
-    key = "dedup_minhash_verdicts"
-    monkeypatch.setenv("TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES", str(1 << 60))
-    single = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    monkeypatch.setenv("TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES", "0")
-    two = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    assert single == two
 
 
 def test_minhash_verdicts_consistent_with_pair_form(q, tables):
@@ -1465,18 +1446,10 @@ def test_corpus_interleave_two_pass_equals_single_sort(
     registry, spark, monkeypatch
 ):
     """r16 optimization round: the bucketed two-pass row_number form
-    (engaged above the _INTERLEAVE_TWO_PASS_MIN_BYTES stats gate) must
-    be row-identical to the direct single-sort form on the same
-    corpus — base-offset + within-bucket rank IS the global rank."""
-    key = "corpus_interleave"
-    monkeypatch.setenv(
-        "TWEETDB_INTERLEAVE_TWO_PASS_MIN_BYTES", str(1 << 60)
-    )  # force single-sort
-    single = sorted(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    monkeypatch.setenv(
-        "TWEETDB_INTERLEAVE_TWO_PASS_MIN_BYTES", "0"
-    )  # force two-pass
-    two = sorted(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
+    (engaged above the guards.size_gate stats gate) must be
+    row-identical to the direct single-sort form on the same corpus —
+    base-offset + within-bucket rank IS the global rank."""
+    single, two = forced_gate_forms(registry, spark, monkeypatch, "corpus_interleave")
     assert single == two
 
 
@@ -1485,14 +1458,8 @@ def test_corpus_pack_two_pass_equals_direct(registry, spark, monkeypatch):
     (min/max-derived monotone doc_id buckets, base offset +
     within-bucket exclusive sum) must be row-identical to the direct
     per-lang window — concatenating buckets in bh order IS the global
-    per-lang doc_id order.  Counter multiset (NULL-safe, no sorted())."""
-    from collections import Counter
-
-    key = "corpus_pack"
-    monkeypatch.setenv("TWEETDB_PACK_TWO_PASS_MIN_BYTES", str(1 << 60))
-    direct = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    monkeypatch.setenv("TWEETDB_PACK_TWO_PASS_MIN_BYTES", "0")
-    two = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
+    per-lang doc_id order."""
+    direct, two = forced_gate_forms(registry, spark, monkeypatch, "corpus_pack")
     assert direct == two
 
 
@@ -1503,11 +1470,5 @@ def test_corpus_token_budget_two_pass_equals_direct(
     must be row-identical to the direct per-lang window — bucket base +
     within-bucket sum IS the running total, and a pruned bucket (base
     >= budget) can contain no surviving row since n_tokens >= 0."""
-    key = "corpus_token_budget"
-    monkeypatch.setenv(
-        "TWEETDB_TOKEN_BUDGET_TWO_PASS_MIN_BYTES", str(1 << 60)
-    )
-    direct = sorted(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    monkeypatch.setenv("TWEETDB_TOKEN_BUDGET_TWO_PASS_MIN_BYTES", "0")
-    two = sorted(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
+    direct, two = forced_gate_forms(registry, spark, monkeypatch, "corpus_token_budget")
     assert direct == two

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, forced_gate_forms
 
 
 @pytest.fixture(scope="module")
@@ -697,15 +697,5 @@ def test_value_histogram_two_pass_equals_ntile_window(
     """r16 optimization round: the bucketed closed-form decile (rank
     base + within-bucket row_number, NTile's remainder arithmetic) must
     be row-identical to the direct per-type ntile window."""
-    from collections import Counter
-
-    key = "value_histogram"
-    # multiset compare (r17, r16 ADVICE): sorted() breaks on NULL
-    # event_type tuples under TEST_EDGE_MODE=null ('<' between None and
-    # str); Counter equality is the same row-identity assertion with no
-    # ordering requirement.
-    monkeypatch.setenv("TWEETDB_HISTOGRAM_TWO_PASS_MIN_BYTES", str(1 << 60))
-    direct = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
-    monkeypatch.setenv("TWEETDB_HISTOGRAM_TWO_PASS_MIN_BYTES", "0")
-    two = Counter(map(tuple, registry.QUERIES[key](spark, SF_DIR).collect()))
+    direct, two = forced_gate_forms(registry, spark, monkeypatch, "value_histogram")
     assert direct == two

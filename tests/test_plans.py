@@ -495,7 +495,9 @@ def test_corpus_interleave_two_pass_has_no_member_scale_single_partition(
     from the member-scale Project the single-sort form funnels."""
     import re
 
-    monkeypatch.setenv("TWEETDB_INTERLEAVE_TWO_PASS_MIN_BYTES", "0")
+    from tweetdb_spark import guards
+
+    monkeypatch.setattr(guards, "TWO_PASS_MIN_BYTES", 0)
     plan = _plan(registry.QUERIES["corpus_interleave"](spark, SF_DIR))
     sp_ops = [
         int(m.group(1))

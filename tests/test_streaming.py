@@ -484,6 +484,18 @@ def test_staged_fixture_invalidated_on_vintage_change(spark, tmp_path):
     assert os.path.exists(os.path.join(out2, "_STAGED"))
 
 
+def test_run_to_memory_leaves_one_checkpoint_dir(spark):
+    """run_to_memory's checkpoint dirs are pid-tagged scratch dirs: each
+    call reaps the previous one, so a long session leaves one, not one
+    per stream."""
+    from tweetdb_spark import scratch
+    from tweetdb_spark.streaming.sources import read_events_stream, run_to_memory
+
+    for _ in range(2):
+        run_to_memory(read_events_stream(spark, SF_DIR).select("event_id"))
+    assert len(scratch.own_dirs("tweetdb_ckpt_mem")) == 1
+
+
 def test_state_store_is_rocksdb_backed(spark, tables):
     """A stateful stream must run on the RocksDB state-store provider
     when the class is present (it ships in this Spark distribution).

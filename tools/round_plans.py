@@ -1,8 +1,8 @@
-"""Capture .explain('formatted') for the headline queries → plans/r16/.
+"""Capture .explain('formatted') for the headline queries → plans/r<round>/.
 
-Usage: python tools/r16_plans.py before|after [key ...]
-Writes plans/r16/<name>_<tag>.txt for each bench HEADLINE entry (or the
-given registry keys), at $SPARK_GRAFT_SF_DIR (default sf0.1).
+Usage: python tools/round_plans.py <round> before|after [key ...]
+Writes plans/r<round>/<name>_<tag>.txt for each bench HEADLINE entry (or
+the given registry keys), at $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 
 from __future__ import annotations
@@ -14,8 +14,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = sys.argv[2:]
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    rnd, tag, only = int(sys.argv[1]), sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import tweetdb_spark
@@ -23,11 +24,11 @@ def main() -> None:
     from tweetdb_spark.session import get_spark
 
     tweetdb_spark.load_all_operators()
-    spark = get_spark("tweetdb-plans-r16")
+    spark = get_spark(f"tweetdb-plans-r{rnd}")
     spark.sparkContext.setLogLevel("ERROR")
 
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", f"r{rnd}"
     )
     os.makedirs(out_dir, exist_ok=True)
 

@@ -1837,125 +1837,66 @@ def dedup_minhash_verdicts(spark, t):
     h = F.coalesce(
         F.md5("text"), F.concat(F.lit(":null:"), F.col("doc_id").cast("string"))
     )
-    # Gated collapse (r17 optimization round).  Two output-identical
-    # forms produce the same (member, uids) pair — member =
-    # (doc_id, h, n_chars, ts_rep), uids = (rep doc_id, sorted token
-    # ids) — selected by the shared 32 MiB stats gate
-    # (guards.TWO_PASS_MIN_BYTES; override
-    # TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES):
-    #
-    # BELOW the gate — single-exchange collapse (guide §2.4 "remove
-    # shuffles outright"): the token-set partition is a COARSENING of
-    # the md5 partition (byte-identical text ⟹ identical token array
-    # ⟹ identical ts_key), so ONE min-window over ts_key on MEMBERS
-    # yields exactly the ts_rep the two-level form produces — member
-    # ts-group = union of the md5-groups whose reps share the token
-    # set, so min over members = min over the per-md5-group minima =
-    # min over reps.  This drops one member-frame exchange, one
-    # window, one eager checkpoint, and the rep_map inherit join
-    # (jobs 18 → 15, Exchange 8 → 6 at sf0.1 —
-    # sweeps/mh_singlepass_r17.log) at the cost of tokenizing every
-    # member instead of every text-rep.
-    #
-    # ABOVE the gate — the r16 two-level form (guide §1.2 "don't
-    # compute things you throw away"): md5-collapse first so clones
-    # are NEVER tokenized, then the token-set window over reps only.
-    # At fixture scale the extra exchange is pure fixed cost (the
-    # forms tie at sf10's 100x clone multiplicity: 14.5/14.4 vs
-    # 14.7/15.0 s), but at extreme clone multiplicity member-tokenize
-    # dominates the saved exchange (10M docs / 2000x clones: 29.8 s
-    # two-level vs 35.5–38.9 s single-exchange) — the md5 collapse is
-    # exactly the guard against that, so the corpus-scale posture
-    # keeps it.  A/B checksum-identical across forms at
-    # sf0.01/sf0.1/sf10/10M-docs; NULL-text docs keep their per-doc
-    # sentinel groups in both (i is NULL iff text is NULL, and
-    # xxhash64(NULL) is a constant, hence the sentinel).
-    import os
-
+    # Two-level collapse (guide §1.2 "don't compute things you throw
+    # away"): md5-collapse first so byte-identical clones are NEVER
+    # tokenized, then elect a token-set representative (ts_rep) over
+    # the text-reps only.  member = (doc_id, h, n_chars, ts_rep) for
+    # every doc; uids = (ts_rep doc_id, sorted token ids) for the LSH
+    # nodes.  The token-set partition is a coarsening of the md5
+    # partition (identical text ⟹ identical token array), so each
+    # member inherits the ts_rep of its md5 rep through the rep-scale
+    # rep_map join.  NULL-text docs keep their per-doc sentinel groups
+    # at both levels (i is NULL iff text is NULL, and xxhash64(NULL) is
+    # a constant, hence the ts sentinel).  A single-exchange collapse
+    # (one ts window over members) was measured and rejected: inside
+    # noise at sf0.1, and 35.5-38.9 s vs 29.8 s at 10M docs / 2000x
+    # clone multiplicity (sweeps/mh_singlepass_r17.log).
     ts_key_of = lambda i_col, id_col: F.when(  # noqa: E731
         i_col.isNotNull(),
         F.concat(F.lit("t:"), F.xxhash64(i_col.cast("string")).cast("string")),
     ).otherwise(F.concat(F.lit(":null:"), id_col.cast("string")))
-    from tweetdb_spark.guards import TWO_PASS_MIN_BYTES
-
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_VERDICTS_TWO_LEVEL_MIN_BYTES", str(TWO_PASS_MIN_BYTES)
-        )
+    docs = t["documents"].select("doc_id", h.alias("h"), "n_chars", "text")
+    docs = docs.withColumn(
+        "rep_id", F.min("doc_id").over(Window.partitionBy("h"))
+    ).select(
+        "doc_id",
+        "h",
+        "n_chars",
+        "rep_id",
+        F.when(F.col("doc_id") == F.col("rep_id"), F.col("text")).alias(
+            "rep_text"
+        ),
     )
-    doc_bytes = int(
-        t["documents"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # localCheckpoint (r16, guide §5 / §3.3): the collapse chain feeds
+    # every downstream subtree (band a/b sides, t_a, t_b, component
+    # nodes, member assembly); the checkpoint holds one narrow row per
+    # doc plus text ONLY for the elected rep.
+    docs = docs.localCheckpoint(eager=True)
+    toks = docs.where(F.col("doc_id") == F.col("rep_id")).select(
+        "doc_id",
+        F.array_distinct(F.split("rep_text", " ")).alias("tokens"),
     )
-    if doc_bytes < threshold:
-        i_expr = F.sort_array(
-            F.expr("transform(array_distinct(split(text, ' ')), w -> xxhash64(w))")
-        )
-        docs = t["documents"].select(
-            "doc_id", h.alias("h"), "n_chars", i_expr.alias("i")
-        )
-        # localCheckpoint (r16, guide §5 / §3.3): the collapse chain
-        # feeds every downstream subtree (band a/b sides, t_a, t_b,
-        # component nodes, member assembly); the checkpoint holds one
-        # narrow row per doc plus token ids ONLY for the elected rep.
-        docs = docs.withColumn(
-            "ts_rep",
-            F.min("doc_id").over(
-                Window.partitionBy(ts_key_of(F.col("i"), F.col("doc_id")))
-            ),
-        ).select(
-            "doc_id",
-            "h",
-            "n_chars",
-            "ts_rep",
-            F.when(F.col("doc_id") == F.col("ts_rep"), F.col("i")).alias(
-                "rep_i"
-            ),
-        )
-        docs = docs.localCheckpoint(eager=True)
-        member = docs.select("doc_id", "h", "n_chars", "ts_rep")
-        uids = docs.where(F.col("doc_id") == F.col("ts_rep")).select(
-            "doc_id", F.col("rep_i").alias("i")
-        )
-    else:
-        docs = t["documents"].select("doc_id", h.alias("h"), "n_chars", "text")
-        docs = docs.withColumn(
-            "rep_id", F.min("doc_id").over(Window.partitionBy("h"))
-        ).select(
-            "doc_id",
-            "h",
-            "n_chars",
-            "rep_id",
-            F.when(F.col("doc_id") == F.col("rep_id"), F.col("text")).alias(
-                "rep_text"
-            ),
-        )
-        docs = docs.localCheckpoint(eager=True)
-        toks = docs.where(F.col("doc_id") == F.col("rep_id")).select(
-            "doc_id",
-            F.array_distinct(F.split("rep_text", " ")).alias("tokens"),
-        )
-        ids = toks.select(
-            "doc_id",
-            F.sort_array(
-                F.expr("transform(tokens, w -> xxhash64(w))")
-            ).alias("i"),
-        )
-        ids = ids.withColumn(
-            "ts_rep",
-            F.min("doc_id").over(
-                Window.partitionBy(ts_key_of(F.col("i"), F.col("doc_id")))
-            ),
-        ).localCheckpoint(eager=True)
-        # normalize to the shared downstream shape: every member row
-        # carries its ts_rep (rep_map is rep-scale, broadcast by the
-        # planner)
-        rep_map = ids.select(F.col("doc_id").alias("rep_id"), "ts_rep")
-        member = docs.join(rep_map, "rep_id").select(
-            "doc_id", "h", "n_chars", "ts_rep"
-        )
-        uids = ids.where(F.col("doc_id") == F.col("ts_rep")).select(
-            "doc_id", "i"
-        )
+    ids = toks.select(
+        "doc_id",
+        F.sort_array(
+            F.expr("transform(tokens, w -> xxhash64(w))")
+        ).alias("i"),
+    )
+    ids = ids.withColumn(
+        "ts_rep",
+        F.min("doc_id").over(
+            Window.partitionBy(ts_key_of(F.col("i"), F.col("doc_id")))
+        ),
+    ).localCheckpoint(eager=True)
+    # every member row carries its ts_rep (rep_map is rep-scale,
+    # broadcast by the planner)
+    rep_map = ids.select(F.col("doc_id").alias("rep_id"), "ts_rep")
+    member = docs.join(rep_map, "rep_id").select(
+        "doc_id", "h", "n_chars", "ts_rep"
+    )
+    uids = ids.where(F.col("doc_id") == F.col("ts_rep")).select(
+        "doc_id", "i"
+    )
     # minhash ids: same value set as the old transform(tokens, ...) &
     # mask form — masking the already-hashed ids; minhash is
     # order/multiplicity-invariant so banding is unchanged

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from tweetdb_spark.guards import TWO_PASS_MIN_BYTES as _SHARED_TWO_PASS_MIN_BYTES
+from tweetdb_spark import guards
 from tweetdb_spark.registry import query
 
 # Static sentiment lexicon over the fixture vocabulary (an engine
@@ -1091,8 +1091,6 @@ def corpus_pack(spark, t):
     via asc_nulls_first in the offsets window, and join back via
     eqNullSafe — the same rows the direct window orders first.
     """
-    import os
-
     from pyspark.sql.window import Window
 
     d = t["documents"].select(
@@ -1108,16 +1106,7 @@ def corpus_pack(spark, t):
             (cum_before % 2048).cast("bigint").alias("pack_offset"),
         )
 
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_PACK_TWO_PASS_MIN_BYTES",
-            str(_INTERLEAVE_TWO_PASS_MIN_BYTES),
-        )
-    )
-    doc_bytes = int(
-        t["documents"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if doc_bytes < threshold:
+    if not guards.size_gate(t["documents"]):
         w = (
             Window.partitionBy("lang")
             .orderBy("doc_id")
@@ -1252,8 +1241,6 @@ def corpus_token_budget(spark, t):
     0.70 s vs two-pass 0.90 s; 5M docs, direct 5.6 s vs two-pass
     2.1 s — sweeps/interleave_twopass_r16.log).
     """
-    import os
-
     from pyspark.sql.window import Window
 
     d = t["documents"].select(
@@ -1262,16 +1249,7 @@ def corpus_token_budget(spark, t):
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
         F.expr("((doc_id % 2147483647) * 2654435761) % 2147483647").alias("h"),
     )
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_TOKEN_BUDGET_TWO_PASS_MIN_BYTES",
-            str(_INTERLEAVE_TWO_PASS_MIN_BYTES),
-        )
-    )
-    doc_bytes = int(
-        t["documents"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if doc_bytes < threshold:
+    if not guards.size_gate(t["documents"]):
         w = (
             Window.partitionBy("lang")
             .orderBy("h", "doc_id")
@@ -1977,29 +1955,6 @@ def text_bpe_encode(spark, t):
     )
 
 
-# corpus_interleave's two-pass global row_number pays two extra
-# member-scale passes (the bucket-counts groupBy and the counts-per-
-# level-2-bucket branch) to remove the single-partition sort; below
-# this documents-table size (catalyst stats, the broadcast-threshold
-# analogue — same pattern as dedup.py's _LOCAL_COMPONENTS_MAX_EDGES)
-# the one-task sort is cheaper than the extra passes.  Measured
-# interleaved A/B (r16 optimization round, noop sink, min-of-runs per
-# the fault_mbps rule): 500k docs / 3.3 MB parquet — single 0.78 s vs
-# two-pass 1.58 s; 5M docs / 86 MB parquet — single 5.42 s vs
-# two-pass 3.56 s.  Crossover sits between those points; 32 MiB picks
-# the side that errs toward parallelism (a too-early two-pass costs a
-# bounded constant, a too-late single-sort is the unbounded one-task
-# wall).  Both forms are output-identical (oracle-proven at every
-# fixture scale and under NULL/empty surveys with the gate forced each
-# way via TWEETDB_INTERLEAVE_TWO_PASS_MIN_BYTES).  corpus_token_budget
-# shares the constant (its measured crossover sits in the same
-# 3.3-86 MB window; override: TWEETDB_TOKEN_BUDGET_TWO_PASS_MIN_BYTES),
-# as does value_histogram (operators/analytics.py) — the value is the
-# shared guards.TWO_PASS_MIN_BYTES (r17, r16 ADVICE: no drift between
-# the three gates).
-_INTERLEAVE_TWO_PASS_MIN_BYTES = _SHARED_TWO_PASS_MIN_BYTES
-
-
 @query(
     "corpus_interleave",
     oracle="""
@@ -2049,7 +2004,7 @@ def corpus_interleave(spark, t):
     global_pos window funneled the full corpus through one task, and
     the src_rank window's parallelism was bounded by #sources (which
     does not grow with the corpus).  Above the
-    ``_INTERLEAVE_TWO_PASS_MIN_BYTES`` stats gate both row_numbers use
+    ``guards.size_gate`` stats gate both row_numbers use
     a bucketed two-pass form (the multimodal_pack offset idiom): bucket
     by a deterministic MONOTONE coarsening of the sort key, rank
     within (partition, bucket) in parallel, and add per-bucket base
@@ -2074,8 +2029,6 @@ def corpus_interleave(spark, t):
     finite row lands in bucket 0 — single-partition again, but only in
     corpora where mix_key carries no order at all.
     """
-    import os
-
     from pyspark.sql.window import Window
 
     d = t["documents"].select(
@@ -2084,18 +2037,7 @@ def corpus_interleave(spark, t):
         (1 + F.expr("TRY_CAST(substr(source, 4) AS INT)") % 4).alias("w"),
         F.expr("((doc_id % 2147483647) * 69621) % 2147483647").alias("h"),
     )
-    # size gate (see _INTERLEAVE_TWO_PASS_MIN_BYTES): catalyst file-size
-    # stats — no job, same estimate the broadcast threshold reads
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_INTERLEAVE_TWO_PASS_MIN_BYTES",
-            str(_INTERLEAVE_TWO_PASS_MIN_BYTES),
-        )
-    )
-    doc_bytes = int(
-        t["documents"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if doc_bytes < threshold:
+    if not guards.size_gate(t["documents"]):
         ranked = d.select(
             "doc_id",
             "source",

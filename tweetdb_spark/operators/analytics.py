@@ -669,22 +669,12 @@ def value_histogram(spark, t):
     range (constant, NULL-only, or unbounded) collapses to one bucket
     — the direct form's parallelism, never wrong output.
     """
-    import os
-
     from pyspark.sql.window import Window
 
-    e = t["events"].select("event_type", "value", "event_id")
-    from tweetdb_spark.guards import TWO_PASS_MIN_BYTES
+    from tweetdb_spark import guards
 
-    threshold = int(
-        os.environ.get(
-            "TWEETDB_HISTOGRAM_TWO_PASS_MIN_BYTES", str(TWO_PASS_MIN_BYTES)
-        )
-    )
-    ev_bytes = int(
-        t["events"]._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if ev_bytes < threshold:
+    e = t["events"].select("event_type", "value", "event_id")
+    if not guards.size_gate(t["events"]):
         w = Window.partitionBy("event_type").orderBy("value", "event_id")
         return (
             e.select(

@@ -79,85 +79,7 @@ def query(name: str, oracle: Optional[str] = None, eager: bool = False):
 # rows, then the remaining rows-only §2 rows, then extras (hash-checkable
 # before rows-only).  The 55 hashable contract rows overflow a 50-key
 # window; the rotation policy is that every parked key holds driver-green
-# rows from ≥2 recent rounds.  Rotation log:
-#   r03: join_cross/sort_multicol/setop_union/setop_intersect/setop_except
-#        IN (r01 green + local strict); scan_parquet/project_arith/
-#        filter_like/agg_global/topk_global OUT (green r01+r02).
-#   r06: reverse swap — the five r03-parked keys had gone three rounds
-#        without driver evidence (round-5 verdict ask #1); the five
-#        rotated out are green r03+r05.
-#   r08: reverse swap executed (round-7 verdict ask #1) —
-#        join_cross/sort_multicol/setop_union/setop_intersect/
-#        setop_except back IN (were 3 rounds driver-stale);
-#        scan_parquet/project_arith/filter_like/agg_global/
-#        topk_global OUT (green r01+r02+r06+r07).
-#   r09: HOLD — no swap, per the 2-round cadence (round-8 verdict ask #3).
-#   r10 (EXECUTED, double swap per round-9 verdict asks #1 and #4):
-#        (a) scan_parquet/project_arith/filter_like/agg_global/topk_global
-#        IN (driver evidence r01+r02+r06+r07, 2 rounds stale);
-#        join_cross/sort_multicol/setop_union/setop_intersect/setop_except
-#        OUT (driver-green r01+r03*+r08+r09 — *r03 via the pre-r03 window —
-#        plus every committed sf0.1 strict sweep since r03).
-#        (b) STREAMING EVIDENCE ROTATION: stream_tumbling/stream_session/
-#        stream_dedup/stream_stateful/join_stream_static IN — these §2
-#        rows-only keys had NEVER been driver-graded (structurally parked
-#        behind 55 hashable rows); one round inside the window records
-#        driver rows_match evidence for them.  To make room,
-#        fn_string/fn_datetime/fn_math/fn_conditional/fn_array OUT —
-#        each driver-hash-green in ALL NINE prior rounds (r01-r09), the
-#        most redundantly evidenced keys in the registry.
-#   r11 (EXECUTED, round-10 verdict ask #3): reverse swap (b) — the five
-#        fn_* keys back IN (driver-hash-green in ALL of r01-r09), the
-#        five streaming keys back OUT to their natural rows-only
-#        positions, restoring the all-hashable 50-key window.  What the
-#        r10 rotation actually yielded (per ADVICE r10): the driver
-#        records ``spark_rows`` with ``err: "no_oracle"`` for
-#        oracle-less keys — NOT ``rows_match=true`` — so the streaming
-#        keys now hold driver-executed row counts (spark_rows evidence),
-#        with hash-level correctness still living in their batch twins.
-#   r12 (EXECUTED, 2-round cadence per round-11 verdict ask #1):
-#        join_cross/sort_multicol/setop_union/setop_intersect/setop_except
-#        back IN (2 rounds driver-stale after r11; green r01+r03+r05+r08+
-#        r09 + every committed strict sweep since); scan_parquet/
-#        project_arith/filter_like/agg_global/topk_global OUT (driver-
-#        hash-green r01+r02+r06+r07+r10+r11 — six rounds of evidence,
-#        the most redundantly covered batch keys after the fn_* family).
-#   r13 (EXECUTED): HOLD — no swap, window unchanged, per round-12
-#        verdict ask #2 (hold-then-carve sequencing).
-#   r14 (EXECUTED, r12 verdict ask #5 / r13 verdict ask #1): one-round
-#        carve-out à la r10 for the six never/stale driver-graded
-#        rows-only keys — source_stream_file, sink_jdbc_batch,
-#        agg_approx_distinct, stream_sliding, stream_watermark_late,
-#        dedup_minhash_lsh IN; the six maximally-evidenced hash keys
-#        fn_string/fn_datetime/fn_math/fn_conditional/fn_array (10 green
-#        rounds each: r01-r09 + r11-r13) plus fn_split_explode
-#        (hash-green every round r01-r13) OUT; WINDOW_ROWS_ONLY_KEYS set
-#        to the six, ROTATION_ROUND bumped to 14.
-#   r15 (EXECUTED, r14 verdict ask #1): reverse swap — restored the
-#        all-hashable window (fn_string/fn_split_explode/fn_datetime/
-#        fn_math/fn_conditional/fn_array back IN at positions 45-50, the
-#        six r14 carve-out keys back to their natural rows-only tail
-#        positions), WINDOW_ROWS_ONLY_KEYS emptied, ROTATION_ROUND=15.
-#   r16 (EXECUTED, r14 verdict ask #3 / r15 verdict ask #1): one-round
-#        streaming evidence re-tour à la r10/r14 — stream_tumbling/
-#        stream_session/stream_dedup/stream_stateful/join_stream_static
-#        IN at positions 45-49 (their driver spark_rows evidence was
-#        r10-vintage, six rounds stale); the six fn_* keys OUT to make
-#        room (the most redundantly evidenced keys in the registry: ten+
-#        driver-green rounds each).  Five out-keys for five in-keys
-#        leaves one window slot, filled by promoting scan_parquet to
-#        position 50 — the stalest parked HASHABLE key (driver-green
-#        r01+r02+r06+r07+r10+r11, nothing since), so the tour also
-#        refreshes one batch key's driver evidence for free.
-#        WINDOW_ROWS_ONLY_KEYS = the five streaming keys,
-#        ROTATION_ROUND = 16.
-#   r17 (EXECUTED, r16 verdict ask #1): reverse swap — the six fn_*
-#        keys back IN at positions 45-50, scan_parquet back to the
-#        parked-hashable block (its driver evidence refreshed by the
-#        r16 tour), the five streaming keys back to their natural
-#        rows-only tail positions (fresh r16 driver spark_rows
-#        evidence), WINDOW_ROWS_ONLY_KEYS emptied, ROTATION_ROUND
-#        bumped to 17.  Restores the all-hashable 50-key window.
+# rows from ≥2 recent rounds (the dated rotation history is in CHANGES.md).
 # If the driver's window size or selection policy ever differs,
 # ``tools/check.py --strict`` still verifies ALL registered hashable keys
 # locally regardless of position — that local sweep, not this ordering,

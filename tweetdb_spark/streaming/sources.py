@@ -33,6 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tweetdb_spark import scratch
 from tweetdb_spark.catalog import load_tables
 
 # JSON wire schema (ts_us = unix microseconds, exact).
@@ -314,8 +315,6 @@ def run_to_parquet(df: DataFrame) -> DataFrame:
     _spark_metadata present).
     """
     configure_state_store(df.sparkSession)
-    from tweetdb_spark import scratch
-
     out = scratch.fresh_dir("tweetdb_fsink")
     ckpt = scratch.fresh_dir("tweetdb_fschk")
     with _stream_shuffle_partitions(df.sparkSession):
@@ -344,14 +343,15 @@ def run_to_memory(
     machinery; returns the sink table as a DataFrame.
 
     Lifetime contract: each call registers a uniquely-named in-memory
-    table (holding the result for the session's lifetime) and a /tmp
-    checkpoint dir; callers that loop many streams in one long session
-    should dropTempView / clean ckpt dirs when done — test/driver
-    usage (bounded calls per process) does not need to.
+    table (holding the result for the session's lifetime) and a
+    pid-tagged scratch checkpoint dir; the next call in the same
+    process reaps the previous dir (the query has terminated by then),
+    so at most one is left per process.  Callers that loop many streams
+    in one long session should dropTempView when done.
     """
     configure_state_store(df.sparkSession)
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"tweetdb_ckpt_{name}")
+    ckpt = scratch.fresh_dir("tweetdb_ckpt_mem")
     writer = (
         df.writeStream.format("memory")
         .queryName(name)
