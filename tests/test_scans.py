@@ -107,7 +107,8 @@ def test_snapshot_expire_deletes_only_unreferenced_files(spark, tables):
 def test_jsonl_shards_respect_record_cap(q):
     """sink_jsonl_sharded's layout contract: ≥4 shard files (the
     repartition count at 500 docs) and no file over the 200-record
-    maxRecordsPerFile cap — exactly one JSON doc per line."""
+    maxRecordsPerFile cap — exactly one JSON doc per line.  Also the
+    sink_parquet_part scratch layout."""
     from tweetdb_spark import scratch
 
     q("sink_jsonl_sharded").collect()
@@ -125,6 +126,12 @@ def test_jsonl_shards_respect_record_cap(q):
         assert 0 < n <= 200
         total += n
     assert total == 500
+    # sink_parquet_part's dir is pid-tagged scratch too: a second call
+    # reaps the first, leaving one dir with one dir per event_type
+    for _ in range(2):
+        q("sink_parquet_part").collect()
+    (part,) = scratch.own_dirs("tweetdb_sink_part")
+    assert glob.glob(f"{part}/event_type=*")
 
 
 def test_jdbc_read_is_partitioned_and_pushes_filter(q):

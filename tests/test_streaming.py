@@ -145,10 +145,11 @@ def test_derby_log_never_lands_in_cwd(spark):
 def test_sink_jdbc_sqlite_fallback_matches_batch(registry, spark, tables):
     """The SQLite fallback branch stays green even while the container
     has Derby (the gate would otherwise be the only thing exercising
-    it)."""
+    it), and its DB and checkpoint dirs are reaped by the next call."""
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_DIR
+    from tweetdb_spark import scratch
     from tweetdb_spark.registry import Tables
     from tweetdb_spark.streaming.queries import _sink_jdbc_sqlite
 
@@ -156,9 +157,12 @@ def test_sink_jdbc_sqlite_fallback_matches_batch(registry, spark, tables):
         {name: df for name, df in {"events": tables["events"]}.items()}
     )
     t.sf_dir = SF_DIR
-    sunk = _rows(
-        _sink_jdbc_sqlite(spark, t), "user_id", "n_purchases", "total_value"
-    )
+    for _ in range(2):  # the second call reaps the first call's dirs
+        sunk = _rows(
+            _sink_jdbc_sqlite(spark, t), "user_id", "n_purchases", "total_value"
+        )
+    assert len(scratch.own_dirs("tweetdb_sink_db")) == 1
+    assert len(scratch.own_dirs("tweetdb_ckpt")) == 1
     batch = _rows(
         tables["events"]
         .where(F.col("event_type") == "purchase")
@@ -485,52 +489,42 @@ def test_staged_fixture_invalidated_on_vintage_change(spark, tmp_path):
 
 
 def test_run_to_memory_leaves_one_checkpoint_dir(spark):
-    """run_to_memory's checkpoint dirs are pid-tagged scratch dirs: each
-    call reaps the previous one, so a long session leaves one, not one
-    per stream."""
+    """Every drain's checkpoint is a pid-tagged scratch dir under one
+    prefix: each drain reaps the previous one, so a long session leaves
+    one, not one per stream."""
     from tweetdb_spark import scratch
     from tweetdb_spark.streaming.sources import read_events_stream, run_to_memory
 
     for _ in range(2):
         run_to_memory(read_events_stream(spark, SF_DIR).select("event_id"))
-    assert len(scratch.own_dirs("tweetdb_ckpt_mem")) == 1
+    assert len(scratch.own_dirs("tweetdb_ckpt")) == 1
 
 
 def test_state_store_is_rocksdb_backed(spark, tables):
-    """A stateful stream must run on the RocksDB state-store provider
-    when the class is present (it ships in this Spark distribution).
-    Asserted from the query's own progress metrics — the provider's
-    rocksdb custom metrics only appear when it is actually active —
-    plus value parity with the batch twin."""
-    import os
-    import tempfile
+    """A stateful stream run through the engine's drain must use the
+    RocksDB state-store provider when the class is present (it ships
+    in this Spark distribution), whatever ran earlier in the session.
+    Asserted from the drained query's own progress metrics — the
+    provider's rocksdb custom metrics only appear when it is actually
+    active — plus value parity with the batch twin."""
     import uuid
 
     from pyspark.sql import functions as F
 
-    from tests.conftest import SF_DIR
-    from tweetdb_spark.streaming.sources import (
-        configure_state_store,
-        read_events_stream,
-    )
+    from tweetdb_spark.streaming.sources import drain, read_events_stream
 
-    assert configure_state_store(spark), "RocksDB provider class missing"
+    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     counts = (
         read_events_stream(spark, SF_DIR)
         .groupBy("event_type")
         .agg(F.count("*").alias("cnt"))
     )
     name = f"mem_rocks_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"tweetdb_ckpt_{name}")
-    q = (
+    q = drain(
         counts.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     progress = q.recentProgress
     assert progress, "no progress reported"
     metrics = progress[-1]["stateOperators"][0]["customMetrics"]
@@ -545,6 +539,44 @@ def test_state_store_is_rocksdb_backed(spark, tables):
         .collect()
     }
     assert got == want
+
+
+def test_fold_feed_folds_every_batch_and_replays_idempotently(spark):
+    """_fold_feed folds over more than one micro-batch (a single-batch
+    run would pass every stream-equals-batch test): one snapshot per
+    staged feed file, a sum equal to the batch sum, and re-applying the
+    last batch id leaves the final snapshot's rows unchanged."""
+    import glob
+    import os
+
+    from pyspark.sql import functions as F
+
+    from tweetdb_spark import scratch
+    from tweetdb_spark.streaming.queries import _fold_batch, _fold_feed
+
+    feed = spark.range(1, 41).select(F.col("id").alias("x"))
+    seen = []
+
+    def step(bdf, prev):
+        seen.append(bdf.collect())
+        part = bdf.agg(F.sum("x").alias("total"))
+        if prev is not None:
+            part = part.unionByName(prev).agg(F.sum("total").alias("total"))
+        return part
+
+    folded = _fold_feed(spark, "tweetdb_foldtest", feed, step)
+    final = [tuple(r) for r in folded.collect()]
+    assert final == [(sum(range(1, 41)),)]
+
+    root = scratch.own_dirs("tweetdb_foldtest")[-1]
+    n_files = len(glob.glob(os.path.join(root, "feed", "*.parquet")))
+    snapshots = [d for d in os.listdir(root) if d.startswith("v")]
+    assert len(snapshots) == n_files > 1
+
+    last = n_files - 1
+    _fold_batch(root, step, spark.createDataFrame(seen[-1], feed.schema), last)
+    replayed = spark.read.parquet(os.path.join(root, f"v{last + 1}"))
+    assert [tuple(r) for r in replayed.collect()] == final
 
 
 def test_stream_cdc_apply_equals_batch_merge(registry, spark):

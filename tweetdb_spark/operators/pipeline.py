@@ -289,13 +289,10 @@ def tweet_filter_stream(spark, t):
     predicate, no state, no shuffle; backpressure is just file-source
     trigger sizing.
     """
-    import os as _os
-
     from tweetdb_spark import scratch
+    from tweetdb_spark.streaming.sources import run_to_parquet
 
     feed_dir = scratch.fresh_dir("tweetdb_filterfeed")
-    out_dir = scratch.fresh_dir("tweetdb_filterout")
-    ckpt = scratch.fresh_dir("tweetdb_filterchk")
     raw = synth_tweets(t["documents"], include_coordinates=True)
     raw.repartition(4).write.mode("overwrite").text(feed_dir)
 
@@ -307,20 +304,4 @@ def tweet_filter_stream(spark, t):
     parsed = feed.select(
         F.from_json("value", FILTER_TWEET_SCHEMA).alias("tw")
     ).select("tw.*")
-    q = (
-        _apply_track_filter(parsed)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not _os.path.isdir(out_dir):  # defensive: empty feed
-        return spark.createDataFrame(
-            [],
-            "id long, uid long, lang string, matched_track boolean, "
-            "matched_follow boolean, matched_bbox boolean",
-        )
-    return spark.read.parquet(out_dir)
+    return run_to_parquet(_apply_track_filter(parsed))

@@ -12,10 +12,10 @@ only the projected columns, ``PushedFilters`` the predicates).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from tweetdb_spark import scratch
 from tweetdb_spark.registry import query
 from tweetdb_spark.schemas import PROPS_JSON
 
@@ -225,13 +225,9 @@ def sink_parquet_part(spark, t):
     written copy back, and aggregates it — the oracle aggregates the
     *original*, so the hash check proves the round-trip is lossless.
     """
-    # unique path per call: a shared fixed dir races when two processes
-    # (pytest + check.py) overwrite/read it concurrently
-    import uuid as _uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(), f"tweetdb_sink_part_{_uuid.uuid4().hex[:8]}"
-    )
+    # pid-tagged scratch dir: a shared fixed dir races when two
+    # processes (pytest + check.py) overwrite/read it concurrently
+    out = scratch.fresh_dir("tweetdb_sink_part")
     (
         t["events"]
         .write.mode("overwrite")
@@ -268,8 +264,6 @@ def sink_jsonl_sharded(spark, t):
     JSON round-trip exact: unicode escaping, embedded newlines (JSON
     ``\\n`` keeps one doc per line), and int widths all survive.
     """
-    from tweetdb_spark import scratch
-
     out = scratch.fresh_dir("tweetdb_jsonl")
     docs = t["documents"]
     (
@@ -323,8 +317,6 @@ def ingest_binary_files(spark, t):
     import os as _os
 
     from pyspark.sql.window import Window
-
-    from tweetdb_spark import scratch
 
     out = scratch.fresh_dir("tweetdb_blobs")
     _os.makedirs(out)  # fresh_dir returns an uncreated path
@@ -393,8 +385,6 @@ def scan_merge_schema(spark, t):
     column didn't exist), for the new it counts genuine NULL values,
     and both sides compute it identically.
     """
-    from tweetdb_spark import scratch
-
     # pid-tagged scratch naming (not a bare uuid): purely intermediate
     # data, so prior runs must be reapable — a uuid dir with no pid tag
     # is invisible to reap_stale and accumulates forever
@@ -443,8 +433,6 @@ def compact_files(spark, t):
     aggregates the ORIGINAL — the hash proves the rewrite lost
     nothing.  tests/test_scans assert the file-count drop.
     """
-    from tweetdb_spark import scratch
-
     # per-process namespacing: only THIS process's prior dirs are
     # reaped, so a concurrent check.py/pytest pair can't delete each
     # other's in-flight output (lexicographic-latest still holds
@@ -485,7 +473,6 @@ def ingest_csv(spark, t):
     on a 100 TB drop zone, schema inference is an extra full read
     and a correctness hazard (a column of int-looking strings).
     """
-    from tweetdb_spark import scratch
     from tweetdb_spark.schemas import CUSTOMER
 
     path = scratch.fresh_dir("tweetdb_csv")
@@ -512,8 +499,6 @@ def sink_orc_roundtrip(spark, t):
     ORIGINAL parquet (DuckDB reads no ORC), so the hash proves the
     format conversion lost nothing — types, timestamps, doubles.
     """
-    from tweetdb_spark import scratch
-
     path = scratch.fresh_dir("tweetdb_orc")
     t["orders"].write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -536,8 +521,6 @@ def _snapshot_root(spark, t) -> str:
     """
     import glob
     import json
-
-    from tweetdb_spark import scratch
 
     root = scratch.fresh_dir("tweetdb_snap")
     data = os.path.join(root, "data")
@@ -800,7 +783,6 @@ def ingest_jdbc(spark, t):
     (type mapping included, money as integer cents) is value-hash-
     checked.  Skipped-registration if the driver jar is absent.
     """
-    from tweetdb_spark import scratch
     from tweetdb_spark.streaming.queries import _derby_available
 
     if not _derby_available(spark):  # pragma: no cover - jar ships with pyspark
@@ -864,8 +846,6 @@ def sink_parquet_codec(spark, t):
     parquet footer self-describes — a mixed-codec table reads fine,
     which is what makes incremental codec migration possible).
     """
-    from tweetdb_spark import scratch
-
     src = t["orders"]
     fold = F.expr(
         "bit_xor(xxhash64(o_orderkey, o_orderstatus, o_totalprice, "
@@ -964,7 +944,6 @@ def sink_custom_python(spark, t):
     throughput scales with partitions since writes never funnel
     through the driver.
     """
-    from tweetdb_spark import scratch
     from tweetdb_spark.sources.tweetgen import register_sink
 
     register_sink(spark)

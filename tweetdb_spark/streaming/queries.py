@@ -1,7 +1,7 @@
 """Structured Streaming operators (SURVEY.md §2.8: S4, S5, ST1–ST6, J11).
 
 Every key here is a *driver-runnable* streaming query: the callable
-stages the stream, runs it to completion with an availableNow trigger,
+stages the stream, runs it to completion through ``sources.drain``,
 and returns the materialized result DataFrame.  All are rows-only
 checks by nature (the driver omits them from the oracle hash); each
 stateful shape has an oracle-hash-checked batch twin in
@@ -22,11 +22,16 @@ construction (hour×5 types).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from tweetdb_spark import scratch
 from tweetdb_spark.registry import query
 from tweetdb_spark.streaming.sources import (
+    drain,
     read_events_stream,
     run_to_memory,
     run_to_parquet,
@@ -147,8 +152,6 @@ def _latest_totals_per_user(mem):
     """Update-mode sinks hold one row per (user, micro-batch); the
     final answer is the row with the max running count per user.
     Shared by both ST6 variants so their semantics cannot diverge."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("user_id").orderBy(F.col("n_purchases").desc())
     return (
         mem.withColumn("rn", F.row_number().over(w))
@@ -314,7 +317,7 @@ def source_stream_custom(spark, t):
         F.count("*").alias("n_tweets"),
         F.round(F.sum("score"), 2).alias("sum_score"),
     )
-    return run_to_memory(agg, "complete", drain="all_available")
+    return run_to_memory(agg, "complete", all_available=True)
 
 
 def _has_protobuf() -> bool:
@@ -433,14 +436,9 @@ def stream_sink_parquet(spark, t):
     wants.  Returns the read-back aggregate; a pytest asserts it
     equals the batch twin and that partition directories exist.
     """
-    from tweetdb_spark import scratch
-
-    # ckpt prefix must NOT share the sink prefix (the layout test
-    # globs the sink prefix for the latest DATA dir); per-process
-    # namespacing stops concurrent sessions reaping each other's
-    # in-flight sink/checkpoint dirs
+    # per-process namespacing stops concurrent sessions reaping each
+    # other's in-flight sink dirs
     out = scratch.fresh_dir("tweetdb_ssink")
-    ckpt = scratch.fresh_dir("tweetdb_sschk")
     s = read_events_stream(spark, _sf_dir(t), files_per_trigger=10)
     # Partition on a SANITIZED derivative, never the raw column: hive
     # directory encoding cannot round-trip '' (read back as NULL), so
@@ -454,16 +452,12 @@ def stream_sink_parquet(spark, t):
         .when(F.col("event_type") == "", F.lit("__empty__"))
         .otherwise(F.col("event_type"))
     )
-    q = (
+    drain(
         s.withColumn("pt", pt)
         .writeStream.format("parquet")
         .option("path", out)
-        .option("checkpointLocation", ckpt)
         .partitionBy("pt")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     back = spark.read.parquet(out).drop("pt")
     return back.groupBy("event_type").agg(
         F.count("*").alias("cnt"),
@@ -648,15 +642,14 @@ def _sink_jdbc_derby(spark, t):
     JDBC touch (Derby reads them once at lazy engine boot), so derby.log
     never lands in the repo; the DB itself lives under an explicit
     scratch path in the URL."""
-    import os as _os
     import uuid as _uuid
 
-    from tweetdb_spark import scratch, session as _session
+    from tweetdb_spark import session as _session
 
     jvm = spark._jvm
     _session._pin_derby_home(spark)  # no-op if configure() already ran
     home = scratch.fresh_dir("tweetdb_derby")  # reapable, pid-tagged
-    _os.makedirs(home)
+    os.makedirs(home)
     url = f"jdbc:derby:{home}/sink_{_uuid.uuid4().hex[:8]};create=true"
 
     con = jvm.java.sql.DriverManager.getConnection(url)
@@ -699,16 +692,11 @@ def _sink_jdbc_derby(spark, t):
             raise
         c.close()
 
-    ckpt = scratch.fresh_dir("tweetdb_ckpt_sink")
-    q = (
+    drain(
         _purchase_totals_stream(spark, t)
         .writeStream.outputMode("complete")
         .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     return spark.read.jdbc(url, "purchase_totals").select(
         F.col("user_id").cast("long").alias("user_id"),
@@ -726,10 +714,10 @@ def _sink_jdbc_sqlite(spark, t):
     branch.
     """
     import sqlite3
-    import tempfile
-    import uuid as _uuid
 
-    db_path = f"{tempfile.gettempdir()}/tweetdb_sink_{_uuid.uuid4().hex[:8]}.db"
+    db_dir = scratch.fresh_dir("tweetdb_sink_db")  # reapable, pid-tagged
+    os.makedirs(db_dir)
+    db_path = os.path.join(db_dir, "sink.db")
     init = sqlite3.connect(db_path)
     init.execute("PRAGMA journal_mode=WAL")  # concurrent partition writers
     init.execute(
@@ -766,15 +754,7 @@ def _sink_jdbc_sqlite(spark, t):
         # fan-in the same way)
         batch_df.coalesce(8).foreachPartition(write_partition)
 
-    ckpt = f"{tempfile.gettempdir()}/tweetdb_ckpt_sink_{_uuid.uuid4().hex[:8]}"
-    q = (
-        per_user.writeStream.outputMode("complete")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(per_user.writeStream.outputMode("complete").foreachBatch(upsert))
 
     con = sqlite3.connect(db_path)
     data = con.execute(
@@ -789,6 +769,80 @@ def _sink_jdbc_sqlite(spark, t):
 def _sf_dir(t) -> str:
     """sf_dir travels on the Tables object (registry.Tables.sf_dir)."""
     return t.sf_dir
+
+
+def _fold_batch(root, step, bdf, batch_id):
+    """Write snapshot ``v{batch_id + 1} = step(bdf, v{batch_id})`` under
+    ``root``; ``v0`` may be absent (no base), a later one may not."""
+    prev = os.path.join(root, f"v{batch_id}")
+    if os.path.isdir(prev):
+        cur = bdf.sparkSession.read.parquet(prev)
+    elif batch_id == 0:
+        cur = None
+    else:
+        raise FileNotFoundError(
+            f"fold snapshot {prev} is missing; batch {batch_id} must not "
+            "fold from empty state"
+        )
+    nxt = os.path.join(root, f"v{batch_id + 1}")
+    step(bdf, cur).write.mode("overwrite").parquet(nxt)
+
+
+def _fold_feed(spark, name, feed, step, base=None):
+    """Fold ``feed`` into state micro-batch by micro-batch and return
+    the final state: the copy-on-write snapshot chain behind the
+    oracle-checked streaming ingest and CDC keys.
+
+    ``feed`` is staged as 4 parquet files under a ``name`` scratch dir
+    and streamed one file per trigger through :func:`drain`; batch
+    ``b`` writes snapshot ``v{b+1} = step(batch, v{b})``, where ``v0``
+    is ``base`` (``step`` gets None when there is no base).
+
+    Invariant: snapshot ``v{b+1}`` is named by the batch id that
+    produced it and computed only from ``v{b}`` and batch ``b``'s
+    input.  A redelivered batch ``b`` (a retried batch, or a restart
+    from checkpoint) therefore rewrites ``v{b+1}`` from the same
+    ``v{b}`` and the same input, so replay is idempotent, and a crashed
+    batch never corrupts a readable snapshot.  When ``step`` merges
+    with a commutative, associative reduce, the final snapshot is also
+    independent of how the feed was batched, which is what lets these
+    streaming keys carry a batch SQL oracle.
+    """
+    root = scratch.fresh_dir(name)
+    feed_dir = os.path.join(root, "feed")
+    feed.repartition(4).write.parquet(feed_dir)
+    if base is not None:
+        base.write.parquet(os.path.join(root, "v0"))
+    stream = (
+        spark.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir)
+    )
+    drain(
+        stream.writeStream.foreachBatch(
+            lambda bdf, batch_id: _fold_batch(root, step, bdf, batch_id)
+        )
+    )
+    last = max(int(d[1:]) for d in os.listdir(root) if d.startswith("v"))
+    return spark.read.parquet(os.path.join(root, f"v{last}"))
+
+
+def _with_prev(part, prev):
+    """A batch's partial state, unioned with the previous snapshot."""
+    return part if prev is None else part.unionByName(prev)
+
+
+def _latest_version_wins(bdf, cur):
+    """The CDC fold step: the highest ``version`` per ``o_orderkey``
+    wins, whatever order batches arrive in (a tombstone is just a
+    winning row the read side drops)."""
+    w = Window.partitionBy("o_orderkey").orderBy(F.col("version").desc())
+    return (
+        cur.unionByName(bdf)
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
 
 
 @query(
@@ -820,10 +874,10 @@ def stream_cdc_apply(spark, t):
 
     The change feed (merge_upsert's deterministic updates, split
     across files so multiple micro-batches fire) is consumed with a
-    file stream; each batch merges into the CURRENT snapshot version
-    and commits a NEW immutable snapshot dir — copy-on-write, so a
-    crashed batch never corrupts the readable state, and re-applying
-    a batch is idempotent (latest-wins by version).  Unusually for a
+    file stream; each batch merges into the previous snapshot and
+    commits the next one (``_fold_feed``'s copy-on-write chain), and
+    latest-wins by version makes the end state independent of batch
+    order.  Unusually for a
     streaming key, the FINAL state is exactly SQL-expressible, so
     this one is oracle-HASH-checked, not rows-only: the stream's
     materialized table must match the batch MERGE to the byte.
@@ -831,20 +885,7 @@ def stream_cdc_apply(spark, t):
     amortizes via file-level pruning; the snapshot-chain structure
     (and its manifest form, snapshot_time_travel) is identical.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    from tweetdb_spark import scratch
-
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
-    root = scratch.fresh_dir("tweetdb_cdc")
-    ckpt = scratch.fresh_dir("tweetdb_cdcchk")
-    base_dir = os.path.join(root, "v0")
-    feed_dir = os.path.join(root, "feed")
-    base = t["orders"].select(*cols, F.lit(1).alias("version"))
-    base.write.mode("overwrite").parquet(base_dir)
-    (
+    changes = (
         t["orders"]
         .where(F.col("o_orderkey") % 7 == 0)
         .select(
@@ -856,40 +897,15 @@ def stream_cdc_apply(spark, t):
             ),
             F.lit(2).alias("version"),
         )
-        .repartition(4)  # several feed files -> several micro-batches
-        .write.mode("overwrite")
-        .parquet(feed_dir)
     )
-    state = {"cur": base_dir, "n": 0}
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("version").desc())
-
-    def apply_batch(bdf, batch_id):
-        cur = bdf.sparkSession.read.parquet(state["cur"])
-        nxt = os.path.join(root, f"v{state['n'] + 1}")
-        (
-            cur.unionByName(bdf)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-            .write.mode("overwrite")
-            .parquet(nxt)
-        )
-        state["cur"] = nxt
-        state["n"] += 1
-
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
+    base = t["orders"].select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.lit(1).alias("version"),
     )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(state["cur"])
+    return _fold_feed(spark, "tweetdb_cdc", changes, _latest_version_wins, base)
 
 
 @query(
@@ -923,30 +939,16 @@ def stream_corpus_ingest(spark, t):
     **independent of how the feed was batched**, which is exactly
     what lets a SQL oracle hash-check a streaming operator: the
     result equals the batch quality ∧ dedup_exact query no matter
-    the trigger schedule.  State commits are copy-on-write snapshot
-    dirs (stream_cdc_apply's pattern) and replayed batch_ids are
-    skipped, so a crash-restart never double-counts.  At 100 TB the
+    the trigger schedule.  State commits are ``_fold_feed``'s
+    copy-on-write snapshots.  At 100 TB the
     state table is 32-byte hashes + two ints per distinct doc —
     three orders smaller than the corpus — and the merge is an
     equi-shuffle on the hash; bucket the state by text_hash and the
     per-batch merge stops reshuffling the accumulated side entirely
     (dedup_incremental's layout, fed by a stream).
     """
-    import os
 
-    from tweetdb_spark import scratch
-
-    root = scratch.fresh_dir("tweetdb_ingest")
-    ckpt = scratch.fresh_dir("tweetdb_ingestchk")
-    feed_dir = os.path.join(root, "feed")
-    docs = t["documents"].select("doc_id", "text")
-    docs.repartition(4).write.mode("overwrite").parquet(feed_dir)
-
-    state = {"cur": None, "n": 0, "applied": set()}
-
-    def apply_batch(bdf, batch_id):
-        if batch_id in state["applied"]:  # replay after restart: no-op
-            return
+    def step(bdf, prev):
         tok = bdf.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         stats = tok.groupBy("doc_id").agg(
             F.count("*").alias("n_tokens"),
@@ -955,7 +957,7 @@ def stream_corpus_ingest(spark, t):
         quality = (F.col("n_tokens").between(20, 1000)) & (
             F.col("n_distinct").cast("double") / F.col("n_tokens") > 0.2
         )
-        agg = (
+        part = (
             bdf.join(stats, "doc_id")
             .where(quality)
             .groupBy(F.sha2(F.lower(F.trim(F.col("text"))), 256).alias("text_hash"))
@@ -964,35 +966,17 @@ def stream_corpus_ingest(spark, t):
                 F.count("*").alias("n_copies"),
             )
         )
-        if state["cur"] is not None:
-            cur = bdf.sparkSession.read.parquet(state["cur"])
-            agg = (
-                cur.unionByName(agg)
-                .groupBy("text_hash")
-                .agg(
-                    F.min("keep_doc_id").alias("keep_doc_id"),
-                    F.sum("n_copies").cast("long").alias("n_copies"),
-                )
+        return (
+            _with_prev(part, prev)
+            .groupBy("text_hash")
+            .agg(
+                F.min("keep_doc_id").alias("keep_doc_id"),
+                F.sum("n_copies").cast("long").alias("n_copies"),
             )
-        nxt = os.path.join(root, f"v{state['n'] + 1}")
-        agg.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
-        state["n"] += 1
-        state["applied"].add(batch_id)
+        )
 
-    feed = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(state["cur"])
+    docs = t["documents"].select("doc_id", "text")
+    return _fold_feed(spark, "tweetdb_ingest", docs, step)
 
 
 @query("stream_vector_ingest", oracle=None, eager=True)  # streamed index maintenance
@@ -1016,9 +1000,6 @@ def stream_vector_ingest(spark, t):
     invariant the other streaming twins enforce.  Rows-only key
     (centroids are engine-internal; no faithful ANSI oracle).
     """
-    import os as _os
-
-    from tweetdb_spark import scratch
     from tweetdb_spark.llm.similarity import ensure_ivf_index
     from tweetdb_spark.streaming.sources import stage_embeddings_parquet
     from tweetdb_spark.schemas import TABLE_SCHEMAS
@@ -1039,7 +1020,6 @@ def stream_vector_ingest(spark, t):
     )
 
     out_dir = scratch.fresh_dir("tweetdb_vec_ingest")
-    ckpt = scratch.fresh_dir("tweetdb_ckpt_vec")
 
     d2 = F.aggregate(
         F.zip_with(
@@ -1061,14 +1041,8 @@ def stream_vector_ingest(spark, t):
             "append"
         ).parquet(out_dir)
 
-    q = (
-        feed.writeStream.foreachBatch(assign)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not _os.path.isdir(out_dir):  # defensive: empty feed
+    drain(feed.writeStream.foreachBatch(assign))
+    if not os.path.isdir(out_dir):  # defensive: empty feed
         # same 3-column schema as the normal path below
         return spark.createDataFrame([], "vec_id long, cell int, label int")
     return spark.read.parquet(out_dir).select(
@@ -1123,33 +1097,19 @@ def stream_sketch_ingest(spark, t):
     which is what makes this streaming key oracle-HASH-checked (the
     stream_corpus_ingest argument, applied to sketch state): the
     end-state estimates must equal the batch-built CMS value for
-    value.  State lives in one COW parquet snapshot per batch
+    value.  State lives in one ``_fold_feed`` snapshot per batch
     ((j, bucket) grid rows ∪ probe-count rows, merged by one
-    grouped SUM — ≤4096 + 50 rows whatever the stream has seen);
-    replayed batch_ids are skipped, so crash-restart never
-    double-counts.  At 100 TB this is the always-on ingest monitor:
+    grouped SUM — ≤4096 + 50 rows whatever the stream has seen).
+    At 100 TB this is the always-on ingest monitor:
     per-batch work is one map-side-combined partial agg over the
     batch plus a merge against KBs of state, and any frequency
     question over the whole history reads the grid, never the
     history.  Docstring lineage: SURVEY.md §2 ST-rows + the sketch
     trio (operators/aggregates.py).
     """
-    import os as _os
-
-    from tweetdb_spark import scratch
     from tweetdb_spark.operators.aggregates import _cms_hashes
 
-    root = scratch.fresh_dir("tweetdb_sketchingest")
-    ckpt = scratch.fresh_dir("tweetdb_sketchingestchk")
-    feed_dir = _os.path.join(root, "feed")
-    ev = t["events"].select("user_id")
-    ev.repartition(4).write.mode("overwrite").parquet(feed_dir)
-
-    state = {"cur": None, "n": 0, "applied": set()}
-
-    def apply_batch(bdf, batch_id):
-        if batch_id in state["applied"]:  # replay after restart: no-op
-            return
+    def step(bdf, prev):
         grid = (
             bdf.select(F.explode(_cms_hashes(F.col("user_id"))).alias("h"))
             .groupBy(F.col("h.j").alias("j"), F.col("h.bucket").alias("bucket"))
@@ -1167,33 +1127,15 @@ def stream_sketch_ingest(spark, t):
                 "c",
             )
         )
-        parts = grid.unionByName(probe)
-        if state["cur"] is not None:
-            parts = parts.unionByName(
-                bdf.sparkSession.read.parquet(state["cur"])
-            )
-        merged = parts.groupBy("j", "bucket", "user_id").agg(
-            F.sum("c").alias("c")
+        return (
+            _with_prev(grid.unionByName(probe), prev)
+            .groupBy("j", "bucket", "user_id")
+            .agg(F.sum("c").alias("c"))
         )
-        nxt = _os.path.join(root, f"v{state['n'] + 1}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
-        state["n"] += 1
-        state["applied"].add(batch_id)
 
-    feed = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
+    st = _fold_feed(
+        spark, "tweetdb_sketchingest", t["events"].select("user_id"), step
     )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    st = spark.read.parquet(state["cur"])
     grid = st.where(F.col("user_id").isNull()).select("j", "bucket", "c")
     probes = st.where(F.col("user_id").isNotNull()).select(
         "user_id", F.col("c").alias("exact_cnt")
@@ -1239,64 +1181,28 @@ def stream_rollup_ingest(spark, t):
     grouped SUM — commutative and associative, so the end state is
     independent of trigger schedule and batch boundaries, which is
     what lets a STREAMING key carry a full value-hash ORACLE (the
-    stream_corpus_ingest argument).  State is a COW parquet snapshot
-    of ≤ |types|×|hours| rows; replayed batch_ids are skipped, so
-    crash-restart never double-counts (kill-restart pytest pattern at
-    tests/test_streaming_restart.py).  At 100 TB: per-batch work is
+    stream_corpus_ingest argument).  State is a ``_fold_feed``
+    snapshot of ≤ |types|×|hours| rows.  At 100 TB: per-batch work is
     proportional to the batch, the merge touches KBs, and every
     coarser rollup (day/week/dashboards) reads this state — raw
     events are scanned exactly once, by the ingest itself.
     """
-    import os as _os
 
-    from tweetdb_spark import scratch
+    def step(bdf, prev):
+        part = bdf.groupBy(
+            F.date_trunc("hour", "ts").alias("bucket_start"), "event_type"
+        ).agg(
+            F.count("*").alias("cnt"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+        )
+        return (
+            _with_prev(part, prev)
+            .groupBy("bucket_start", "event_type")
+            .agg(F.sum("cnt").alias("cnt"), F.sum("sum_cents").alias("sum_cents"))
+        )
 
-    root = scratch.fresh_dir("tweetdb_rollupingest")
-    ckpt = scratch.fresh_dir("tweetdb_rollupingestchk")
-    feed_dir = _os.path.join(root, "feed")
     ev = t["events"].select("ts", "event_type", "value")
-    ev.repartition(4).write.mode("overwrite").parquet(feed_dir)
-
-    state = {"cur": None, "n": 0, "applied": set()}
-
-    def apply_batch(bdf, batch_id):
-        if batch_id in state["applied"]:  # replay after restart: no-op
-            return
-        part = (
-            bdf.groupBy(
-                F.date_trunc("hour", "ts").alias("bucket_start"), "event_type"
-            )
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias(
-                    "sum_cents"
-                ),
-            )
-        )
-        if state["cur"] is not None:
-            part = part.unionByName(bdf.sparkSession.read.parquet(state["cur"]))
-        merged = part.groupBy("bucket_start", "event_type").agg(
-            F.sum("cnt").alias("cnt"), F.sum("sum_cents").alias("sum_cents")
-        )
-        nxt = _os.path.join(root, f"v{state['n'] + 1}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
-        state["n"] += 1
-        state["applied"].add(batch_id)
-
-    feed = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(state["cur"])
+    return _fold_feed(spark, "tweetdb_rollupingest", ev, step)
 
 
 @query(
@@ -1334,53 +1240,23 @@ def stream_topk_windowed(spark, t):
     complete-mode rewrites of every window per trigger.  This is how
     leaderboards actually run at 100 TB: counters in the streaming
     state store, top-k on read (or per trigger over changed windows
-    only).  COW state + replayed-batch skip, as in
+    only).  State is a ``_fold_feed`` snapshot chain, as in
     stream_rollup_ingest; deterministic ties by user_id.
     """
-    import os as _os
 
-    from tweetdb_spark import scratch
-
-    root = scratch.fresh_dir("tweetdb_topkingest")
-    ckpt = scratch.fresh_dir("tweetdb_topkingestchk")
-    feed_dir = _os.path.join(root, "feed")
-    ev = t["events"].select("ts", "user_id")
-    ev.repartition(4).write.mode("overwrite").parquet(feed_dir)
-
-    state = {"cur": None, "n": 0, "applied": set()}
-
-    def apply_batch(bdf, batch_id):
-        if batch_id in state["applied"]:
-            return
+    def step(bdf, prev):
         part = bdf.groupBy(
             F.date_trunc("day", "ts").alias("day"), "user_id"
         ).agg(F.count("*").alias("cnt"))
-        if state["cur"] is not None:
-            part = part.unionByName(bdf.sparkSession.read.parquet(state["cur"]))
-        merged = part.groupBy("day", "user_id").agg(
-            F.sum("cnt").alias("cnt")
+        return (
+            _with_prev(part, prev)
+            .groupBy("day", "user_id")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        nxt = _os.path.join(root, f"v{state['n'] + 1}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["cur"] = nxt
-        state["n"] += 1
-        state["applied"].add(batch_id)
 
-    feed = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
+    st = _fold_feed(
+        spark, "tweetdb_topkingest", t["events"].select("ts", "user_id"), step
     )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql.window import Window
-
-    st = spark.read.parquet(state["cur"])
     w = Window.partitionBy("day").orderBy(F.col("cnt").desc(), "user_id")
     return (
         st.withColumn("rnk", F.row_number().over(w))
@@ -1434,71 +1310,27 @@ def stream_cdc_delete_apply(spark, t):
     (Debezium → Delta/Iceberg MERGE WHEN MATCHED DELETE) documents,
     here made explicit in a COW snapshot chain.
     """
-    import os
-
-    from pyspark.sql.window import Window
-
-    from tweetdb_spark import scratch
-
-    root = scratch.fresh_dir("tweetdb_cdcdel")
-    ckpt = scratch.fresh_dir("tweetdb_cdcdelchk")
-    base_dir = os.path.join(root, "v0")
-    feed_dir = os.path.join(root, "feed")
+    deleted = F.col("o_orderkey") % 5 == 0
+    changes = (
+        t["orders"]
+        .where(F.col("o_orderkey") % 3 == 0)
+        .select(
+            "o_orderkey",
+            F.when(deleted, "D").otherwise("U").alias("op"),
+            F.when(deleted, F.col("o_totalprice"))
+            .otherwise(F.floor(F.col("o_totalprice") * 1.1 * 100 + 0.5) / 100)
+            .alias("o_totalprice"),
+            F.lit(2).alias("version"),
+        )
+    )
     base = t["orders"].select(
         "o_orderkey",
         F.lit("U").alias("op"),
         "o_totalprice",
         F.lit(1).alias("version"),
     )
-    base.write.mode("overwrite").parquet(base_dir)
-    (
-        t["orders"]
-        .where(F.col("o_orderkey") % 3 == 0)
-        .select(
-            "o_orderkey",
-            F.when(F.col("o_orderkey") % 5 == 0, "D").otherwise("U").alias("op"),
-            F.when(
-                F.col("o_orderkey") % 5 == 0, F.col("o_totalprice")
-            ).otherwise(
-                F.floor(F.col("o_totalprice") * 1.1 * 100 + 0.5) / 100
-            ).alias("o_totalprice"),
-            F.lit(2).alias("version"),
-        )
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(feed_dir)
-    )
-    state = {"cur": base_dir, "n": 0}
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("version").desc())
-
-    def apply_batch(bdf, batch_id):
-        cur = bdf.sparkSession.read.parquet(state["cur"])
-        nxt = os.path.join(root, f"v{state['n'] + 1}")
-        (
-            cur.unionByName(bdf)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-            .write.mode("overwrite")
-            .parquet(nxt)
-        )
-        state["cur"] = nxt
-        state["n"] += 1
-
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = (
-        feed.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(state["cur"])
+        _fold_feed(spark, "tweetdb_cdcdel", changes, _latest_version_wins, base)
         .where(F.col("op") != "D")
         .select("o_orderkey", "o_totalprice", "version")
     )

@@ -24,6 +24,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -300,9 +301,36 @@ class _stream_shuffle_partitions:
         return False
 
 
+def drain(writer: DataStreamWriter, all_available: bool = False) -> StreamingQuery:
+    """Run a configured ``writeStream`` to completion; return the
+    terminated query (its ``recentProgress`` is the run's record).
+
+    The one place a streaming key's run is decided: a pid-tagged
+    scratch checkpoint (the next drain in this process reaps it; no
+    caller reads a checkpoint after its drain returns), the RocksDB
+    state store, the scoped shuffle-partition count, and the trigger.
+    Default: availableNow — everything available at start, in
+    micro-batches, then stop.  ``all_available``: default trigger +
+    processAllAvailable, which keeps firing while the source reports
+    new offsets (for a source whose availability advances over time).
+    """
+    spark = writer._spark
+    configure_state_store(spark)
+    writer = writer.option("checkpointLocation", scratch.fresh_dir("tweetdb_ckpt"))
+    with _stream_shuffle_partitions(spark):
+        if all_available:
+            q = writer.start()
+            q.processAllAvailable()
+            q.stop()
+        else:
+            q = writer.trigger(availableNow=True).start()
+            q.awaitTermination()
+    return q
+
+
 def run_to_parquet(df: DataFrame) -> DataFrame:
-    """Drain an append-mode streaming frame through a checkpointed
-    parquet sink and return the schema'd read-back.
+    """Drain an append-mode streaming frame through a parquet sink and
+    return the schema'd read-back.
 
     For FACT-SIZED streaming output (one row per event: the raw
     ingest feed, per-event dedup/admission verdicts, stream joins):
@@ -314,56 +342,25 @@ def run_to_parquet(df: DataFrame) -> DataFrame:
     read-back makes a zero-row sink dir readable (only
     _spark_metadata present).
     """
-    configure_state_store(df.sparkSession)
     out = scratch.fresh_dir("tweetdb_fsink")
-    ckpt = scratch.fresh_dir("tweetdb_fschk")
-    with _stream_shuffle_partitions(df.sparkSession):
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(df.writeStream.format("parquet").option("path", out))
     return df.sparkSession.read.schema(df.schema).parquet(out)
 
 
 def run_to_memory(
-    df: DataFrame, mode: str = "append", drain: str = "available_now"
+    df: DataFrame, mode: str = "append", all_available: bool = False
 ) -> DataFrame:
-    """Run a streaming frame to completion into an in-memory table.
-
-    drain="available_now": availableNow trigger — processes everything
-    available at query start in micro-batches, then stops.
-    drain="all_available": default trigger + processAllAvailable —
-    keeps firing micro-batches while the source reports new offsets
-    (needed when the source's availability itself advances over time).
-    Both run the real IncrementalExecution / state-store / watermark
-    machinery; returns the sink table as a DataFrame.
+    """Run a streaming frame to completion (:func:`drain`) into an
+    in-memory table and return the table as a DataFrame.
 
     Lifetime contract: each call registers a uniquely-named in-memory
-    table (holding the result for the session's lifetime) and a
-    pid-tagged scratch checkpoint dir; the next call in the same
-    process reaps the previous dir (the query has terminated by then),
-    so at most one is left per process.  Callers that loop many streams
-    in one long session should dropTempView when done.
+    table, holding the result for the session's lifetime.  Callers
+    that loop many streams in one long session should dropTempView
+    when done.
     """
-    configure_state_store(df.sparkSession)
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = scratch.fresh_dir("tweetdb_ckpt_mem")
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
+    drain(
+        df.writeStream.format("memory").queryName(name).outputMode(mode),
+        all_available,
     )
-    with _stream_shuffle_partitions(df.sparkSession):
-        if drain == "available_now":
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-        else:
-            q = writer.start()
-            q.processAllAvailable()
-            q.stop()
     return df.sparkSession.table(name)
