@@ -50,8 +50,8 @@ def _patch_edge_catalog(spark, mode: str) -> None:
     # the staged-events dir is fingerprinted on the SOURCE fixture;
     # edge catalogs must stage separately from (and never reuse) the
     # clean vintage of the same sf_dir
-    orig_fp = ssrc._fixture_fingerprint
-    ssrc._fixture_fingerprint = lambda d: f"{orig_fp(d)}:edge={mode}"
+    orig_staging = ssrc._staging
+    ssrc._staging = lambda d, n, kind: orig_staging(d, n, f"{kind}_edge_{mode}")
 
 
 @pytest.fixture(scope="session")
@@ -103,3 +103,14 @@ def forced_gate_forms(registry, spark, monkeypatch, key):
         rows.append(Counter(map(tuple, df.collect())))
     assert plans[0] != plans[1], f"{key}: forcing the size gate left the plan unchanged"
     return rows
+
+
+def sf_tables(spark, sf_dir=SF_DIR):
+    """What a registered operator receives: the loaded tables plus the
+    sf_dir they came from (what the ``ensure_*`` functions take)."""
+    from tweetdb_spark.catalog import load_tables
+    from tweetdb_spark.registry import Tables
+
+    t = Tables(load_tables(spark, sf_dir))
+    t.sf_dir = sf_dir
+    return t

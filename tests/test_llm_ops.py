@@ -54,16 +54,17 @@ def test_ann_lsh_probe_prunes_partitions(q):
     assert "j#" in frag and "band#" in frag, plan
 
 
-def test_ann_lsh_index_amortized(q):
+def test_ann_lsh_index_amortized(q, spark):
     """Repeat LSH queries must reuse the persisted band-partitioned
     index, not rewrite it (mtime-stable across warm calls; shared by
     multiprobe)."""
     import os
 
-    from tweetdb_spark.llm import similarity as S
+    from tests.conftest import sf_tables
+    from tweetdb_spark.llm.similarity import ensure_lsh_index
 
     q("sim_ann_lsh").collect()  # cold call builds + caches
-    path = next(iter(S._LSH_CACHE.values()))
+    path = ensure_lsh_index(spark, sf_tables(spark))
     mtime = os.path.getmtime(path)
     assert len(q("sim_ann_lsh").collect()) == 10
     assert len(q("sim_ann_multiprobe").collect()) == 10

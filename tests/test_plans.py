@@ -142,34 +142,43 @@ def test_subquery_in_decorrelates_to_semi_join(q):
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
-def _bucketed_join(q, spark):
+def _bucketed_join(spark):
+    """(bucketed join, plain join) of orders and lineitem on orderkey;
+    the bucketed side reads the tables the engine itself writes."""
     from pyspark.sql import functions as F
 
-    # run the registered op once so the bucketed tables exist
-    q("join_bucketed_colocated")
-    from tweetdb_spark.operators.physical import bucketed_table_names
+    from tests.conftest import sf_tables
+    from tweetdb_spark.operators.physical import ensure_bucketed_tables
 
-    o_tbl, l_tbl = bucketed_table_names(spark)
-    return spark.table(o_tbl).join(
-        spark.table(l_tbl), F.col("o_orderkey") == F.col("l_orderkey")
+    t = sf_tables(spark)
+    o_tbl, l_tbl = ensure_bucketed_tables(spark, t)
+    on = F.col("o_orderkey") == F.col("l_orderkey")
+    return (
+        spark.table(o_tbl).join(spark.table(l_tbl), on),
+        t["orders"].join(t["lineitem"], on),
     )
 
 
-def test_join_bucketed_colocated_smj_has_no_exchange(q, registry, spark):
+def test_join_bucketed_colocated_smj_has_no_exchange(registry, spark):
     # Force the big-big path bucketing exists for: with broadcast off,
     # the co-located SortMergeJoin must need NO Exchange of any kind —
-    # both sides' bucket layout already satisfies the join distribution.
+    # both sides' bucket layout already satisfies the join distribution
+    # — and must return exactly the plain join's rows.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = _plan(_bucketed_join(q, spark))
+        bucketed, plain = _bucketed_join(spark)
+        plan = _plan(bucketed)
+        n_bucketed = bucketed.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan, plan
     assert "Exchange" not in plan, plan
+    assert "Bucketed: true" in plan, plan
+    assert n_bucketed == plain.count()
 
 
-def test_join_bucketed_colocated_never_shuffles(q, registry, spark):
+def test_join_bucketed_colocated_never_shuffles(registry, spark):
     # Default settings: Spark may pick BroadcastHashJoin at test scale
     # (orders side is tiny) — that's fine; what bucketing must guarantee
     # is the absence of a *shuffle* exchange on the join keys.  NOTE:
@@ -177,7 +186,7 @@ def test_join_bucketed_colocated_never_shuffles(q, registry, spark):
     # "Arguments: hashpartitioning(key#id, n)" line — the two-word
     # literal "Exchange hashpartitioning" can never occur there, so the
     # assertion must target the Arguments rendering of the join keys.
-    plan = _plan(_bucketed_join(q, spark))
+    plan = _plan(_bucketed_join(spark)[0])
     assert "hashpartitioning(o_orderkey" not in plan, plan
     assert "hashpartitioning(l_orderkey" not in plan, plan
 

@@ -1,8 +1,9 @@
 """Scale-pattern evidence tests (SCALE.md claims, executable).
 
-These pin the *mechanisms* the 100 TB design relies on: bucketed
-tables join without an exchange, the salted join matches the plain
-join, AQE coalesces shuffle partitions.
+These pin the *mechanisms* the 100 TB design relies on: the salted
+join matches the plain join, AQE coalesces shuffle partitions.  The
+bucketed join's no-exchange check lives in tests/test_plans.py, on the
+tables the engine itself writes.
 """
 
 from __future__ import annotations
@@ -46,64 +47,6 @@ def test_salted_join_equals_plain_join(registry, spark):
         )
     )
     assert salted == plain
-
-
-def test_bucketed_join_has_no_shuffle(spark, tables):
-    """Co-bucketed fact tables must SortMergeJoin without any Exchange
-    — the write-time investment that eliminates per-query shuffles on
-    a 100 TB store."""
-    # spark.sql.warehouse.dir is static — bucketed tables land in the
-    # default ./spark-warehouse (gitignored).  The in-memory catalog
-    # forgets tables across sessions but leaves their directories, so
-    # clear both the catalog entry and any orphaned location.
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
-    for tbl in ("b_orders", "b_lineitem"):
-        shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    (
-        tables["orders"]
-        .write.bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey")
-        .mode("overwrite")
-        .saveAsTable("b_orders")
-    )
-    (
-        tables["lineitem"]
-        .write.bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey")
-        .mode("overwrite")
-        .saveAsTable("b_lineitem")
-    )
-    # at fixture size the planner would broadcast (hiding the bucket
-    # path); disable auto-broadcast to exercise what a 100 TB
-    # fact-fact join would plan
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("b_orders").join(
-            spark.table("b_lineitem"),
-            spark.table("b_orders").o_orderkey
-            == spark.table("b_lineitem").l_orderkey,
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join should not shuffle"
-        assert "Bucketed: true" in plan
-        n_bucketed = joined.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    n_plain = (
-        tables["orders"]
-        .join(
-            tables["lineitem"],
-            tables["orders"].o_orderkey == tables["lineitem"].l_orderkey,
-        )
-        .count()
-    )
-    assert n_bucketed == n_plain
 
 
 def test_dynamic_partition_pruning(spark, tables):

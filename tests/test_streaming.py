@@ -192,9 +192,9 @@ def test_sink_jdbc_derby_upsert_redelivery_idempotent(spark):
 
     import pytest
 
-    from tweetdb_spark.streaming.queries import _derby_available
+    from tweetdb_spark.session import DERBY_DRIVER, jvm_has_class
 
-    if not _derby_available(spark):
+    if not jvm_has_class(spark, DERBY_DRIVER):
         pytest.skip("no embedded Derby driver on the classpath")
 
     jvm = spark._jvm
@@ -657,18 +657,14 @@ def test_stream_vector_ingest_matches_batch_index(registry, spark):
     assignment (the persisted index) vector-for-vector: online index
     maintenance may never diverge from what a refit would produce for
     the same centroids."""
-    from tests.conftest import SF_DIR
-    from tweetdb_spark.catalog import load_tables
+    from tests.conftest import SF_DIR, sf_tables
     from tweetdb_spark.llm.similarity import ensure_ivf_index
-    from tweetdb_spark.registry import Tables
 
     streamed = {
         r.vec_id: r.cell
         for r in registry.QUERIES["stream_vector_ingest"](spark, SF_DIR).collect()
     }
-    t = Tables(load_tables(spark, SF_DIR))
-    t.sf_dir = SF_DIR
-    idx_path, _ = ensure_ivf_index(spark, t)
+    idx_path, _ = ensure_ivf_index(spark, sf_tables(spark))
     batch = {
         r.vec_id: r.cell for r in spark.read.parquet(idx_path).collect()
     }

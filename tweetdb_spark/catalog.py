@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tweetdb_spark import schemas
+from tweetdb_spark import schemas, scratch
 from tweetdb_spark.session import configure
 
 EVENTS_TS_SHIM = "ts div 1000"  # int64 ns -> int64 µs, exact, truncating
@@ -126,9 +126,14 @@ def _ts_from_long(col: str, unit: str):
     raise TypeError(f"unsupported epoch unit {unit!r} for column {col!r}")
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet file or dir that holds fixture table ``name``."""
+    return f"{sf_dir}/{name}.parquet"
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalized to its declared schema."""
-    path = f"{sf_dir}/{name}.parquet"
+    path = table_path(sf_dir, name)
     df = spark.read.parquet(path)
     declared = schemas.TABLE_SCHEMAS[name]
     loaded = {f.name: f.dataType for f in df.schema.fields}
@@ -169,50 +174,35 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.select(exprs)
 
 
-# (session-id, sf_dir) -> (session-ref, full table dict); plan
-# construction is pure metadata, so reuse across query calls saves ~10
-# py4j/catalog round trips per invocation (material in per-query
-# benchmarks).  The session object itself is kept in the value so its
-# id() can never be recycled for a different live session while the
-# cache entry exists.  ONLY full loads are cached — caching a subset
-# would poison later full-load calls (a names=['events'] staging call
-# must not leave a 1-table dict behind for registry queries).
-_CACHE: dict[tuple[int, str], tuple[SparkSession, dict[str, DataFrame]]] = {}
-# session-id -> sf_dir whose views are currently registered (temp
-# views are session-global, so a session alternating between sf_dirs
-# must re-register or spark.sql() queries would read stale views).
-_VIEWS_FOR: dict[int, str] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: list[str] | None = None) -> dict[str, DataFrame]:
-    """Load fixture tables and register each as a temp view.
+    """Load fixture tables (logical plans only, no IO until an action)
+    under the engine's runtime confs, so that an externally-created
+    SparkSession (the driver's) can read events.
 
-    Cheap: builds logical plans only (no IO until an action), and
-    cached per (session, sf_dir).  Also defensively applies the
-    engine's runtime confs so that an externally-created SparkSession
-    (the driver's) can read events.
+    A full load is a :func:`scratch.derived` artifact of the table files
+    and registers every table as a temp view; a partial load (``names``)
+    is read fresh and neither caches nor registers anything, so a
+    throwaway child session is never pinned.
     """
-    sid = id(spark._jsparkSession)
-    entry = _CACHE.get((sid, sf_dir))
-    if entry is not None:
-        cached = entry[1]
-        if _VIEWS_FOR.get(sid) != sf_dir:
-            for name, df in cached.items():
-                df.createOrReplaceTempView(name)
-            _VIEWS_FOR[sid] = sf_dir
-        if names is None:
-            return cached
-        return {n: cached[n] for n in names}
-    configure(spark)
-    # nanosAsLong is only needed for legacy TIMESTAMP(NANOS) fixtures;
-    # configure() sets it best-effort, and read_table adapts either way.
-    out: dict[str, DataFrame] = {}
-    for name in names or schemas.TABLE_NAMES:
-        df = read_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    if names is None:  # cache only complete loads
-        _CACHE[(sid, sf_dir)] = (spark, out)
-        _VIEWS_FOR[sid] = sf_dir
-    return out
+    def read(names):
+        configure(spark)
+        return {n: read_table(spark, sf_dir, n) for n in names}
+
+    if names is not None:
+        return read(names)
+    tables = scratch.derived(
+        spark,
+        "tables",
+        [table_path(sf_dir, n) for n in schemas.TABLE_NAMES],
+        lambda _out: read(schemas.TABLE_NAMES),
+    )
+    # Temp views are session state: re-point them when this session's
+    # were registered from another table dict (another sf_dir, or a
+    # rebuild).  ``shown`` has no sources: one dict per session.
+    shown = scratch.derived(spark, "views", (), lambda _out: {})
+    if shown.get("tables") is not tables:
+        for name, df in tables.items():
+            df.createOrReplaceTempView(name)
+        shown["tables"] = tables
+    return tables

@@ -15,8 +15,6 @@ reduce the scan to a candidate slice and re-rank exactly.
 
 from __future__ import annotations
 
-import os
-
 # module-level (not function-local) so pandas-UDF type hints — which are
 # strings under `from __future__ import annotations` and get resolved
 # against MODULE globals by pyspark — can name pd.Series/pd.DataFrame
@@ -26,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tweetdb_spark import scratch
+from tweetdb_spark.catalog import table_path
 from tweetdb_spark.registry import query
 
 
@@ -227,14 +226,6 @@ def sim_pairwise_label(spark, t):
     )
 
 
-# IVF index cache: (session-token, sf_dir) -> (assignments path,
-# centroid path).  Mirrors operators/physical.ensure_bucketed_tables:
-# the expensive layout step (KMeans fit + partitioned write) runs ONCE
-# per (session, corpus) and every query after that only reads.  The
-# scratch.session_token (not a raw id()) keys the cache AND namespaces
-# the dir prefixes, so two live sessions over the same corpus can
-# never reap or repoint each other's index dirs.
-_IVF_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 _IVF_K = 16
 
 
@@ -246,26 +237,21 @@ def _valid_embeddings(df):
 
 
 def ensure_ivf_index(spark, t) -> tuple[str, str]:
-    """Build (once per session+sf_dir) the IVF index: vectors written
-    partitioned by ``cell`` + a 16-row centroid table.
+    """Build (once per session and source content) the IVF index:
+    vectors written partitioned by ``cell`` + a 16-row centroid table.
 
     This is the ingest-time step of an IVF deployment: at 100 TB the
     partitioned write IS the vector table's physical layout, paid once,
     and the centroid table is tiny reference data.  Returns
     (assignments_path, centroids_path).
     """
-    tok = scratch.session_token(spark)
-    key = (tok, t.sf_dir)
-    entry = _IVF_CACHE.get(key)
-    # both halves must survive: losing only the centroid dir must
-    # trigger a rebuild, not a read failure at probe time
-    if (
-        entry is not None
-        and os.path.exists(entry[0])
-        and os.path.exists(entry[1])
-    ):
-        return entry
+    return scratch.derived(
+        spark, "ivf", [table_path(t.sf_dir, "embeddings")],
+        lambda out: _build_ivf_index(spark, t, out),
+    )
 
+
+def _build_ivf_index(spark, t, out) -> tuple[str, str]:
     import numpy as np
 
     # degenerate-vector ingest filter (r12, rows-only edge survey): a
@@ -328,22 +314,15 @@ def ensure_ivf_index(spark, t) -> tuple[str, str]:
     assigned = e.select("vec_id", "label", "embedding").mapInPandas(
         _assign, "vec_id bigint, label int, embedding array<float>, cell int"
     )
-    # session+sf-tagged prefix: rebuilding sf_dir A must never reap sf
-    # dir B's live index, nor another live session's index for the SAME
-    # sf_dir (fresh_dir reaps same-prefix dirs of this process)
-    tag = f"{tok}_" + t.sf_dir.strip("/").replace("/", "_")
-    out = scratch.fresh_dir(f"tweetdb_ivf_{tag}")
-    (
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(out)
-    )
-    cents = scratch.fresh_dir(f"tweetdb_ivfc_{tag}")
+    idx = out("tweetdb_ivf")
+    assigned.write.mode("overwrite").partitionBy("cell").parquet(idx)
+    cents = out("tweetdb_ivfc")
     centers_df = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         "cell int, center array<double>",
     )
     centers_df.write.mode("overwrite").parquet(cents)
-    _IVF_CACHE[key] = (out, cents)
-    return out, cents
+    return idx, cents
 
 
 @query("sim_ann_ivf", oracle=None, eager=True)  # approx (probes 8/16 cells) → rows-only
@@ -353,9 +332,9 @@ def sim_ann_ivf(spark, t):
     KMeans (k=16, fixed seed) partitions the vector space into cells;
     the query probes only its 8 nearest centroids and re-ranks exactly
     within them.  The fit + cell-partitioned write are AMORTIZED out of
-    the query path via :func:`ensure_ivf_index` (once per session+
-    corpus, like the bucketed join tables); the query itself only (1)
-    picks probe cells from the 16-row persisted centroid table
+    the query path via :func:`ensure_ivf_index` (once per session and
+    source content, like the bucketed join tables); the query itself
+    only (1) picks probe cells from the 16-row persisted centroid table
     (driver-side argmin — the model is tiny reference data), and (2)
     scans the probed partitions, pruned at the parquet level
     (PartitionFilters on ``cell``, asserted in tests).  Recall vs the
@@ -721,30 +700,29 @@ def _rh_signature_expr(vec: str = "embedding") -> str:
     )
 
 
-# LSH index cache: (session-token, sf_dir) -> banded-signature table
-# path, written partitioned by (j, band) — same amortization and
-# session-isolation contract as ensure_ivf_index.  Each vector appears
-# once per band (8×): the standard multi-band redundancy an LSH index
-# stores in exchange for probe-time partition pruning (at extreme
-# scale, store ids only and join the vectors back from the base table).
-_LSH_CACHE: dict[tuple[str, str], str] = {}
 _LSH_BANDS = 8
 
 
 def ensure_lsh_index(spark, t) -> str:
-    """Build (once per session+sf_dir) the band-partitioned LSH index.
+    """Build (once per session and source content) the band-partitioned
+    LSH index and return its path.
 
     The ingest-time step of an LSH deployment: signatures are computed
     in one narrow pass and the table is written partitioned by
     ``(j, band)`` — 8×16 = 128 physical partitions — so a probe is a
     parquet partition-pruned read of the 8 (single-probe) or 40
-    (multi-probe) buckets it names, never a scan.
+    (multi-probe) buckets it names, never a scan.  Each vector appears
+    once per band (8×): the standard multi-band redundancy an LSH index
+    stores in exchange for probe-time partition pruning (at extreme
+    scale, store ids only and join the vectors back from the base table).
     """
-    tok = scratch.session_token(spark)
-    key = (tok, t.sf_dir)
-    cached = _LSH_CACHE.get(key)
-    if cached is not None and os.path.exists(cached):
-        return cached
+    return scratch.derived(
+        spark, "lsh", [table_path(t.sf_dir, "embeddings")],
+        lambda out: _build_lsh_index(t, out),
+    )
+
+
+def _build_lsh_index(t, out) -> str:
     sig = F.expr(_rh_signature_expr())
     # same degenerate-vector ingest filter as the IVF tier: a NULL/
     # empty embedding signs to a NULL signature, which would land in a
@@ -764,11 +742,9 @@ def ensure_lsh_index(spark, t) -> str:
             )
         ).alias("b"),
     ).select("vec_id", "label", "embedding", "norm", "b.j", "b.band")
-    tag = f"{tok}_" + t.sf_dir.strip("/").replace("/", "_")
-    out = scratch.fresh_dir(f"tweetdb_lsh_{tag}")
-    bands.write.mode("overwrite").partitionBy("j", "band").parquet(out)
-    _LSH_CACHE[key] = out
-    return out
+    path = out("tweetdb_lsh")
+    bands.write.mode("overwrite").partitionBy("j", "band").parquet(path)
+    return path
 
 
 def _lsh_query_row(t):
@@ -896,7 +872,6 @@ def sim_ann_multiprobe(spark, t):
 
 _PQ_M = 8      # subspaces (d=64 → 8 dims each)
 _PQ_KSUB = 16  # centroids per subspace → 4-bit codes
-_PQ_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def _train_pq(X, m: int = _PQ_M, ksub: int = _PQ_KSUB, iters: int = 15):
@@ -926,8 +901,8 @@ def _train_pq(X, m: int = _PQ_M, ksub: int = _PQ_KSUB, iters: int = 15):
 
 
 def ensure_pq_index(spark, t) -> tuple[str, str]:
-    """Build (once per session+sf_dir) the IVF-PQ index on top of
-    :func:`ensure_ivf_index`'s cell layout.
+    """Build (once per session and source content) the IVF-PQ index on
+    top of :func:`ensure_ivf_index`'s cell layout.
 
     Returns (codes_path, codebook_path).  The codes table holds
     (vec_id, label, cell, codes array<int>) partitioned by cell; the
@@ -935,17 +910,14 @@ def ensure_pq_index(spark, t) -> tuple[str, str]:
     reference rows, read driver-side at probe time like the IVF
     centroids.
     """
-    import numpy as np
+    return scratch.derived(
+        spark, "pq", [table_path(t.sf_dir, "embeddings")],
+        lambda out: _build_pq_index(spark, t, out),
+    )
 
-    tok = scratch.session_token(spark)
-    key = (tok, t.sf_dir)
-    entry = _PQ_CACHE.get(key)
-    if (
-        entry is not None
-        and os.path.exists(entry[0])
-        and os.path.exists(entry[1])
-    ):
-        return entry
+
+def _build_pq_index(spark, t, out) -> tuple[str, str]:
+    import numpy as np
 
     idx_path, cents_path = ensure_ivf_index(spark, t)
     assigned = spark.read.parquet(idx_path)
@@ -986,8 +958,7 @@ def ensure_pq_index(spark, t) -> tuple[str, str]:
 
     encode = pandas_udf(_encode, "array<int>")
 
-    tag = f"{tok}_" + t.sf_dir.strip("/").replace("/", "_")
-    codes_path = scratch.fresh_dir(f"tweetdb_pq_{tag}")
+    codes_path = out("tweetdb_pq")
     (
         assigned.join(F.broadcast(cents), "cell")
         .withColumn(
@@ -1007,7 +978,7 @@ def ensure_pq_index(spark, t) -> tuple[str, str]:
         .partitionBy("cell")
         .parquet(codes_path)
     )
-    books_path = scratch.fresh_dir(f"tweetdb_pqb_{tag}")
+    books_path = out("tweetdb_pqb")
     spark.createDataFrame(
         [
             (s, k, [float(x) for x in books[s][k]])
@@ -1016,7 +987,6 @@ def ensure_pq_index(spark, t) -> tuple[str, str]:
         ],
         "s int, k int, center array<double>",
     ).write.mode("overwrite").parquet(books_path)
-    _PQ_CACHE[key] = (codes_path, books_path)
     return codes_path, books_path
 
 

@@ -1362,8 +1362,8 @@ def cte_recursive_chain(spark, t):
     # conf + temp-view catalog).
     sess = spark.newSession()
     sess.conf.set("spark.sql.cteRecursionRowLimit", str(200_000_000))
-    # load ONLY orders, and uncached: a partial load skips catalog._CACHE,
-    # so the throwaway child session isn't pinned for the process lifetime
+    # load ONLY orders: a partial load is never cached, so the throwaway
+    # child session isn't pinned for the process lifetime
     orders = load_tables(sess, t.sf_dir, ["orders"])["orders"]
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     succ = orders.select(

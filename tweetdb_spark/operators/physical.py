@@ -27,70 +27,41 @@ import os
 from pyspark.sql import functions as F
 
 from tweetdb_spark import scratch
+from tweetdb_spark.catalog import table_path
 from tweetdb_spark.registry import query
 
 _BUCKETS = 8
 
 
-def bucketed_table_names(spark=None) -> tuple[str, str]:
-    """(orders, lineitem) bucketed-table names for THIS process (and,
-    when a session is given, THIS session).
-
-    Pid-tagged so concurrent processes (pytest + check.py) never
-    overwrite each other's in-flight warehouse dirs; session-tagged so
-    two live sessions in one process never repoint each other's tables
-    (the returned DataFrames read lazily — a rewrite after ensure()
-    returned would corrupt the other session's plan).
-    """
-    tok = f"_{scratch.session_token(spark)}" if spark is not None else ""
-    return (
-        f"tweetdb_bkt_orders_{scratch.TAG}{tok}",
-        f"tweetdb_bkt_lineitem_{scratch.TAG}{tok}",
-    )
-
-
-# (session-token, sf_dir) -> table names already written for that
-# corpus.  The bucketing shuffle is paid once per (session, corpus) —
-# the whole point of the layout — so repeat queries must not rewrite
-# the tables.
-_BUCKETED_FOR: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def ensure_bucketed_tables(spark, t) -> tuple[str, str]:
-    """Write orders+lineitem bucketed by orderkey into the session
-    warehouse (once per session+corpus) and return the table names."""
-    cache_key = (scratch.session_token(spark), getattr(t, "sf_dir", ""))
-    cached = _BUCKETED_FOR.get(cache_key)
-    if cached is not None and all(
-        spark.catalog.tableExists(n) for n in cached
-    ):
-        return cached
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "").removeprefix(
-        "file:"
+    """Write orders+lineitem bucketed by orderkey as external tables
+    (once per session and source content) and return the table names.
+
+    The tables live in scratch dirs, not the session warehouse, so the
+    one cache owns their lifetime: a rebuild drops the stale tables and
+    their dirs.
+    """
+    def build(out):
+        names = []
+        for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+            path = out(f"tweetdb_bkt_{name}", table=True)
+            names.append(os.path.basename(path))
+            (
+                t[name].write.mode("overwrite")
+                .format("parquet")
+                .option("path", path)
+                .bucketBy(_BUCKETS, key)
+                .sortBy(key)
+                .saveAsTable(names[-1])
+            )
+        return tuple(names)
+
+    return scratch.derived(
+        spark,
+        "bucketed",
+        [table_path(t.sf_dir, n) for n in ("orders", "lineitem")],
+        build,
     )
-    if warehouse:
-        # dead processes leave pid-tagged dirs behind; reap like tempdirs
-        scratch.reap_stale(warehouse, "tweetdb_bkt_orders")
-        scratch.reap_stale(warehouse, "tweetdb_bkt_lineitem")
-    o_tbl, l_tbl = bucketed_table_names(spark)
-    for name, df, key in (
-        (o_tbl, t["orders"], "o_orderkey"),
-        (l_tbl, t["lineitem"], "l_orderkey"),
-    ):
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(_BUCKETS, key)
-            .sortBy(key)
-            .saveAsTable(name)
-        )
-    # The table NAMES are pid-scoped but not sf-scoped: rewriting for a
-    # new sf_dir repoints them, so cache entries from other sf_dirs are
-    # now stale and must not short-circuit a future rebuild.
-    for k in [k for k, v in _BUCKETED_FOR.items() if v == (o_tbl, l_tbl)]:
-        del _BUCKETED_FOR[k]
-    _BUCKETED_FOR[cache_key] = (o_tbl, l_tbl)
-    return o_tbl, l_tbl
 
 
 @query(

@@ -387,7 +387,7 @@ def scan_merge_schema(spark, t):
     """
     # pid-tagged scratch naming (not a bare uuid): purely intermediate
     # data, so prior runs must be reapable — a uuid dir with no pid tag
-    # is invisible to reap_stale and accumulates forever
+    # is invisible to fresh_dir's reaping and accumulates forever
     out = scratch.fresh_dir("tweetdb_evolve")
     old = t["orders"].where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -783,9 +783,9 @@ def ingest_jdbc(spark, t):
     (type mapping included, money as integer cents) is value-hash-
     checked.  Skipped-registration if the driver jar is absent.
     """
-    from tweetdb_spark.streaming.queries import _derby_available
+    from tweetdb_spark.session import DERBY_DRIVER, jvm_has_class
 
-    if not _derby_available(spark):  # pragma: no cover - jar ships with pyspark
+    if not jvm_has_class(spark, DERBY_DRIVER):  # pragma: no cover - jar ships with pyspark
         raise RuntimeError("Derby JDBC driver not on classpath")
 
     db = scratch.fresh_dir("tweetdb_jdbcsrc") + "/db"

@@ -85,6 +85,24 @@ def _pin_derby_home(spark: SparkSession) -> None:
         pass  # no JVM gateway (e.g. Spark Connect) — sink gates handle it
 
 
+# PySpark ships the derby/derbytools jars for its Hive metastore.
+DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+# (id of the JVM view, class name) -> whether the class loads
+_JVM_CLASSES: dict[tuple[int, str], bool] = {}
+
+
+def jvm_has_class(spark: SparkSession, cls: str) -> bool:
+    """Whether ``cls`` is on the session JVM's classpath, memoized per
+    JVM: the jar-presence gate for optional providers and drivers."""
+    key = (id(spark._jvm), cls)
+    if key not in _JVM_CLASSES:
+        try:
+            _JVM_CLASSES[key] = spark._jvm.java.lang.Class.forName(cls) is not None
+        except Exception:
+            _JVM_CLASSES[key] = False
+    return _JVM_CLASSES[key]
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (idempotent)."""
     _pin_derby_home(spark)

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from tweetdb_spark import scratch
 from tweetdb_spark.registry import query
+from tweetdb_spark.session import DERBY_DRIVER, jvm_has_class
 from tweetdb_spark.streaming.sources import (
     drain,
     read_events_stream,
@@ -563,25 +564,6 @@ def join_stream_stream_outer(spark, t):
     return run_to_parquet(joined)
 
 
-_DERBY_CHECKED: dict[int, bool] = {}  # per-JVM memo, like the RocksDB gate
-
-
-def _derby_available(spark) -> bool:
-    """True when the embedded Derby JDBC driver is on the classpath
-    (PySpark ships derby/derbytools jars for its Hive metastore).
-    Same jar-presence gating pattern as RocksDB and protobuf."""
-    jvm_key = id(spark._jvm)
-    present = _DERBY_CHECKED.get(jvm_key)
-    if present is None:
-        try:
-            spark._jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
-            present = True
-        except Exception:
-            present = False
-        _DERBY_CHECKED[jvm_key] = present
-    return present
-
-
 def _purchase_totals_stream(spark, t):
     """The shared upstream of both sink branches: per-user purchase
     totals over the staged event stream, complete output mode."""
@@ -626,7 +608,7 @@ def sink_jdbc_batch(spark, t):
     Both branches run the same upstream aggregation and return the
     same schema; the idempotence pytest is branch-agnostic.
     """
-    if _derby_available(spark):
+    if jvm_has_class(spark, DERBY_DRIVER):
         return _sink_jdbc_derby(spark, t)
     return _sink_jdbc_sqlite(spark, t)
 

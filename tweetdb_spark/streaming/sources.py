@@ -35,7 +35,8 @@ from pyspark.sql.types import (
 )
 
 from tweetdb_spark import scratch
-from tweetdb_spark.catalog import load_tables
+from tweetdb_spark.catalog import load_tables, table_path
+from tweetdb_spark.session import jvm_has_class
 
 # JSON wire schema (ts_us = unix microseconds, exact).
 EVENTS_WIRE = StructType(
@@ -50,51 +51,29 @@ EVENTS_WIRE = StructType(
 )
 
 
-def _fixture_fingerprint(sf_dir: str) -> str:
-    """Identity of the events fixture (mtime+size of every file).
+def _staging(sf_dir: str, name: str, kind: str) -> tuple[str, str | None]:
+    """``(dir, fingerprint)`` that stages fixture table ``name`` for a
+    file-stream source; the fingerprint is None when ``dir`` is already
+    staged (its ``_STAGED`` marker holds it).
 
-    Staged JSON must be invalidated when the fixture is REGENERATED in
-    place — the round-4 incident proved the same path can carry
-    different data across driver rounds, and /tmp outlives them.
-    """
-    path = os.path.join(sf_dir, "events.parquet")
-    parts = (
-        sorted(glob.glob(os.path.join(path, "*"))) if os.path.isdir(path)
-        else [path]
-    )
-    sig = []
-    for p in parts:
-        st = os.stat(p)
-        sig.append(f"{os.path.basename(p)}:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(sig)
-
-
-def stage_events_json(spark: SparkSession, sf_dir: str) -> str:
-    """Export events as day-partitioned JSON files (idempotent per
-    fixture CONTENT, not just per path).
-
-    The staged dir is FINGERPRINT-SUFFIXED: a regenerated fixture
-    stages into a new dir instead of rmtree'ing the old one in place —
-    a concurrent process (pytest + tools/check.py) may still have a
-    running file-stream query over the previous vintage, and deleting
-    its source files mid-query would kill it.  Old vintages are
-    reclaimed lazily (2 h stale), never while plausibly in use.
+    The fingerprint is the size+mtime of every file of the table: the
+    round-4 incident proved the same path can carry different data
+    across driver rounds, and /tmp outlives them.  The dir is
+    FINGERPRINT-SUFFIXED: a regenerated fixture stages into a new dir
+    instead of rmtree'ing the old one in place — a concurrent
+    process (pytest + tools/check.py) may still have a running
+    file-stream query over the previous vintage, and deleting its
+    source files mid-query would kill it.  Other vintages are reaped
+    once 2 h stale (file streams here run seconds), never while
+    plausibly in use.
     """
     import hashlib
 
     tag = sf_dir.strip("/").replace("/", "_")
-    fingerprint = _fixture_fingerprint(sf_dir)
+    fingerprint = repr(scratch.fingerprint([table_path(sf_dir, name)]))
     fp = hashlib.sha256(fingerprint.encode()).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"tweetdb_stream_src_{tag}_{fp}"
-    )
-    marker = os.path.join(out, "_STAGED")
-    # reap other-vintage dirs of this tag that are old enough that no
-    # live query can still be draining them (file streams here run
-    # seconds; 2 h matches scratch._REAP_AGE_S)
-    for stale in glob.glob(
-        os.path.join(tempfile.gettempdir(), f"tweetdb_stream_src_{tag}_*")
-    ):
+    out = os.path.join(tempfile.gettempdir(), f"{kind}_{tag}_{fp}")
+    for stale in glob.glob(os.path.join(tempfile.gettempdir(), f"{kind}_{tag}_*")):
         if stale == out or stale.startswith(f"{out}_staging"):
             continue
         try:
@@ -102,10 +81,21 @@ def stage_events_json(spark: SparkSession, sf_dir: str) -> str:
                 shutil.rmtree(stale, ignore_errors=True)
         except OSError:
             pass
-    if os.path.exists(marker):
-        with open(marker) as fh:
+    try:
+        with open(os.path.join(out, "_STAGED")) as fh:
             if fh.read() == fingerprint:
-                return out
+                return out, None
+    except FileNotFoundError:
+        pass
+    return out, fingerprint
+
+
+def stage_events_json(spark: SparkSession, sf_dir: str) -> str:
+    """Export events as day-partitioned JSON files (idempotent per
+    fixture CONTENT, not just per path; see :func:`_staging`)."""
+    out, fingerprint = _staging(sf_dir, "events", "tweetdb_stream_src")
+    if fingerprint is None:
+        return out
     events = load_tables(spark, sf_dir, ["events"])["events"]
     wire = events.select(
         "event_id",
@@ -156,7 +146,7 @@ def stage_events_json(spark: SparkSession, sf_dir: str) -> str:
                     shutil.copyfileobj(r, w)
         os.utime(dest, (base + i, base + i))
     shutil.rmtree(staging, ignore_errors=True)
-    with open(marker, "w") as fh:
+    with open(os.path.join(out, "_STAGED"), "w") as fh:
         fh.write(fingerprint)
     return out
 
@@ -167,19 +157,9 @@ def stage_embeddings_parquet(spark: SparkSession, sf_dir: str, n_files: int = 5)
     same fingerprint-suffixed idempotence, no time-ordering contract —
     vectors are bucketed by ``vec_id % n_files``).
     """
-    import hashlib
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    fingerprint = _fixture_fingerprint(sf_dir)
-    fp = hashlib.sha256(fingerprint.encode()).hexdigest()[:10]
-    out = os.path.join(
-        tempfile.gettempdir(), f"tweetdb_vec_src_{tag}_{fp}"
-    )
-    marker = os.path.join(out, "_STAGED")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read() == fingerprint:
-                return out
+    out, fingerprint = _staging(sf_dir, "embeddings", "tweetdb_vec_src")
+    if fingerprint is None:
+        return out
     emb = load_tables(spark, sf_dir, ["embeddings"])["embeddings"]
     staging = f"{out}_staging_{os.getpid()}"
     (
@@ -198,7 +178,7 @@ def stage_embeddings_parquet(spark: SparkSession, sf_dir: str, n_files: int = 5)
                 os.path.join(bdir, p), os.path.join(out, f"vec-{b}-{i}.parquet")
             )
     shutil.rmtree(staging, ignore_errors=True)
-    with open(marker, "w") as fh:
+    with open(os.path.join(out, "_STAGED"), "w") as fh:
         fh.write(fingerprint)
     return out
 
@@ -226,7 +206,6 @@ def read_events_stream(
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-_ROCKSDB_CHECKED: dict[int, bool] = {}  # per-JVM memo of class presence
 
 
 def configure_state_store(spark: SparkSession) -> bool:
@@ -239,15 +218,7 @@ def configure_state_store(spark: SparkSession) -> bool:
     so setting it on a live session affects only subsequently started
     streams.  Returns True when RocksDB is active.
     """
-    jvm_key = id(spark._jvm)
-    present = _ROCKSDB_CHECKED.get(jvm_key)
-    if present is None:
-        try:
-            spark._jvm.java.lang.Class.forName(_ROCKSDB_PROVIDER)
-            present = True
-        except Exception:
-            present = False
-        _ROCKSDB_CHECKED[jvm_key] = present
+    present = jvm_has_class(spark, _ROCKSDB_PROVIDER)
     if present:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
