@@ -1,9 +1,9 @@
 """Scale-pattern evidence tests (SCALE.md claims, executable).
 
-These pin the *mechanisms* the 100 TB design relies on: the salted
-join matches the plain join, AQE coalesces shuffle partitions.  The
-bucketed join's no-exchange check lives in tests/test_plans.py, on the
-tables the engine itself writes.
+These pin the *mechanisms* the 100 TB design relies on: bucketed
+tables join without an exchange, the salted join matches the plain
+join, AQE coalesces shuffle partitions.  The same no-exchange check on
+the tables the engine itself writes lives in tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -47,6 +47,52 @@ def test_salted_join_equals_plain_join(registry, spark):
         )
     )
     assert salted == plain
+
+
+def test_bucketed_join_has_no_shuffle(spark, tables, tmp_path):
+    """Co-bucketed fact tables must SortMergeJoin without any Exchange
+    — the write-time investment that eliminates per-query shuffles on
+    a 100 TB store."""
+    # External tables under tmp_path: nothing lands in the warehouse dir,
+    # and the catalog entries are dropped again below.
+    names = {"orders": "b_orders", "lineitem": "b_lineitem"}
+    for src, tbl in names.items():
+        key = f"{src[0]}_orderkey"
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        (
+            tables[src]
+            .write.bucketBy(8, key)
+            .sortBy(key)
+            .option("path", str(tmp_path / tbl))
+            .mode("overwrite")
+            .saveAsTable(tbl)
+        )
+    # at fixture size the planner would broadcast (hiding the bucket
+    # path); disable auto-broadcast to exercise what a 100 TB
+    # fact-fact join would plan
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        o, li = spark.table("b_orders"), spark.table("b_lineitem")
+        joined = o.join(li, o.o_orderkey == li.l_orderkey)
+        plan = _plan(joined)
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan, "bucketed join should not shuffle"
+        assert "Bucketed: true" in plan
+        n_bucketed = joined.count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        for tbl in names.values():
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    n_plain = (
+        tables["orders"]
+        .join(
+            tables["lineitem"],
+            tables["orders"].o_orderkey == tables["lineitem"].l_orderkey,
+        )
+        .count()
+    )
+    assert n_bucketed == n_plain
 
 
 def test_dynamic_partition_pruning(spark, tables):
