@@ -180,3 +180,50 @@ def test_events_funnel_zero_signups_null_rates(null_events, spark):
     n_signup, n_view, n_purchase, view_rate, purchase_rate = rows[0]
     assert n_signup == 0
     assert view_rate is None and purchase_rate is None
+
+
+# events_funnel edges: t1 = first signup; a view counts in (t1, t1+7d],
+# a purchase in (t2, t2+7d]; later steps join on user_id.
+_DAY = 1440
+FUNNEL_EVENTS = [
+    (1, _t(0), None, "signup", None, None),  # NULL-user signup: n_signup only
+    (2, _t(60), None, "view", None, None),  # never joins a NULL user
+    (3, None, 1, "signup", None, None),  # only signup has NULL ts
+    (4, _t(60), 1, "view", None, None),
+    (5, _t(-60), 2, "view", None, None),  # before the signup
+    (6, _t(0), 2, "signup", None, None),
+    (7, _t(0), 2, "view", None, None),  # at exactly t1: out
+    (8, _t(0), 3, "signup", None, None),
+    (9, _t(7 * _DAY), 3, "view", None, None),  # at t1 + 7d: in, t2
+    (10, _t(14 * _DAY) + dt.timedelta(microseconds=1), 3, "purchase", None, None),
+    (11, _t(0), 4, "signup", None, None),  # converts at every step
+    (12, _t(_DAY), 4, "view", None, None),
+    (13, _t(8 * _DAY), 4, "purchase", None, None),  # at t2 + 7d: in
+    (14, _t(0), 5, "signup", None, None),  # t1 is the FIRST signup:
+    (15, _t(3 * _DAY), 5, "signup", None, None),  # 9d after t1, 6d
+    (16, _t(9 * _DAY), 5, "view", None, None),  # after this one: out
+]
+
+
+def test_events_funnel_null_and_boundary_parity(spark, tmp_path):
+    """One user_id pass keeps the oracle's step semantics: a NULL
+    user_id group is a signup that never joins a view; a user whose
+    only signup has a NULL ts is a signup with no t1; views at t1 and
+    before it are out, one at t1 + 7d is in; a purchase 1 µs after
+    t2 + 7d is out."""
+    from tweetdb_spark.operators.events import events_funnel
+
+    path = str(tmp_path / "events.parquet")
+    spark.createDataFrame(
+        FUNNEL_EVENTS,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    fixture = ({"events": spark.read.parquet(path)}, con)
+    rows = _parity("events_funnel", events_funnel, fixture, spark)
+    # signups: NULL user and users 1-5; views: 3 and 4; purchase: 4
+    assert rows == [(6, 2, 1, 0.3333, 0.1667)]

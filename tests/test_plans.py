@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from tests.conftest import SF_DIR
+from tools.plan_audit import broadcasts
 
 
 def _plan(df) -> str:
@@ -51,6 +52,26 @@ def test_join_inner_broadcast_uses_bhj(q):
 def test_join_multiway_broadcasts_dims(q):
     plan = _plan(q("join_multiway"))
     assert plan.count("BroadcastHashJoin") >= 3  # supplier, nation, region
+
+
+@pytest.mark.parametrize("key", ["join_multiway", "q3_top_orders"])
+def test_tpch_joins_stream_lineitem(q, key):
+    """lineitem is the streamed side of every join: Spark sizes a pruned
+    parquet scan from compressed bytes, so a lineitem join input can
+    fall under the broadcast threshold and get built on the driver.
+    The final adaptive plan must broadcast no lineitem scan."""
+    built = [tables for _, _, tables in broadcasts(q(key))]
+    assert built and not any("lineitem" in t for t in built), built
+
+
+def test_events_funnel_one_scan_no_broadcast(q):
+    """The funnel is one user_id aggregation over one events scan, not
+    a scan and a join per step with broadcast step results."""
+    import re
+
+    df = q("events_funnel")
+    assert len(re.findall(r"\(\d+\) Scan parquet", _plan(df))) == 1
+    assert broadcasts(df) == []
 
 
 def test_topk_global_is_take_ordered(q):

@@ -15,8 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SHOWCASE = [
     ("agg_grouped", "TPC-H Q1 shape — pushed filter, 2-phase hash agg"),
-    ("q3_top_orders", "3-way join — broadcast dims, one fact shuffle, TakeOrdered"),
-    ("join_multiway", "6-way join — 3 broadcasts, 2 exchanges total"),
+    ("q3_top_orders", "3-way join — lineitem streams past the broadcast filtered orders and customers, one agg exchange, TakeOrdered"),
+    ("join_multiway", "6-way join — lineitem streams past 5 broadcasts (filtered orders, customer, 3 dims), one agg exchange"),
+    ("events_funnel", "conversion funnel — one events scan, one user_id exchange, a one-row count, no join"),
     ("scan_pruned", "pushdown evidence — PushedFilters + pruned ReadSchema"),
     ("win_rank_topk", "per-group top-k — WindowGroupLimit below the shuffle"),
     ("events_session_batch", "sessionization — one user_id exchange reused"),

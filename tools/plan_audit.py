@@ -12,11 +12,18 @@ anti-pattern nodes of guide §2-§4:
                                   — Arrow boundary (reported, not flagged)
 - ``Exchange`` count              — shuffle boundaries
 - ``SortMergeJoin`` count         — for cross-checking broadcast choices
+- ``bcast``                       — the tables scanned beneath each
+                                    ``BroadcastExchange``
 
 Output: one line per key plus a summary; keys listed in
 ``EXPECTED`` carry a justification and don't count as findings.
 Plan-only (nothing is executed), so the audit is host-noise-immune —
 the point of running it in an optimization round on a degraded host.
+
+Keys named on the command line are also run, and each
+``BroadcastExchange`` of the final adaptive plan is printed with its
+``numOutputRows`` and ``dataSize``: counts, not timings, so they are
+noise-immune too.
 
 Usage: python tools/plan_audit.py [key ...]
 """
@@ -51,6 +58,62 @@ EXPECTED = {
     "sketch_quantile_merge": "non-equi range join against the "
     "k-row quantile-boundary frame (broadcast side bounded by k)",
 }
+
+
+def plan_nodes(plan, follow_reused=False):
+    """Every node of a physical plan: adaptive roots yield their current
+    (after execution, final) plan, query stages their inner plan, and
+    expression subqueries their plans.  A reused exchange is skipped
+    (its original is yielded where it ran) unless ``follow_reused``."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from plan_nodes(plan.executedPlan(), follow_reused)
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from plan_nodes(plan.plan(), follow_reused)
+        return
+    if cls == "ReusedExchangeExec":
+        if follow_reused:
+            yield from plan_nodes(plan.child(), follow_reused)
+        return
+    yield plan
+    for seq in (plan.subqueries(), plan.children()):
+        for i in range(seq.size()):
+            yield from plan_nodes(seq.apply(i), follow_reused)
+
+
+def broadcast_exchanges(df):
+    """The ``BroadcastExchangeExec`` nodes of ``df``'s physical plan
+    (the final adaptive plan once ``df`` has run)."""
+    return [
+        n
+        for n in plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "BroadcastExchangeExec"
+    ]
+
+
+def scanned_tables(node) -> list[str]:
+    """Fixture tables (``<name>.parquet``) scanned beneath ``node``."""
+    names = set()
+    for n in plan_nodes(node, follow_reused=True):
+        if n.getClass().getSimpleName() == "FileSourceScanExec":
+            roots = n.relation().location().rootPaths()
+            for i in range(roots.size()):
+                m = re.fullmatch(r"(\w+)\.parquet", roots.apply(i).getName())
+                names.update(m.groups() if m else ())
+    return sorted(names)
+
+
+def broadcasts(df) -> list[tuple[int, int, list[str]]]:
+    """Run ``df``; return ``(numOutputRows, dataSize, scanned tables)``
+    of each broadcast in its final adaptive plan."""
+    df.collect()
+    out = []
+    for node in broadcast_exchanges(df):
+        m = node.metrics()
+        rows, size = (m.apply(k).value() for k in ("numOutputRows", "dataSize"))
+        out.append((rows, size, scanned_tables(node)))
+    return out
 
 
 def main() -> int:
@@ -141,9 +204,15 @@ def main() -> int:
             line += f" {arrow_note}"
         if arrow:
             line += f" arrow={arrow}"
+        bcast = ["+".join(scanned_tables(n)) or "-" for n in broadcast_exchanges(df)]
+        if bcast:
+            line += f" bcast={bcast}"
         if tag and tag != "FLAG":
             line += f"  [{tag}]"
         print(line)
+        if only:
+            for rows, size, tables in broadcasts(df):
+                print(f"     broadcast rows={rows} bytes={size} scans={'+'.join(tables) or '-'}")
         if tag != "FLAG":
             n_ok += 1
     print(

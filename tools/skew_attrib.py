@@ -11,8 +11,7 @@ Usage:
   SF_DIR=/tmp/tweetdb_sf100_full python tools/skew_attrib.py            # default config
   SF_DIR=... python tools/skew_attrib.py --advisory 64m --threshold 128m  # tuned point
 
-Metric extraction walks the executed plan tree via py4j
-(AdaptiveSparkPlanExec -> .executedPlan(), QueryStageExec -> .plan())
+Metric extraction walks the final plan with ``plan_audit.plan_nodes``
 and sums every SQLMetric whose name mentions skew/spill — the same
 numbers the Spark UI would show, without needing the UI enabled.
 """
@@ -25,40 +24,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.plan_audit import plan_nodes  # noqa: E402
 
-def _walk(node, rows):
-    """Collect (node, metric_name, value) for skew/spill metrics."""
-    name = node.nodeName()
-    try:
+
+def _skew_spill_metrics(df) -> list[tuple[str, str, int]]:
+    """(node, metric_name, value) of every skew/spill metric in ``df``'s
+    final adaptive plan."""
+    rows = []
+    for node in plan_nodes(df._jdf.queryExecution().executedPlan()):
         it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
-            key = str(kv._1())
-            metric = kv._2()
-            label = str(metric.name().isDefined() and metric.name().get() or key)
-            if any(s in label for s in ("skew", "spill")) or any(
-                s in key for s in ("skew", "spill")
-            ):
-                rows.append((str(name), label, int(metric.value())))
-    except Exception:
-        pass
-    # descend: adaptive roots and query-stage wrappers hold their
-    # actual subtree behind accessors, not children()
-    try:
-        if "AdaptiveSparkPlan" in name:
-            _walk(node.executedPlan(), rows)
-            return
-        if "QueryStage" in name:
-            _walk(node.plan(), rows)
-            return
-    except Exception:
-        pass
-    try:
-        it = node.children().iterator()
-        while it.hasNext():
-            _walk(it.next(), rows)
-    except Exception:
-        pass
+            key, metric = str(kv._1()), kv._2()
+            label = str(metric.name().get()) if metric.name().isDefined() else key
+            if any(s in label or s in key for s in ("skew", "spill")):
+                rows.append((str(node.nodeName()), label, int(metric.value())))
+    return rows
 
 
 def main() -> None:
@@ -93,8 +74,7 @@ def main() -> None:
     out = df.collect()
     secs = time.time() - t0
 
-    rows: list[tuple[str, str, int]] = []
-    _walk(df._jdf.queryExecution().executedPlan(), rows)
+    rows = _skew_spill_metrics(df)
     final = df._jdf.queryExecution().executedPlan().toString()
 
     print(f"key={args.key} sf_dir={sf} confs={confs or 'defaults'}")

@@ -281,61 +281,54 @@ def events_sessionize(spark, t):
 def events_funnel(spark, t):
     """Ordered conversion funnel: signup → view (≤7d) → purchase (≤7d).
 
-    The product-analytics staple.  Each step is a per-user argmin
-    constrained to follow the previous step — three aggregations all
-    shuffling on user_id, so at scale the three steps reuse ONE
-    partitioning (co-partitioned joins, no re-shuffle); the final
-    report is a broadcast-sized scalar row.
+    The product-analytics staple, as ONE user_id shuffle: each user's
+    group keeps a has-signup flag, the first signup ``t1`` and its view
+    and purchase timestamps; ``t2``/``t3`` are the first view/purchase
+    in ``(t1, t1 + 7d]``/``(t2, t2 + 7d]``, and one global count
+    reports the funnel.  As in the oracle, whose later steps join on
+    user_id, the NULL user_id group and a user whose signups all have
+    NULL ts count as signups and reach no later step.  A group's
+    arrays hold one timestamp per view or purchase of that user.
     """
-    e = t["events"]
-    s1 = (
-        e.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        e.where(F.col("event_type") == "view")
-        .join(s1, "user_id")
-        .where(
-            (F.col("ts") > F.col("t1"))
-            & (F.col("ts") <= F.col("t1") + F.expr("INTERVAL 7 DAY"))
+
+    def of_type(name):
+        return F.when(F.col("event_type") == name, F.col("ts"))
+
+    def first_within(ts, start):
+        inside = F.filter(
+            ts, lambda x: (x > start) & (x <= start + F.expr("INTERVAL 7 DAY"))
         )
+        return F.when(F.col("user_id").isNotNull(), F.array_min(inside))
+
+    users = (
+        t["events"]
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        e.where(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .where(
-            (F.col("ts") > F.col("t2"))
-            & (F.col("ts") <= F.col("t2") + F.expr("INTERVAL 7 DAY"))
+        .agg(
+            F.bool_or(F.col("event_type") == "signup").alias("signed_up"),
+            F.min(of_type("signup")).alias("t1"),
+            F.collect_list(of_type("view")).alias("views"),
+            F.collect_list(of_type("purchase")).alias("purchases"),
         )
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
+        .where("signed_up")
+        .withColumn("t2", first_within(F.col("views"), F.col("t1")))
+        .withColumn("t3", first_within(F.col("purchases"), F.col("t2")))
     )
-    n1 = s1.agg(F.count("*").cast("bigint").alias("n_signup"))
-    n2 = s2.agg(F.count("*").cast("bigint").alias("n_view_7d"))
-    n3 = s3.agg(F.count("*").cast("bigint").alias("n_purchase_7d"))
-    return (
-        n1.crossJoin(n2)
-        .crossJoin(n3)
-        .select(
-            "n_signup",
-            "n_view_7d",
-            "n_purchase_7d",
-            # try_divide, not `/`: a corpus with zero signups must yield
-            # NULL rates like the oracle (DuckDB's x/0 is NULL), not an
-            # ANSI DIVIDE_BY_ZERO crash (r11 NULL-fixture survey catch)
-            F.round(
-                F.try_divide(F.col("n_view_7d").cast("double"), F.col("n_signup")), 4
-            ).alias("view_rate"),
-            F.round(
-                F.try_divide(
-                    F.col("n_purchase_7d").cast("double"), F.col("n_signup")
-                ),
-                4,
-            ).alias("purchase_rate"),
-        )
+    # try_divide, not `/`: a corpus with zero signups must yield NULL
+    # rates like the oracle (DuckDB's x/0 is NULL), not an ANSI
+    # DIVIDE_BY_ZERO crash
+    def rate(n):
+        return F.round(F.try_divide(F.col(n).cast("double"), F.col("n_signup")), 4)
+
+    return users.agg(
+        F.count("*").cast("bigint").alias("n_signup"),
+        F.count("t2").cast("bigint").alias("n_view_7d"),
+        F.count("t3").cast("bigint").alias("n_purchase_7d"),
+    ).select(
+        "n_signup",
+        "n_view_7d",
+        "n_purchase_7d",
+        rate("n_view_7d").alias("view_rate"),
+        rate("n_purchase_7d").alias("purchase_rate"),
     )
 
 

@@ -54,15 +54,21 @@ def join_inner_broadcast(spark, t):
 def join_multiway(spark, t):
     """J2: 6-table TPC-H Q5 shape (incl. a 2-key equi join).
 
-    The two big tables shuffle once each on the orderkey equi-join;
-    supplier/nation/region broadcast, so the region filter prunes via
-    the broadcast side (runtime bloom/DPP at scale).
+    lineitem joins the date-filtered orders first and customer after,
+    so the build side is picked between the filtered orders and
+    lineitem, and the orders are the smaller: they broadcast while
+    they fit (46k rows, 3.3 MB at sf0.1) and shuffle-join at scale.
+    Joined customer-first, the customer⋈orders estimate would exceed
+    the compressed-bytes estimate of the pruned lineitem scan, and all
+    of lineitem would be broadcast.  supplier/nation/region broadcast,
+    so the region filter prunes via the broadcast side (runtime
+    bloom/DPP at scale).
     """
     c, o, li = t["customer"], t["orders"], t["lineitem"]
     s, n, r = t["supplier"], t["nation"], t["region"]
     return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, c.c_custkey == o.o_custkey)
         .join(
             F.broadcast(s),
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
@@ -102,15 +108,15 @@ def join_multiway(spark, t):
 def q3_top_orders(spark, t):
     """TPC-H Q3 shape (BASELINE.md headline): 3-way join → agg → top-10.
 
-    customer is only a filter here — it participates as a broadcast
-    semi-ish probe; orders⋈lineitem is the single fact shuffle.  The
-    final top-10 is TakeOrderedAndProject over the aggregated rows.
+    lineitem joins the filtered orders first, then the BUILDING
+    customers (only a filter here), so the orders, not lineitem, are
+    the build side, as in ``join_multiway``.  The final top-10 is
+    TakeOrderedAndProject over the aggregated rows.
     """
     c, o, li = t["customer"], t["orders"], t["lineitem"]
     return (
-        c.where(F.col("c_mktsegment") == "BUILDING")
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c.where(F.col("c_mktsegment") == "BUILDING"), c.c_custkey == o.o_custkey)
         .where(
             (o.o_orderdate < F.lit("1998-03-15"))
             & (li.l_shipdate > F.lit("1996-03-15"))
