@@ -156,3 +156,17 @@ def test_caches_follow_in_place_source_rewrites(registry, spark, tmp_path):
     assert not set(dirs_b) & set(dirs_a)
     assert all(os.path.isdir(d) for d in dirs_a + dirs_b)
     assert _index_dirs(spark, sf) == dirs_a  # still cache hits
+
+
+def test_uri_source_is_never_served_stale(spark, tmp_path):
+    """A ``file:`` source lists no local file to fingerprint, so the
+    table catalog over it is rebuilt on every load, never cached per
+    (session, path)."""
+    from tweetdb_spark.catalog import load_tables
+
+    sf = _copy_fixture(tmp_path / "sf")
+    uri = f"file://{sf}"
+    orders = pq.read_table(f"{sf}/orders.parquet")
+    assert load_tables(spark, uri)["orders"].count() == orders.num_rows
+    _rewrite(sf, "orders", pa.concat_tables([orders, orders]))
+    assert load_tables(spark, uri)["orders"].count() == 2 * orders.num_rows

@@ -539,7 +539,7 @@ def test_capped_expansion_equals_windowed_naive_form(spark):
     forces whole tie-exposed groups through the merge window."""
     from pyspark.sql import Window, functions as F
 
-    from tweetdb_spark.llm.dedup import (
+    from tweetdb_spark.llm.collapse import (
         _expand_rep_pairs, _expand_rep_pairs_capped,
     )
 

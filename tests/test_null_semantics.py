@@ -227,3 +227,70 @@ def test_events_funnel_null_and_boundary_parity(spark, tmp_path):
     rows = _parity("events_funnel", events_funnel, fixture, spark)
     # signups: NULL user and users 1-5; views: 3 and 4; purchase: 4
     assert rows == [(6, 2, 1, 0.3333, 0.1667)]
+
+
+_CLONE = "the fast big merge spill error skew slow small"
+# (doc_id, text): two NULL texts, two '' texts, a clone group of three
+# and a singleton whose text contains the clones' (a containment pair)
+CLONE_DOCS = [
+    (7, None),
+    (2, ""),
+    (5, _CLONE),
+    (4, None),
+    (3, _CLONE),
+    (8, ""),
+    (6, _CLONE),
+    (1, _CLONE + " and a tail of its own"),
+]
+
+
+def test_collapse_null_rule_parity(spark, tmp_path):
+    """A NULL text equals nothing: each NULL-text doc is its own clone
+    group, the least doc_id represents every group, and the text keys
+    that collapse clones keep their oracle answers on NULL, empty and
+    cloned texts.  dedup_minhash_verdicts gives each NULL-text doc its
+    own kept component."""
+    from tweetdb_spark.llm.collapse import collapse
+    from tweetdb_spark.llm.dedup import dedup_containment, dedup_minhash_verdicts
+    from tweetdb_spark.llm.text import (
+        doc_fingerprint,
+        text_lang_id,
+        text_quality,
+        text_segment_dedup,
+    )
+
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        [(i, s, "en", "web", None if s is None else len(s)) for i, s in CLONE_DOCS],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ).coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    t = {"documents": spark.read.parquet(path)}
+
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
+    assert sorted((r.doc_id, r.rep_id, r.n_docs) for r in mem.collect()) == [
+        (1, 1, 1), (2, 2, 2), (3, 3, 3), (4, 4, 1),
+        (5, 3, 3), (6, 3, 3), (7, 7, 1), (8, 2, 2),
+    ]
+    assert sorted(r.doc_id for r in reps.collect()) == [1, 2, 3, 4, 7]
+
+    for key, fn in [
+        ("text_quality", text_quality),
+        ("text_lang_id", text_lang_id),
+        ("doc_fingerprint", doc_fingerprint),
+        ("text_segment_dedup", text_segment_dedup),
+        ("dedup_containment", dedup_containment),
+    ]:
+        _parity(key, fn, (t, con), spark)
+
+    verdicts = {r.doc_id: r for r in dedup_minhash_verdicts(spark, t).collect()}
+    assert sorted(verdicts) == [1, 2, 3, 4, 5, 6, 7, 8]
+    for i in (4, 7):
+        v = verdicts[i]
+        assert (v.component_id, v.keep, v.keep_doc_id, v.reason) == (
+            i, True, i, "kept"
+        )
+    assert {verdicts[i].component_id for i in (3, 5, 6)} == {3}

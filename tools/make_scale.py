@@ -68,7 +68,7 @@ def main() -> None:
         print(f"{name}: copied")
 
     # Explosion-parallelism floor (r16, same rule as SCALE.md /
-    # llm/dedup._expand_rep_pairs): the source tables are one or two
+    # llm/collapse._expand_rep_pairs): the source tables are one or two
     # parquet files, so the ×factor explode used to run in ONE task
     # and then `repartition` reshuffled the EXPLODED output — a full
     # shuffle of the entire synthesized fixture (23 GB at factor

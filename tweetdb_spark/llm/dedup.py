@@ -14,6 +14,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tweetdb_spark.llm.collapse import (
+    _expand_rep_pairs,
+    _expand_rep_pairs_capped,
+    clone_key,
+    collapse,
+)
 from tweetdb_spark.registry import query
 
 
@@ -187,54 +193,35 @@ _DUCK_TOKHASH = (
 _HAMMING_MAX = 3
 
 
-def _text_groups(t):
-    """(h, g_rep) — one row per distinct non-NULL md5(text), g_rep =
-    min doc_id of the group.  The canonical exact-collapse frame every
-    simhash consumer maps members through; a skinny groupBy (map-side
-    combinable) instead of the historical min-over-window, so the
-    member shuffle carries (h, doc_id) only — never the text bytes."""
-    return (
-        t["documents"]
-        .select("doc_id", F.md5("text").alias("h"))
-        .where(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("g_rep"))
-    )
-
-
-def _simhash_group_fps(spark, t, groups=None):
-    """(h, g_rep, simhash) per distinct non-NULL md5(text) — the
-    32-bit tf-weighted bit-vote fingerprint, computed once per GROUP
-    (a SimHash is a pure function of the tf multiset, so exact clones
-    share it by construction).  ``groups`` lets a caller reuse a
-    (h, g_rep) frame it already aggregated.  NULL-text docs have no
-    group here; empty-string texts do (split('', ' ') is [''])."""
-    if groups is None:
-        groups = _text_groups(t)
-    reps = t["documents"].select("doc_id", "text").join(
-        groups.select(F.col("g_rep").alias("doc_id")), "doc_id"
-    )
+def _simhash_group_fps(spark, reps):
+    """(h, g_rep, simhash) per clone group of :func:`collapse`'s
+    ``reps`` — the 32-bit tf-weighted bit-vote fingerprint, computed
+    once per GROUP (a SimHash is a pure function of the tf multiset,
+    so exact clones share it by construction).  NULL-text groups
+    tokenize to no rows and get no fingerprint; empty-string texts do
+    (split('', ' ') is [''])."""
     tok = reps.select(
-        F.col("doc_id").alias("g_rep"),
+        F.col("rep_id").alias("g_rep"),
+        "h",
         F.explode(F.split("text", " ")).alias("token"),
     )
-    tf = tok.groupBy("g_rep", "token").agg(F.count("*").alias("cnt"))
-    th = tf.select("token").distinct().withColumn("h", F.expr(_SPARK_TOKHASH))
+    tf = tok.groupBy("g_rep", "h", "token").agg(F.count("*").alias("cnt"))
+    th = tf.select("token").distinct().withColumn("th", F.expr(_SPARK_TOKHASH))
     bits = (
         tf.join(F.broadcast(th), "token")
         .crossJoin(F.broadcast(spark.range(32).select(F.col("id").alias("b"))))
-        .groupBy("g_rep", "b")
+        .groupBy("g_rep", "h", "b")
         .agg(
             F.sum(
                 # pyspark's shiftright() only takes a literal shift, so
                 # the column-shift goes through SQL expr
                 F.when(
-                    F.expr("shiftright(h, cast(b as int)) & 1") == 1, F.col("cnt")
+                    F.expr("shiftright(th, cast(b as int)) & 1") == 1, F.col("cnt")
                 ).otherwise(-F.col("cnt"))
             ).alias("s")
         )
     )
-    rep_fp = bits.groupBy("g_rep").agg(
+    return bits.groupBy("h", "g_rep").agg(
         F.sum(
             F.when(
                 F.col("s") > 0,
@@ -244,7 +231,6 @@ def _simhash_group_fps(spark, t, groups=None):
         .cast("bigint")
         .alias("simhash")
     )
-    return groups.join(rep_fp, "g_rep").select("h", "g_rep", "simhash")
 
 
 def _simhash_fingerprints(spark, t):
@@ -253,18 +239,16 @@ def _simhash_fingerprints(spark, t):
     so the Spark pipeline can never drift from the (identical) oracle
     SQL they embed.
 
-    r13 made this collapse-first (fingerprint the md5(text) rep, map
-    back — at sf10 the naive per-doc form pushed ~800M vote rows
-    through the (doc, bit) aggregation and died by GC).  r16 replaces
-    the min-over-window collapse with :func:`_text_groups` (skinny
-    combinable groupBy; the window variant shuffled the full text
-    bytes) and maps members back through ONE equi-join on h.
-    NULL-text docs have no group row, so the inner join drops them —
-    exactly the rows the per-doc form never produced."""
-    gfp = _simhash_group_fps(spark, t)
+    Collapse-first: fingerprint each clone group's representative and
+    map members back through ONE equi-join on h (the per-doc form
+    pushed ~800M vote rows through the (doc, bit) aggregation at 500k
+    docs and died in GC).  NULL-text groups have no fingerprint, so
+    the inner join drops exactly the rows the per-doc form never
+    produced."""
+    docs = t["documents"].select("doc_id", "text")
+    gfp = _simhash_group_fps(spark, collapse(docs)[1])
     return (
-        t["documents"]
-        .select("doc_id", F.md5("text").alias("h"))
+        docs.select("doc_id", clone_key().alias("h"))
         .join(gfp.select("h", "simhash"), "h")
         .select("doc_id", "simhash")
     )
@@ -635,50 +619,39 @@ def dedup_cluster_resolve(spark, t):
     algorithm; the oracle is an exact recursive-CTE transitive
     closure, which proves the propagation's fixpoint.
 
-    r16 collapse-first: the member-level label frame only ever fed a
-    COUNT here, and counts are additive over md5(text) groups — so the
-    one member-scale pass is a skinny (h, doc_id) groupBy carrying the
-    group size, the component aggregation runs on group rows
-    (~#distinct texts), and NULL-text docs (their own singleton
-    components in the per-doc form) union in directly.  Output row
+    Collapse-first: the member-level label frame only ever fed a
+    COUNT here, and counts are additive over clone groups — so the
+    component aggregation runs on group rows (~#distinct texts), each
+    carrying its size.  NULL-text groups have no fingerprint, hence no
+    label, and stay their own singleton components through the left
+    join's coalesce, exactly as the per-doc form labeled them; a
+    singleton's doc_id is no other component's id, since every
+    component id is the least doc_id of its own members.  Output row
     multiset unchanged: n_docs = Σ group sizes of the component,
-    keep_doc_id = min g_rep = min member doc_id.
+    keep_doc_id = min rep = min member doc_id.
     """
-    d = t["documents"].select("doc_id", F.md5("text").alias("h"))
-    g = (
-        d.where(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("g_rep"), F.count("*").alias("n_docs"))
-        .localCheckpoint(eager=True)  # feeds both the fp pipeline and the sum
-    )
-    glab = _simhash_group_labels(spark, t, groups=g.select("h", "g_rep"))
-    grouped = (
-        g.join(glab.select("h", "component_id"), "h")
-        .groupBy("component_id")
+    # checkpointed: feeds both the fingerprint pipeline and the sum
+    reps = collapse(t["documents"].select("doc_id", "text"))[1].select(
+        "doc_id", "rep_id", "h", "text", "n_docs"
+    ).localCheckpoint(eager=True)
+    glab = _simhash_group_labels(spark, reps)
+    return (
+        reps.join(glab.select("h", "component_id"), "h", "left")
+        .groupBy(F.coalesce("component_id", "doc_id").alias("component_id"))
         .agg(
             F.sum("n_docs").alias("n_docs"),
-            F.min("g_rep").alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
         )
     )
-    singles = d.where(F.col("h").isNull()).select(
-        F.col("doc_id").alias("component_id"),
-        F.lit(1).cast("long").alias("n_docs"),
-        F.col("doc_id").alias("keep_doc_id"),
-    )
-    return grouped.unionByName(singles)
 
 
-def _simhash_group_labels(spark, t, groups=None):
+def _simhash_group_labels(spark, reps):
     """Connected-component labels (h, g_rep, component_id) over the
-    simhash hamming ≤ 1 pair graph, at md5(text)-GROUP granularity —
-    min-label propagation with pointer doubling; shared by
+    simhash hamming ≤ 1 pair graph, at clone-GROUP granularity — one
+    row per fingerprinted group of :func:`collapse`'s ``reps``;
+    min-label propagation with pointer doubling.  Shared by
     dedup_cluster_resolve, corpus_dedup_e2e and corpus_pipeline_audit,
-    which map members back through one equi-join on h (r16: the
-    per-doc label frame this used to return forced every consumer
-    through 5M-row doc_id joins for facts that are pure functions of
-    the text).  ``groups`` lets a caller reuse a (h, g_rep) frame it
-    already aggregated; component_id is unchanged from the historical
-    per-doc form (see below).
+    which map members back through one equi-join on h.
 
     Edges come from the banded candidate equi-join, NOT an all-pairs
     join: hamming ≤ 1 < 4 bands, so by pigeonhole every qualifying
@@ -687,43 +660,19 @@ def _simhash_group_labels(spark, t, groups=None):
     edge SQL therefore proves the banded generation complete as a side
     effect of checking the components.
 
-    r13: equal-fingerprint groups enter the graph as STARS
-    (member → rep), not expanded cliques — component partitions are
-    identical (a clique and a star connect the same node set, and a
-    cross-group member pair qualifies iff its rep pair does, reachable
-    through the two stars), but the edge count stays linear in corpus
-    size where the clique form is quadratic in clone multiplicity
-    (the sf10 fixture's ~100-clone groups).  The green hash against
-    the all-pairs oracle is the standing equivalence proof.
-
-    r15: the stars leave the GRAPH entirely — a star edge only ever
-    encoded "member inherits its rep's component", which is a join,
-    not a graph problem (dedup_minhash_verdicts has used this shape
-    since r12).  The fixpoint now runs on the REP graph alone
-    (bounded by #distinct fingerprints at every scale — the sf100
-    clone fixture's loop input drops from ~5M star edges to the rep
-    pair list), members inherit through one (doc_id, rep_id) join,
-    and fingerprint-less docs label themselves through the left
-    join's coalesce.  component_id is unchanged: the rep-graph min
-    label is the min rep id of the component, and each rep is
-    already its group's min doc_id.
-
-    r16: the member inherit moved OUT of this helper into the
-    consumers (one h-join each), so the fingerprint pipeline, the
-    simhash-value collapse, and the fixpoint all run at group scale
-    (~#distinct texts) with a group-sized checkpoint — the per-doc
-    form checkpointed a member-sized fp frame and paid two more
-    member-wide exchanges (rep_id inherit + doc_id left join).
-    component_id is STILL the min doc_id of the member component:
-    the rep-graph min label is the min simhash-rep id, each
-    simhash-rep is the min g_rep of its value group, and each g_rep
-    is its text group's min doc_id."""
-    # gfp checkpoint (r15 shape, r16 group-sized): this frame spans
-    # multiple jobs (edge checkpoint, component solve, final map), and
-    # each would otherwise re-execute the token-explode × bit-vote
-    # fingerprint pipeline; one ~#distinct-texts materialization
-    # serves them all
-    gfp = _simhash_group_fps(spark, t, groups).localCheckpoint(eager=True)
+    The fixpoint runs on the REP graph alone (bounded by #distinct
+    fingerprints): a member only ever inherits its rep's component,
+    which is a join, not a graph problem — a clique over a clone group
+    and a star onto its rep connect the same node set, and a
+    cross-group member pair qualifies iff its rep pair does.
+    component_id is the min doc_id of the member component: the
+    rep-graph min label is the min simhash-rep id, each simhash-rep is
+    the min g_rep of its value group, and each g_rep is its text
+    group's min doc_id."""
+    # checkpointed: the frame spans several jobs (edge checkpoint,
+    # component solve, final map), each of which would otherwise
+    # re-execute the token-explode × bit-vote fingerprint pipeline
+    gfp = _simhash_group_fps(spark, reps).localCheckpoint(eager=True)
     m, rep_pairs = _simhash_rep_pairs(
         spark,
         gfp.select(F.col("g_rep").alias("doc_id"), "simhash"),
@@ -744,40 +693,6 @@ def _simhash_group_labels(spark, t, groups=None):
         .join(rep_labels, "rep_id")
         .select("h", "g_rep", "component_id")
     )
-
-
-def _simhash_canon(spark, t, sub):
-    """(glab, canon) for the e2e dedup-verdict keys: group component
-    labels plus the per-component canonical keeper.
-
-    ``sub`` is one row per distinct non-NULL (md5(text), n_chars) pair
-    with ``s_rep`` = min doc_id of the subgroup.  The member-level
-    keeper window (ORDER BY n_chars DESC, doc_id ASC over every doc of
-    the component) collapses exactly onto subgroups: the first member
-    row is the max-n_chars row with the least doc_id, i.e. the
-    subgroup row with (max n_chars, min s_rep) — grouping by
-    (h, n_chars) rather than h alone keeps this exact even if a
-    clone's stored n_chars column disagreed with its text."""
-    from pyspark.sql import Window as _W
-
-    groups = sub.groupBy("h").agg(F.min("s_rep").alias("g_rep"))
-    glab = _simhash_group_labels(spark, t, groups=groups)
-    subc = sub.select("h", "n_chars", "s_rep").join(
-        glab.select("h", "component_id"), "h"
-    )
-    w = _W.partitionBy("component_id").orderBy(
-        F.desc("n_chars"), F.asc("s_rep")
-    )
-    canon = (
-        subc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "component_id",
-            F.col("s_rep").alias("keep_doc_id"),
-            F.col("h").alias("keep_h"),
-        )
-    )
-    return glab, canon
 
 
 # Edge-count bound for solving connected components driver-side (the
@@ -1071,28 +986,46 @@ def corpus_dedup_e2e(spark, t):
     cluster membership, canonical choice, and reason codes are all
     value-hash-checked.
 
-    r16 collapse-first: every output column is a function of
-    (doc_id, md5(text), the group's component, the component's
-    keeper), so the member-scale work is ONE skinny
-    (h, n_chars) groupBy plus two small-frame equi-joins back — the
-    keeper window runs on subgroup rows (~#distinct texts), not 5M
-    members (see :func:`_simhash_canon` for the exactness argument),
-    and the per-doc component labels + doc_id SortMergeJoins of the
-    historical form disappear.  NULL-text docs are their own
-    kept singletons through the left joins' coalesces, exactly as the
-    per-doc form labeled them.
+    Collapse-first: every output column is a function of
+    (doc_id, clone key, the group's component, the component's
+    keeper), so the component solve and the keeper run on group rows
+    (~#distinct texts) and members map back by clone key through two
+    small-frame equi-joins.  The member-level keeper order
+    (n_chars DESC NULLS LAST, doc_id) collapses exactly onto groups:
+    each group carries its own first member under that order as
+    ``best``, and the component's first member is the least ``best``
+    over its groups.  ``best`` orders by the member's own n_chars, so
+    this stays exact even if a clone's stored n_chars disagreed with
+    its text.  NULL-text docs are their own kept singletons through
+    the left joins' coalesces, exactly as the per-doc form labeled
+    them.
     """
-    d2 = t["documents"].select("doc_id", F.md5("text").alias("h"), "n_chars")
-    sub = (
-        d2.where(F.col("h").isNotNull())
-        .groupBy("h", "n_chars")
-        .agg(F.min("doc_id").alias("s_rep"))
-        .localCheckpoint(eager=True)  # feeds groups, fp pipeline, keeper window
+    # struct order = (n_chars DESC NULLS LAST, doc_id); bitwise NOT
+    # reverses the order of every long without overflow
+    best = F.min(
+        F.struct(
+            F.col("n_chars").isNull(), F.bitwise_not("n_chars"), F.col("doc_id")
+        )
     )
-    glab, canon = _simhash_canon(spark, t, sub)
+    docs = t["documents"].select("doc_id", "text", "n_chars")
+    # checkpointed: feeds the fingerprint pipeline and the keeper
+    reps = collapse(docs, best=best)[1].select(
+        "doc_id", "rep_id", "h", "text", "best"
+    ).localCheckpoint(eager=True)
+    glab = _simhash_group_labels(spark, reps)
+    canon = (
+        reps.join(glab.select("h", "component_id"), "h")
+        .groupBy("component_id")
+        .agg(F.min(F.struct("best", "h")).alias("k"))
+        .select(
+            "component_id",
+            F.col("k.best.doc_id").alias("keep_doc_id"),
+            F.col("k.h").alias("keep_h"),
+        )
+    )
     keep_id = F.coalesce("keep_doc_id", F.col("doc_id"))
     return (
-        d2.select("doc_id", "h")
+        docs.select("doc_id", clone_key().alias("h"))
         .join(glab.select("h", "component_id"), "h", "left")
         .withColumn(
             "component_id", F.coalesce("component_id", F.col("doc_id"))
@@ -1192,12 +1125,11 @@ def corpus_pipeline_audit(spark, t):
     X drop? which stage?).  The oracle replays every stage, so the
     whole pipeline composition is value-hash-checked.
 
-    r16 collapse-first: token stats and the 8-gram set are pure
-    functions of the TEXT, so both explodes run once per distinct
-    md5(text) group (~#distinct texts) instead of per member — the
-    historical form pushed two ~member×tokens explodes (~250M + 215M
-    rows at sf100) through per-doc aggregations.  Contamination is the
-    one signal that is NOT text-pure (it depends on each member's
+    Collapse-first: token stats and the 8-gram set are pure functions
+    of the TEXT, so both explodes run once per clone group
+    (~#distinct texts) instead of per member (~250M + 215M exploded
+    rows at 5M docs in the per-member form).  Contamination is the one
+    signal that is NOT text-pure (it depends on each member's
     doc_id % 7 split), but it factors exactly through two per-group
     member flags: a group's grams enter the bench set iff the group
     HAS a bench member, and a TRAIN member is contaminated iff its
@@ -1209,23 +1141,14 @@ def corpus_pipeline_audit(spark, t):
     NULL split yields no rows).
     """
     d = t["documents"]
-    dh = d.select("doc_id", "lang", F.md5("text").alias("h"))
-    # One row per distinct non-NULL text: rep doc + the two split
-    # flags contamination needs.  Checkpointed because it feeds three
+    # One row per clone group: rep text + the two split flags
+    # contamination needs.  Checkpointed because it feeds three
     # branches (rep explode, bench-gram set, contamination map-back).
-    grp = (
-        dh.where(F.col("h").isNotNull())
-        .groupBy("h")
-        .agg(
-            F.min("doc_id").alias("g_rep"),
-            F.max((F.col("doc_id") % 7 == 0).cast("int")).alias("has_bench"),
-            F.max((F.col("doc_id") % 7 != 0).cast("int")).alias("has_train"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    reps = d.select("doc_id", "text").join(
-        grp.select(F.col("g_rep").alias("doc_id"), "h"), "doc_id"
-    )
+    reps = collapse(
+        d.select("doc_id", "text"),
+        has_bench=F.max((F.col("doc_id") % 7 == 0).cast("int")),
+        has_train=F.max((F.col("doc_id") % 7 != 0).cast("int")),
+    )[1].select("h", "text", "has_bench", "has_train").localCheckpoint(eager=True)
     rtok = reps.select("h", F.explode(F.split("text", " ")).alias("token"))
     gstats = rtok.groupBy("h").agg(
         F.count("*").alias("n_tokens"),
@@ -1240,9 +1163,7 @@ def corpus_pipeline_audit(spark, t):
         "i -> array_join(slice(split(text, ' '), i, 8), ' '))) "
         "ELSE array() END"
     )
-    g = reps.join(grp.select("h", "has_bench", "has_train"), "h").select(
-        "h", "has_bench", "has_train", grams.alias("grams")
-    )
+    g = reps.select("h", "has_bench", "has_train", grams.alias("grams"))
     bench = (
         g.where(F.col("has_bench") == 1)
         .select(F.explode("grams").alias("gram"))
@@ -1263,7 +1184,8 @@ def corpus_pipeline_audit(spark, t):
         1,
     ).otherwise(0)
     audit = (
-        dh.join(gstats, "h")
+        d.select("doc_id", "lang", clone_key().alias("h"))
+        .join(gstats, "h")
         .join(verdict, "doc_id")
         .join(contaminated_h, "h", "left")
         .select(
@@ -1668,18 +1590,18 @@ def dedup_minhash_lsh(spark, t):
     machinery (:func:`_banded_candidate_pairs`): token ids are 31-bit
     xxhash64 values, 16 affine minhashes fold into **8 bands of 2
     rows**, candidates are an equi-join on (band, value), and the
-    exact token-set Jaccard re-filter runs on candidates only.  Until
-    r7 this key ran ``ml.MinHashLSH.approxSimilarityJoin``, which
-    materializes per-row hash arrays and explodes BOTH sides — 273 s
-    at sf0.1 where this banding does the identical tier in seconds
-    (SCALE.md); the ML pipeline survives as a recall cross-check in
+    exact token-set Jaccard re-filter runs on candidates only.
+    ``ml.MinHashLSH.approxSimilarityJoin`` materializes per-row hash
+    arrays and explodes BOTH sides — 273 s at sf0.1 where this banding
+    does the identical tier in seconds (SCALE.md); the ML pipeline
+    survives as a recall cross-check in
     tests/test_llm_ops.py.  Banding recall at the s = 0.8 threshold is
     1-(1-s²)^8 ≥ 0.9997, ≥ the old 5-table ML config's 1-(1-s)^5.
     Rows-only check (LSH is approximate); L2 is the hash-checked exact
     twin at small N.
 
     The candidate verify intersects SORTED 64-BIT token ids, not the
-    token strings (r12): string array_intersect re-hashes ~200
+    token strings: string array_intersect re-hashes ~200
     multi-byte tokens per candidate pair (10.7M pairs at sf0.1),
     while bigint intersection stays primitive — 11.3 s → 4.7 s for
     the IDENTICAL edge set.  Flipping a Jaccard verdict would need
@@ -1688,7 +1610,7 @@ def dedup_minhash_lsh(spark, t):
     level the exact tier places in md5(text); A/B checksum-verified
     identical at sf0.01/sf0.1/sf1.
 
-    **Output-size bound (r13, verdict ask #8)**: a raw pair list is
+    **Output-size bound**: a raw pair list is
     QUADRATIC in clone multiplicity — the sf1 fixture (10 clones/doc)
     makes it 297M rows, a diagnostic no pipeline consumes (the
     production form is dedup_minhash_verdicts, one row/doc).  Above
@@ -1701,10 +1623,10 @@ def dedup_minhash_lsh(spark, t):
     At fixture scales (≤ the threshold) the pair list stays EXACT so
     the banded hash-twin and the ML-recall pytest are untouched.
 
-    **Exact-collapse-first (r13, sf10 rung catch)**: like the banded
-    tier and the verdicts form, tokens are hashed / banded / verified
-    only for the min-doc_id representative of each md5(text) group,
-    and rep pairs expand back to member pairs via
+    **Exact-collapse-first**: like the banded tier and the verdicts
+    form, tokens are hashed / banded / verified only for the
+    representative of each clone group (:func:`collapse`), and rep
+    pairs expand back to member pairs via
     :func:`_expand_rep_pairs` — the 297M-pair sf1 enumeration stops
     carrying two ~200-element token-id arrays per pair (the collapse
     removes clone multiplicity, the quadratic term, from the verify)
@@ -1714,22 +1636,16 @@ def dedup_minhash_lsh(spark, t):
         t["documents"]
         .select(
             "doc_id",
-            F.md5("text").alias("h"),
+            "text",
             F.array_distinct(F.split("text", " ")).alias("tokens"),
         )
         # the population the naive form bands (empty signatures are
-        # dropped inside _banded_candidate_pairs); filtering before the
-        # collapse keeps NULL-text docs out of the md5 group-by
+        # dropped inside _banded_candidate_pairs)
         .where(F.size("tokens") > 0)
     )
-    # rep election as one window over the h exchange (see the banded
-    # key): mem and the rep token frame are projections of the same
-    # shuffled frame instead of groupBy + two joins back
-    from pyspark.sql import Window as _W
-
-    toks = toks.withColumn("rep_id", F.min("doc_id").over(_W.partitionBy("h")))
-    mem = toks.select("doc_id", "rep_id")
-    rt = toks.where(F.col("doc_id") == F.col("rep_id")).select("doc_id", "tokens")
+    mem, reps = collapse(toks)
+    mem = mem.select("doc_id", "rep_id")
+    rt = reps.select("doc_id", "tokens")
     # 31-bit ids keep a*x+b inside bigint (ANSI-safe), collisions ~0
     g = rt.select(
         "doc_id",
@@ -1762,21 +1678,20 @@ def dedup_minhash_lsh(spark, t):
         return pairs
     from pyspark.sql import Window
 
-    # NOTE (r13 adjudication, r14 refinement): a prune-before-expand
-    # variant (per doc_a, keep only the K smallest same-group
-    # successors and the K smallest greater members per adjacent
-    # group, then window) was built, proven output-identical at sf0.1,
-    # and REJECTED on measurement: with THIS key's dense rep adjacency
-    # (~1200 verified neighbors/rep at the 0.2-distance threshold) and
+    # NOTE: a prune-before-expand variant (per doc_a, keep only the K
+    # smallest same-group successors and the K smallest greater
+    # members per adjacent group, then window) was output-identical at
+    # sf0.1 but slower: with THIS key's dense rep adjacency (~1200
+    # verified neighbors/rep at the 0.2-distance threshold) and
     # K ≥ group size, it generates MORE intermediate rows than the
     # plain expansion (sf1: 78.9 s vs 31.3 s, identical 3,423,964
-    # rows).  r14's _expand_rep_pairs_capped (used by the BANDED key,
-    # whose 0.7-similarity threshold keeps rep adjacency near zero)
-    # is that same idea made exact+bounded — but its cross term is
-    # still Ω(members × adjacency), so it would regress THIS key for
-    # the same reason the r13 variant did.  Dense-adjacency corpora
-    # beyond this window's reach should read dedup_minhash_verdicts
-    # (one row per doc, flat in pair count) instead.
+    # rows).  _expand_rep_pairs_capped (used by the BANDED key, whose
+    # 0.7-similarity threshold keeps rep adjacency near zero) is that
+    # same idea made exact+bounded — but its cross term is still
+    # Ω(members × adjacency), so it would regress THIS key the same
+    # way.  Dense-adjacency corpora beyond this window's reach should
+    # read dedup_minhash_verdicts (one row per doc, flat in pair
+    # count) instead.
     w = Window.partitionBy("doc_a").orderBy("jaccard_dist", "doc_b")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -1797,9 +1712,10 @@ def dedup_minhash_verdicts(spark, t):
     docs survive".  This operator computes exactly that, in three
     output-bounded stages:
 
-    1. **Exact collapse first** (the production ordering): group by
-       md5(text), elect min-doc_id representative.  Byte-identical
-       clones never enter the LSH tier — on the sf1 fixture this cuts
+    1. **Exact collapse first** (the production ordering):
+       :func:`collapse` elects one representative per clone group, and
+       each NULL-text doc is its own group.  Byte-identical clones
+       never enter the LSH tier — on the sf1 fixture this cuts
        candidate-pair volume ~100x because pair count is quadratic in
        clone multiplicity.
     2. **LSH on unique representatives only**: identical machinery and
@@ -1826,39 +1742,25 @@ def dedup_minhash_verdicts(spark, t):
     """
     from pyspark.sql import Window
 
-    # NULL-text docs still get a verdict row ("one row per input doc"
-    # is the production contract): md5(NULL) is NULL, and a NULL h both
-    # vanishes from the equi-join back (r13 rows-only edge survey: 466
-    # verdicts for 500 docs) and would merge all NULL-text docs into
-    # one "exact" group if naively sentineled with a single value.
-    # NULL text asserts nothing about equality, so each NULL-text doc
-    # becomes its OWN exact group via a per-doc sentinel (md5 output is
-    # hex — a ":"-prefixed sentinel can never collide with a real hash).
-    h = F.coalesce(
-        F.md5("text"), F.concat(F.lit(":null:"), F.col("doc_id").cast("string"))
-    )
-    # Two-level collapse (guide §1.2 "don't compute things you throw
-    # away"): md5-collapse first so byte-identical clones are NEVER
-    # tokenized, then elect a token-set representative (ts_rep) over
-    # the text-reps only.  member = (doc_id, h, n_chars, ts_rep) for
+    # Two-level collapse: the clone collapse first so byte-identical
+    # clones are NEVER tokenized, then elect a token-set
+    # representative (ts_rep) over the text-reps only.  member = (doc_id, h, n_chars, ts_rep) for
     # every doc; uids = (ts_rep doc_id, sorted token ids) for the LSH
-    # nodes.  The token-set partition is a coarsening of the md5
+    # nodes.  The token-set partition is a coarsening of the clone
     # partition (identical text ⟹ identical token array), so each
-    # member inherits the ts_rep of its md5 rep through the rep-scale
-    # rep_map join.  NULL-text docs keep their per-doc sentinel groups
-    # at both levels (i is NULL iff text is NULL, and xxhash64(NULL) is
-    # a constant, hence the ts sentinel).  A single-exchange collapse
-    # (one ts window over members) was measured and rejected: inside
-    # noise at sf0.1, and 35.5-38.9 s vs 29.8 s at 10M docs / 2000x
-    # clone multiplicity (sweeps/mh_singlepass_r17.log).
+    # member inherits the ts_rep of its clone rep through the
+    # rep-scale rep_map join.  NULL-text docs keep their singleton
+    # groups at both levels (i is NULL iff text is NULL, and
+    # xxhash64(NULL) is a constant, hence the ts sentinel).  A
+    # single-exchange collapse (one ts window over members) was
+    # inside noise at sf0.1, and 35.5-38.9 s vs 29.8 s at 10M docs /
+    # 2000x clone multiplicity (sweeps/mh_singlepass_r17.log).
     ts_key_of = lambda i_col, id_col: F.when(  # noqa: E731
         i_col.isNotNull(),
         F.concat(F.lit("t:"), F.xxhash64(i_col.cast("string")).cast("string")),
     ).otherwise(F.concat(F.lit(":null:"), id_col.cast("string")))
-    docs = t["documents"].select("doc_id", h.alias("h"), "n_chars", "text")
-    docs = docs.withColumn(
-        "rep_id", F.min("doc_id").over(Window.partitionBy("h"))
-    ).select(
+    docs = collapse(t["documents"].select("doc_id", "n_chars", "text"))[0]
+    docs = docs.select(
         "doc_id",
         "h",
         "n_chars",
@@ -1867,10 +1769,10 @@ def dedup_minhash_verdicts(spark, t):
             "rep_text"
         ),
     )
-    # localCheckpoint (r16, guide §5 / §3.3): the collapse chain feeds
-    # every downstream subtree (band a/b sides, t_a, t_b, component
-    # nodes, member assembly); the checkpoint holds one narrow row per
-    # doc plus text ONLY for the elected rep.
+    # localCheckpoint: the collapse chain feeds every downstream
+    # subtree (band a/b sides, t_a, t_b, component nodes, member
+    # assembly); the checkpoint holds one narrow row per doc plus text
+    # ONLY for the elected rep.
     docs = docs.localCheckpoint(eager=True)
     toks = docs.where(F.col("doc_id") == F.col("rep_id")).select(
         "doc_id",
@@ -1904,9 +1806,9 @@ def dedup_minhash_verdicts(spark, t):
         "doc_id", F.expr("transform(i, x -> x & 2147483647)").alias("g")
     )
     # size_ratio: lossless 4/5 set-size bound (implied by dist <= 0.2)
-    # applied inside the band join (r16 optimization round; A/B
-    # checksum-identical).  rebalance stays ON: although the verify
-    # below is two broadcast joins, fusing it into the band-join
+    # applied inside the band join (A/B checksum-identical).
+    # rebalance stays ON: although the verify below is two broadcast
+    # joins, fusing it into the band-join
     # stage leaves the intersect work on the ~n_salt·n_bands
     # bucket-keyed tasks — measured 5.79 s vs 4.15 s WITH the doc_a
     # exchange at sf0.1, i.e. the (now size-pruned) pair shuffle buys
@@ -1914,10 +1816,9 @@ def dedup_minhash_verdicts(spark, t):
     cand = _banded_candidate_pairs(g, n_bands=8, size_ratio=(4, 5))
     ta = uids.select(F.col("doc_id").alias("doc_a"), F.col("i").alias("t_a"))
     tb = uids.select(F.col("doc_id").alias("doc_b"), F.col("i").alias("t_b"))
-    # Exact-integer threshold, single intersect evaluation (r16
-    # optimization round, fifth session; guide §1.2 step 2 "per-task
-    # work").  The old double form — dist = 1 - try_divide(inter,
-    # union) with union = sa + sb - inter — referenced
+    # Exact-integer threshold, single intersect evaluation.  The
+    # double form — dist = 1 - try_divide(inter, union) with
+    # union = sa + sb - inter — referenced
     # size(array_intersect(...)) TWICE in the filter predicate
     # (numerator and union term), and codegen evaluated the intersect
     # (hash-set build + probe + result-array alloc per pair) twice for
@@ -1943,18 +1844,16 @@ def dedup_minhash_verdicts(spark, t):
     )
 
     # components over token-set reps only; members inherit directly
-    # through their ts_rep (one join — the r16 two-level
-    # member→rep_map→ts_labels inherit collapsed with the collapse
-    # stages above).  component_id stays the min doc_id of the FULL
-    # component: a ts_rep is the min doc_id of its token-set group, so
+    # through their ts_rep (one join).  component_id stays the min
+    # doc_id of the FULL component: a ts_rep is the min doc_id of its token-set group, so
     # min over ts_reps == min over all members of the component.
     ts_labels = _min_label_components(uids.select("doc_id"), edges)
     lab = member.join(
         ts_labels.withColumnRenamed("doc_id", "ts_rep"), "ts_rep"
     )
-    # Keeper election as ONE first_value window (r16 optimization
-    # round, guide §2.4): the old row_number→filter→join-back form
-    # computed the whole lab subtree TWICE and rejoined the copies
+    # Keeper election as ONE first_value window: a
+    # row_number→filter→join-back form computed the whole lab subtree
+    # TWICE and rejoined the copies
     # with a SortMergeJoin (two extra component_id exchanges + sorts;
     # see plans/r16/dedup_minhash_verdicts_before.txt ops 44/91/97).
     # first_value over the same total order (n_chars DESC, doc_id —
@@ -2292,277 +2191,6 @@ def _mh_oracle() -> str:
     """
 
 
-def _expand_rep_pairs(rep_pairs, mem, value_col: str, within_value: float):
-    """Expand REP-level verified near-dup pairs to member-level pairs.
-
-    ``rep_pairs`` is (rep_a, rep_b, <value_col>) with rep_a < rep_b,
-    one row per unordered pair of exact-duplicate groups; ``mem`` is
-    the (doc_id, rep_id) member→representative map from an md5(text)
-    collapse.  Emits
-
-    - every CROSS-group member pair exactly once, as
-      (least, greatest, rep pair's value) — exact clones have
-      byte-identical text, hence identical shingle/token sets, hence
-      the member pair's exact-Jaccard verify value IS the rep pair's
-      (same arrays, same double, same round);
-    - every WITHIN-group pair (doc_a < doc_b) at ``within_value``,
-      the identity similarity (identical sets ⇒ jaccard exactly 1 ⇒
-      1.0 / 0.0 depending on the key's sim/dist convention); such a
-      pair always banded together in the naive form (identical
-      signatures collide in every band) and always passed its verify.
-
-    Both legs are pure small-row generation — no signature or token
-    array ever rides an expansion join, which is what makes the
-    collapsed form scale-safe: the sf10 rung (500k docs, ~100-clone
-    groups, ~10M output pairs) ground to GC death when the naive form
-    pulled two ~300-element gram arrays through every candidate pair
-    (~50 GB of array traffic through one join), while the collapsed
-    form verifies ~5k reps and then only generates (id, id, double)
-    rows.  Output multiset is IDENTICAL to the naive all-member form
-    (A/B checksum-verified at sf0.001/0.01/0.1/1).
-    """
-    ma = mem.select(F.col("rep_id").alias("rep_a"), F.col("doc_id").alias("da"))
-    mb = mem.select(F.col("rep_id").alias("rep_b"), F.col("doc_id").alias("db"))
-    # Rebalance the rep-pair frame to full parallelism BEFORE the
-    # member joins (r16 sf10 catch): the joins broadcast the small
-    # member maps, so the expansion inherits rep_pairs' partitioning —
-    # which AQE has coalesced to ~1 partition by INPUT size (a few MB
-    # of id rows), blind to the clone-quadratic OUTPUT.  At sf10 the
-    # whole 1.4B-row cross expansion then runs in one task; on a
-    # 1000-executor cluster the same plan would idle every core but
-    # one.  A round-robin shuffle of the tiny rep-pair frame costs
-    # ~nothing and bounds expansion parallelism below by the cluster
-    # width.  Output multiset unchanged (repartition only moves rows).
-    rep_pairs = rep_pairs.repartition(
-        rep_pairs.sparkSession.sparkContext.defaultParallelism
-    )
-    cross = (
-        rep_pairs.join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            value_col,
-        )
-    )
-    within = (
-        mem.alias("x")
-        .join(
-            mem.alias("y"),
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.lit(float(within_value)).alias(value_col),
-        )
-    )
-    return cross.unionAll(within)
-
-
-def _expand_rep_pairs_capped(
-    rep_pairs, mem, value_col: str, within_value: float, k: int,
-    descending: bool,
-):
-    """Per-doc_a top-``k`` of the expanded pair list WITHOUT ever
-    materializing the full expansion (r14, r13 verdict ask #5).
-
-    Semantics: identical to
-    ``window(_expand_rep_pairs(...), partitionBy doc_a,
-    orderBy value [desc], doc_b).filter(rn <= k)`` — but that form
-    enumerates the clone-quadratic pair mass before pruning (1.13B
-    rows / 1122 s at the sf100 rung).  This form generates a provable
-    PER-SOURCE-top-k SUPERSET boundedly, then windows the small union:
-
-    - WITHIN a group, every pair carries the constant best value
-      (``within_value``) so a doc's within-ranking is pure doc_b ASC:
-      its top-k within-partners are the next k members in id order.
-      Generated via a per-group SORTED MEMBER ARRAY + slice/explode —
-      ≤ k rows per doc, no quadratic join.
-    - For a CROSS rep pair (Ga, Gb, v), all member pairs share v, so
-      a member x ∈ Ga can contribute at most its k smallest partners
-      y ∈ Gb with y > x to x's final top-k — a k-slice of Gb's sorted
-      array filtered above x (and symmetrically for y ∈ Gb).  ≤ k
-      rows per (member, adjacent group).
-
-    Union of per-source top-k lists ⊇ global top-k (any pair in the
-    global top-k is in its source's top-k under the same ordering,
-    ties included), so the final window over the ≤ k·(1+adjacency)
-    rows per doc returns EXACTLY the naive form's capped output.
-    Pinned by tests/test_llm_ops.py::test_capped_expansion_equals_
-    windowed_naive_form on a multi-group clone corpus.
-
-    **Per-MEMBER merge bypass (r15, r14 verdict ask #2)**: the r14
-    form sent every member of every ADJACENT group through the merge
-    window — on dedup_semantic_blocked's sf100 fixture (2k groups of
-    ~1000 clones, nearly all groups adjacent under the loose τ=0.35)
-    that was the whole ~200M-row output mass through one row_number
-    exchange, ~110 s of the key's 133 s.  But ``within_value`` is the
-    IDENTITY similarity — the best possible value under either
-    ordering — so a member with ≥ k greater within-partners holds k
-    candidates that outrank every cross candidate ranked strictly
-    worse than the identity value: its exact top-k IS its within
-    slice, no merge needed.  Only members that are BORDERLINE (fewer
-    than k greater within-partners — the slice cannot fill the quota
-    alone) or TIE-EXPOSED (some adjacent rep pair's value ranks equal
-    to or better than ``within_value``, so the doc_b tiebreak can
-    interleave cross partners among within ones) ride the union +
-    window; everyone else emits their within slice directly.  The
-    cross-side generators are restricted to those same borderline
-    members — a bypassed member provably contributes no cross pair to
-    its own top-k, and pairs where it is doc_b are generated by their
-    own doc_a's side.  Groups with no adjacency at all remain the
-    trivial case of the bypass (bestv NULL → never merged).
-
-    Group arrays are bounded by clone multiplicity (the sf100 rung's
-    1000-member groups ≈ 8 KB arrays); corpora with million-member
-    exact-dup groups should not be asking for pair lists at all
-    (dedup_minhash_verdicts is the registered scale form).
-    """
-    from pyspark.sql import Window as _W
-
-    idxw = _W.partitionBy("rep_id").orderBy("doc_id")
-    m = mem.withColumn("idx", F.row_number().over(idxw))
-    arrs = mem.groupBy("rep_id").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("arr")
-    )
-
-    # Per-group best CROSS value (max under descending, min under
-    # ascending): a group whose best cross value still ranks strictly
-    # worse than the identity value can never interleave a cross
-    # partner among a full within slice.  ``>=`` / ``<=`` (not ``==``)
-    # keeps the bypass sound even for a caller whose within_value is
-    # not the extreme of the value domain.
-    va = rep_pairs.select(
-        F.col("rep_a").alias("rep_id"), F.col(value_col).alias("v")
-    )
-    vb = rep_pairs.select(
-        F.col("rep_b").alias("rep_id"), F.col(value_col).alias("v")
-    )
-    best = F.max("v") if descending else F.min("v")
-    adjv = va.unionAll(vb).groupBy("rep_id").agg(best.alias("bestv"))
-
-    flags = m.join(arrs, "rep_id").join(adjv, "rep_id", "left")
-    cross_ties = (
-        F.col("bestv") >= F.lit(float(within_value))
-        if descending
-        else F.col("bestv") <= F.lit(float(within_value))
-    )
-    n_within = F.least(F.size("arr") - F.col("idx"), F.lit(k))
-    # Three member classes (r15 sf100 probe: adj coverage 1957/2000
-    # groups but ZERO tie pairs — the r14-shape merge was pushing the
-    # whole ~200M-row output through one window for nothing):
-    #  - COVERED (≥ k greater within-partners, group not tie-exposed):
-    #    top-k IS the within slice — direct emit.
-    #  - FULL merge (group tie-exposed): cross candidates can
-    #    interleave among within rows on the doc_b tiebreak — rank
-    #    everything, quota k (the r14 semantics).
-    #  - FILL (borderline in a non-tie group: fewer than k greater
-    #    within-partners): every within row still outranks every
-    #    cross row (cross strictly worse than the identity value), so
-    #    direct-emit the within rows and rank ONLY cross rows for the
-    #    remaining quota q = k − n_within; cross slices are generated
-    #    at length q, not k.
-    needs_full = F.col("bestv").isNotNull() & cross_ties
-    needs_fill = (
-        F.col("bestv").isNotNull()
-        & ~cross_ties
-        & (F.size("arr") - F.col("idx") < F.lit(k))
-    )
-    within_k = flags.select(
-        needs_full.alias("full"),
-        F.col("doc_id").alias("doc_a"),
-        F.explode(F.slice("arr", F.col("idx") + 1, k)).alias("doc_b"),
-        F.lit(float(within_value)).alias(value_col),
-    )
-    direct = within_k.where(~F.col("full")).drop("full")
-
-    # Merge-riding members by MEMBERSHIP (not via within_k: a group's
-    # LAST member has an empty within slice — no within_k row — but
-    # still needs its cross slices).  quota = per-member cross rank
-    # budget: k for full-merge members (within rows ride the window
-    # with them), k − n_within for fill members.
-    m_need = flags.where(needs_full | needs_fill).select(
-        "rep_id",
-        "doc_id",
-        needs_full.alias("full"),
-        F.when(needs_full, F.lit(k)).otherwise(F.lit(k) - n_within).alias(
-            "quota"
-        ),
-    )
-
-    def _side(rep_col, other_col):
-        # merge-riding members of one side of a cross rep pair, each
-        # taking its quota smallest greater partners from the OTHER
-        # side's sorted array
-        return (
-            rep_pairs.join(
-                m_need.select(
-                    F.col("rep_id").alias(rep_col), "doc_id", "full", "quota"
-                ),
-                rep_col,
-            )
-            .select(
-                F.col("doc_id").alias("doc_a"),
-                "full",
-                "quota",
-                F.col(other_col),
-                F.col(value_col),
-            )
-            .join(
-                arrs.select(
-                    F.col("rep_id").alias(other_col), F.col("arr").alias("o")
-                ),
-                other_col,
-            )
-            .select(
-                "doc_a",
-                "full",
-                "quota",
-                F.explode(
-                    F.slice(
-                        F.filter("o", lambda y: y > F.col("doc_a")),
-                        F.lit(1),
-                        F.col("quota"),
-                    )
-                ).alias("doc_b"),
-                value_col,
-            )
-        )
-
-    order = (
-        F.col(value_col).desc() if descending else F.col(value_col).asc()
-    )
-    w = _W.partitionBy("doc_a").orderBy(order, "doc_b")
-
-    cross = _side("rep_a", "rep_b").unionAll(_side("rep_b", "rep_a"))
-    # FULL-merge members re-rank their within rows together with the
-    # cross rows (ties can interleave); FILL members rank cross only.
-    full_within = (
-        flags.where(needs_full)
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            F.lit(True).alias("full"),
-            F.lit(k).cast("int").alias("quota"),
-            F.explode(F.slice("arr", F.col("idx") + 1, k)).alias("doc_b"),
-            F.lit(float(within_value)).alias(value_col),
-        )
-    )
-    cand = full_within.unionAll(cross)
-    merged = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= F.col("quota"))
-        .select("doc_a", "doc_b", value_col)
-    )
-    # direct already emitted within rows for FILL members (they are
-    # always in the top-k); merged must therefore EXCLUDE the within
-    # rows of full-merge members from direct — handled above by the
-    # ~full filter — and contributes: full members' complete top-k,
-    # fill members' cross fill.
-    return direct.unionAll(merged)
-
-
 @query("dedup_minhash_banded", oracle=_mh_oracle())
 def dedup_minhash_banded(spark, t):
     """Banded MinHash near-dup — the LSH tier, hash-proven.
@@ -2577,116 +2205,55 @@ def dedup_minhash_banded(spark, t):
     s^4; across 4 bands, recall = 1-(1-s^4)^4 (0.987 at s = 0.9 — see
     the recall pytest vs the exact quadratic twin).
 
-    **Exact-collapse-first (r13, sf10 rung catch)**: band and verify
-    only the min-doc_id representative of each md5(text) group, then
+    **Exact-collapse-first**: shingle, band and verify only the
+    representative of each clone group (:func:`collapse`), then
     expand rep pairs back to member pairs (:func:`_expand_rep_pairs`).
     The naive all-member form pulls two gram arrays through every
     candidate pair; on clone-heavy corpora that traffic is quadratic
-    in clone multiplicity and killed the sf10 rung (~10M pairs ×
-    ~2.4 KB of arrays each, GC death at 8-48 g heap), while reps stay
-    ~constant.  The DuckDB oracle keeps the naive form — the driver
-    hash-check is exactly the proof the two forms agree.
+    in clone multiplicity (~10M pairs × ~2.4 KB of arrays each at
+    500k docs in ~100-clone groups, GC death at 8-48 g heap), while
+    reps stay ~constant.  The DuckDB oracle keeps the naive form — the
+    driver hash-check is exactly the proof the two forms agree.  The
+    empty-gram ingest filter is evaluated on reps and reaches members
+    through a semi join: a group shares one text, hence one gram set,
+    and the naive form bands neither empty signatures nor NULL texts.
 
-    **Output-size bound (r14, r13 verdict ask #5)**: even with
-    collapse-first banding, the expanded MEMBER-pair list is quadratic
-    in clone multiplicity — the sf100 fixture made this diagnostic
-    key generate 1.13B pairs in 1122 s (sweeps/sf100_r13.log) for an
-    output no pipeline consumes (the production form is
-    dedup_minhash_verdicts, one row/doc).  Same treatment as
-    dedup_minhash_lsh (ask #8, r13): above
+    **Output-size bound**: even with collapse-first banding, the
+    expanded MEMBER-pair list is quadratic in clone multiplicity —
+    5M docs in ~1000-clone groups made this diagnostic key generate
+    1.13B pairs in 1122 s (sweeps/sf100_r13.log) for an output no
+    pipeline consumes (the production form is dedup_minhash_verdicts,
+    one row/doc).  Same treatment as dedup_minhash_lsh: above
     ``_LSH_EXACT_PAIRS_MAX_DOCS`` documents, emit per doc_a only the
     ``_LSH_PAIRS_PER_DOC`` MOST-similar neighbors (ngram_jaccard DESC,
-    doc_b tiebreak) — output linear in corpus size.  At fixture scales
-    (≤ the threshold) the pair list stays EXACT, and the oracle
-    applies the IDENTICAL conditional cap in SQL, so the driver
-    hash-check covers the capped form end-to-end at every sf.
+    doc_b tiebreak) — output linear in corpus size, generated without
+    ever enumerating the full pair mass.  At fixture scales (≤ the
+    threshold) the pair list stays EXACT, and the oracle applies the
+    IDENTICAL conditional cap in SQL, so the driver hash-check covers
+    the capped form end-to-end at every sf.
     """
-    d = (
-        t["documents"]
-        .where(F.col("lang") == "en")
-        .select(
-            "doc_id",
-            F.md5("text").alias("h"),
-            F.expr(_SPARK_SHINGLES).alias("g"),
-        )
-        # same population the naive form bands: _banded_candidate_pairs
-        # drops empty signatures, and an empty gram set can never pass
-        # the jac >= 0.7 verify (try_divide → NULL).  Filtering BEFORE
-        # the collapse also keeps NULL-text docs (md5 NULL) out of the
-        # group-by, so no NULL-keyed mega-group can form.
-        .where(F.size("g") > 0)
+    mem, reps = collapse(
+        t["documents"].where(F.col("lang") == "en").select("doc_id", "text")
     )
-    if t["documents"].count() <= _LSH_EXACT_PAIRS_MAX_DOCS:
-        # rep election as ONE window over the h exchange (not groupBy
-        # + joins back): the gram frame crosses a single hash exchange
-        # on h, and mem / g_rep are projections of the same shuffled
-        # frame — at sf0.1 this is ~2 s of the collapse tax back
-        from pyspark.sql import Window as _W
-
-        d = d.withColumn("rep_id", F.min("doc_id").over(_W.partitionBy("h")))
-        mem = d.select("doc_id", "rep_id")
-        g = d.where(F.col("doc_id") == F.col("rep_id")).select("doc_id", "g")
-        rep_pairs = _banded_gram_rep_pairs(g)
-        return _expand_rep_pairs(rep_pairs, mem, "ngram_jaccard", 1.0)
-    # --- scale path (above _LSH_EXACT_PAIRS_MAX_DOCS docs) ---
-    # Collapse BEFORE shingling: on clone-heavy corpora the shingle
-    # transform is the dominant per-doc cost and is byte-identical
-    # within an md5 group, so evaluate it once per DISTINCT text.  The
-    # groupBy carries the text via first() (all group members are
-    # byte-identical) with map-side partial aggregation — the exchange
-    # carries ~one text per distinct doc, not the corpus.  The empty-
-    # gram ingest filter is likewise evaluated on reps and propagated
-    # to members through the semi join (identical population: a group
-    # shares one text, hence one gram set).
-    base = t["documents"].where(F.col("lang") == "en").select(
-        "doc_id", "text"
-    ).where(F.col("text").isNotNull())
-    grp = base.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("rep_id"), F.first("text").alias("text")
+    g = reps.select(
+        F.col("rep_id").alias("doc_id"), F.expr(_SPARK_SHINGLES).alias("g")
+    ).where(F.size("g") > 0)
+    mem = mem.select("doc_id", "rep_id").join(
+        g.select(F.col("doc_id").alias("rep_id")), "rep_id", "left_semi"
     )
-    reps = (
-        grp.select("rep_id", F.expr(_SPARK_SHINGLES).alias("g"))
-        .where(F.size("g") > 0)
-    )
-    mem = (
-        base.select("doc_id", F.md5("text").alias("h"))
-        .join(grp.select("h", "rep_id"), "h")
-        .join(reps.select("rep_id"), "rep_id", "left_semi")
-        .select("doc_id", "rep_id")
-    )
-    rep_pairs = _banded_gram_rep_pairs(
-        reps.select(F.col("rep_id").alias("doc_id"), "g")
-    )
-    # bounded per-doc_a top-K sample (see docstring): ranked on the
-    # ROUNDED similarity DESC with doc_b tiebreak — generated without
-    # ever enumerating the clone-quadratic full pair mass
-    return _expand_rep_pairs_capped(
-        rep_pairs, mem, "ngram_jaccard", 1.0, _LSH_PAIRS_PER_DOC,
-        descending=True,
-    )
-
-
-def _banded_gram_rep_pairs(g):
-    """Verified rep-level near-dup pairs from a (doc_id, g) gram frame
-    — the shared banding/verify core of dedup_minhash_banded's two
-    scale branches.
-
-    n_salt=1: at rep level every bucket holds one row per DISTINCT
-    text, so the dense-bucket skew salting addresses cannot form —
-    clone multiplicity, the only unbounded density source, was removed
-    by the collapse (sf1 A/B r13: salt within noise either way; the
-    r12 60.3→87.9 s claim did not reproduce interleaved).
-    """
+    # n_salt=1: at rep level every bucket holds one row per DISTINCT
+    # text, so the dense-bucket skew salting addresses cannot form —
+    # clone multiplicity, the only unbounded density source, was
+    # removed by the collapse (sf1 A/B: salt within noise either way)
     cand = _banded_candidate_pairs(g, n_bands=_MH_BANDS, n_salt=1)
     ga = g.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("g_a"))
     gb = g.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g_b"))
     inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
     union = F.size(F.col("g_a")) + F.size(F.col("g_b")) - inter
-    # try_divide: an empty token/gram set (NULL or degenerate text)
-    # gives union 0 — DuckDB yields NULL and the threshold filter
-    # drops it; ANSI `/` would crash (r11 NULL-survey catch)
+    # try_divide: an empty gram set gives union 0 — DuckDB yields NULL
+    # and the threshold filter drops it; ANSI `/` would crash
     jac = F.try_divide(inter.cast("double"), union)
-    return (
+    rep_pairs = (
         cand.join(ga, "doc_a")
         .join(gb, "doc_b")
         .where(_size_ratio_ok(F.col("g_a"), F.col("g_b"), 7, 10) & (jac >= 0.7))
@@ -2695,6 +2262,12 @@ def _banded_gram_rep_pairs(g):
             F.col("doc_b").alias("rep_b"),
             F.round(jac, 6).alias("ngram_jaccard"),
         )
+    )
+    if t["documents"].count() <= _LSH_EXACT_PAIRS_MAX_DOCS:
+        return _expand_rep_pairs(rep_pairs, mem, "ngram_jaccard", 1.0)
+    return _expand_rep_pairs_capped(
+        rep_pairs, mem, "ngram_jaccard", 1.0, _LSH_PAIRS_PER_DOC,
+        descending=True,
     )
 
 
@@ -2923,13 +2496,12 @@ def dedup_incremental_minhash(spark, t):
     Corpus growth = appending the keep-set's band rows, exactly like
     the exact tier's hash set.
 
-    **Exact-collapse-first (r17; the sf10 bounded-oracle run timed
-    the member-level form at 809 s — band signatures are identical
-    across byte-identical clones, so the member candidate join was
-    quadratic in clone multiplicity, the exact failure mode the
-    verdict/banded tiers fixed in r13).**  Shingles, band values and
-    the exact-Jaccard verify are pure functions of the TEXT, so the
-    match predicate lives at md5(text)-group level and each batch
+    **Exact-collapse-first** (the member-level form took 809 s at
+    500k docs: band signatures are identical across byte-identical
+    clones, so the member candidate join was quadratic in clone
+    multiplicity).  Shingles, band values and the exact-Jaccard
+    verify are pure functions of the TEXT, so the match predicate
+    lives at clone-group level (:func:`collapse`) and each batch
     doc's flags reduce to group adjacency plus two group stats:
 
       dup_of_corpus(b) = some matched group (incl. b's own) holds a
@@ -2944,34 +2516,22 @@ def dedup_incremental_minhash(spark, t):
     (identical signatures collide in every band, jaccard exactly 1).
     NULL/short-text docs have empty shingle arrays in BOTH forms
     (banding drops them), so they emit flag-free batch rows exactly
-    as before; NULL-text groups get per-doc sentinel keys so no
-    window partition aggregates unrelated docs.  The registered
+    as before; each NULL-text doc is its own group, so no group
+    statistic aggregates unrelated docs.  The registered
     member-level oracle is unchanged — the driver hash check is a
     standing equivalence proof — and tools/bounded_oracle.py
     value-checks this form at sf10 (group-level bounded oracle,
     sweeps/sf10_r17_bounded_oracles.log).
     """
-    from pyspark.sql import Window
-
-    docs = t["documents"].where(F.col("lang") == "en")
-    h = F.coalesce(
-        F.md5("text"), F.concat(F.lit(":null:"), F.col("doc_id").cast("string"))
-    )
     is_new = (F.col("doc_id") % 10 == 0).cast("boolean")
-    w = Window.partitionBy("h")
     frame = (
-        docs.select(
-            "doc_id", h.alias("h"), is_new.alias("is_new"), "text"
-        )
-        .withColumn("rep_id", F.min("doc_id").over(w))
-        .withColumn(
-            "n_corpus",
-            F.sum(F.when(~F.col("is_new"), 1).otherwise(0)).over(w),
-        )
-        .withColumn(
-            "min_batch",
-            F.min(F.when(F.col("is_new"), F.col("doc_id"))).over(w),
-        )
+        collapse(
+            t["documents"]
+            .where(F.col("lang") == "en")
+            .select("doc_id", is_new.alias("is_new"), "text"),
+            n_corpus=F.sum(F.when(~F.col("is_new"), 1).otherwise(0)),
+            min_batch=F.min(F.when(F.col("is_new"), F.col("doc_id"))),
+        )[0]
         .select(
             "doc_id",
             "is_new",
@@ -3002,7 +2562,7 @@ def dedup_incremental_minhash(spark, t):
     a, b = banded.alias("a"), banded.alias("b")
     # rep <= rep: the self-pair (a band row matching itself) carries
     # the "identical texts always match" case; size_ratio 7/10 is the
-    # lossless jaccard>=0.7 set-size bound, applied in-join (r16 idiom)
+    # lossless jaccard>=0.7 set-size bound, applied in-join
     cand = (
         a.join(
             b,
@@ -3024,7 +2584,7 @@ def dedup_incremental_minhash(spark, t):
     inter = F.size(F.array_intersect(F.col("g_a"), F.col("g_b")))
     union = F.size(F.col("g_a")) + F.size(F.col("g_b")) - inter
     # try_divide: an empty gram set gives union 0 — cannot reach here
-    # (reps filters size > 0) but kept for the r11 NULL-survey posture
+    # (reps filters size > 0), and the filter stays NULL-safe if it did
     jac = F.try_divide(inter.cast("double"), union)
     vm = (
         cand.join(ga, "rep_a")
@@ -3108,13 +2668,13 @@ def dedup_containment(spark, t):
     At 100 TB: df table is one groupBy, prefixes shrink as τ grows,
     and hot grams never enter probes (rarest-first order).
 
-    **Exact-collapse-first (r13, same posture as the minhash/simhash
-    tiers)**: prefix-filter and verify only the min-doc_id md5(text)
-    representative of each exact-dup group, then expand rep pairs to
+    **Exact-collapse-first** (same posture as the minhash/simhash
+    tiers): prefix-filter and verify only the representative of each
+    clone group (:func:`collapse`), then expand rep pairs to
     member pairs (:func:`_expand_rep_pairs`, within-group containment
     ≡ 1.0).  Without it, clones share every prefix gram, so the
     inverted-index join is quadratic in clone multiplicity — the same
-    failure mode the sf10 rung caught in the simhash band join.
+    failure mode the simhash band join had at 500k docs.
     Completeness survives the collapse: the prefix theorem holds for
     ANY consistent global gram order, so computing df over reps
     instead of members only re-ranks the prefixes; the exact verify
@@ -3128,7 +2688,7 @@ def dedup_containment(spark, t):
         .where(F.col("lang") == "en")
         .select(
             "doc_id",
-            F.md5("text").alias("h"),
+            "text",
             F.array_distinct(
                 # sequence(1, 0) counts DOWN in Spark ([1, 0]), so texts
                 # shorter than 3 chars would emit spurious grams the
@@ -3145,15 +2705,12 @@ def dedup_containment(spark, t):
         # empty-gram docs can never appear in the naive form's output
         # (no inverted-index rows → never a candidate) — filtering
         # them BEFORE the collapse keeps _expand_rep_pairs from
-        # fabricating within-group pairs the oracle never emits, and
-        # keeps NULL text (md5 NULL) out of the group-by
+        # fabricating within-group pairs the oracle never emits
         .where(F.size("g") > 0)
     )
-    docs = docs.withColumn(
-        "rep_id", F.min("doc_id").over(Window.partitionBy("h"))
-    )
-    mem = docs.select("doc_id", "rep_id")
-    rd = docs.where(F.col("doc_id") == F.col("rep_id")).select("doc_id", "g")
+    mem, reps = collapse(docs)
+    mem = mem.select("doc_id", "rep_id")
+    rd = reps.select("doc_id", "g")
     grams = rd.select(
         "doc_id", F.size("g").alias("n"), F.explode("g").alias("gram")
     )

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from tweetdb_spark import guards
+from tweetdb_spark.llm.collapse import collapse
 from tweetdb_spark.registry import query
 
 # Static sentiment lexicon over the fixture vocabulary (an engine
@@ -67,25 +68,21 @@ def text_tf_idf(spark, t):
     joined in as a 1-row broadcast aggregate (never a driver-side
     collect).  Final per-lang top-k via window rank.
 
-    Exact-collapse-first (r13 sf100 rung): tokenize once per DISTINCT
-    (md5(text), lang) group — the group size re-weights both df (sz
-    docs contain each of the group's tokens) and the score sum
-    (sz · tf · idf).  At fixture scales every group has sz = 1, so
-    the scored expression is LITERALLY the per-doc one and the hash
-    evidence is unchanged; at 5M docs (×1000 clones) the token
-    explode shrinks a thousandfold.  Grouping includes lang so
-    same-text-different-lang docs stay distinct rows, clone or not.
+    Exact-collapse-first: tokenize once per clone group
+    (:func:`collapse`), then weight by the member count sz of each
+    (group, lang) pair — sz docs contain each of the group's tokens
+    in df, and add sz · tf · idf to the score.  At fixture scales
+    every sz is 1, so the scored expression is LITERALLY the per-doc
+    one; at 5M docs (×1000 clones) the token explode shrinks a
+    thousandfold.
     """
-    grp = (
-        t["documents"]
-        .groupBy(F.md5("text").alias("h"), "lang")
-        .agg(F.count("*").alias("sz"), F.first("text").alias("text"))
-    )
-    tok = grp.select(
-        "h", "lang", "sz", F.explode(F.split("text", " ")).alias("token")
-    )
-    tf = tok.groupBy("h", "lang", "sz", "token").agg(
-        F.count("*").alias("tf")
+    mem, reps = collapse(t["documents"].select("doc_id", "lang", "text"))
+    sz = mem.groupBy("h", "lang").agg(F.count("*").alias("sz"))
+    tf = (
+        reps.select("h", F.explode(F.split("text", " ")).alias("token"))
+        .groupBy("h", "token")
+        .agg(F.count("*").alias("tf"))
+        .join(sz, "h")
     )
     df = tf.groupBy("token").agg(F.sum("sz").alias("df"))
     n = t["documents"].agg(F.count("*").alias("n_docs"))
@@ -94,7 +91,7 @@ def text_tf_idf(spark, t):
         .crossJoin(F.broadcast(n))
         .groupBy("lang", "token")
         .agg(
-            # Known FP-order risk (ADVICE r13): at clone scale
+            # Known FP-order risk: at clone scale
             # (sz > 1) the single `sz * tf * idf` multiply is not
             # bit-identical to the oracle's per-doc repeated
             # addition; ROUND(..,4) absorbs the ulp drift except
@@ -209,31 +206,21 @@ def doc_fingerprint(spark, t):
     addressed dedup key; at 100 TB the fingerprint is what you
     shuffle, never the text.
 
-    Exact-collapse-first (r13 sf100 rung): the per-char fold runs
-    once per DISTINCT text (md5 group), not per clone — 475.8 s of
-    interpreted HOF folding at 5M docs became rep-sized.  The md5
-    groupBy combines map-side (one text per distinct hash leaves each
-    map partition), min(doc_id)-per-group = the group's keep
-    candidate, and n_docs re-weights by group size; NULL texts form
-    one md5 group whose NULL fingerprint matches the old per-doc NULL
-    prints.  Oracle unchanged (the exact per-doc query).
+    Exact-collapse-first: the per-char fold runs once per clone group
+    (:func:`collapse`), not per clone — 475.8 s of interpreted HOF
+    folding at 5M docs became rep-sized.  The rep is its group's
+    keep candidate and n_docs re-weights by group size; the NULL
+    texts' singleton groups all print NULL and merge again here.
+    Oracle unchanged (the exact per-doc query).
     """
-    grp = (
-        t["documents"]
-        .groupBy(F.md5("text").alias("h"))
-        .agg(
-            F.min("doc_id").alias("rep_id"),
-            F.count("*").alias("sz"),
-            F.first("text").alias("text"),  # members share text by h
-        )
-    )
     fp = F.expr(_SPARK_WHASH.format(s="text"))
     return (
-        grp.select(fp.alias("fingerprint"), "rep_id", "sz")
+        collapse(t["documents"].select("doc_id", "text"))[1]
+        .select(fp.alias("fingerprint"), "doc_id", "n_docs")
         .groupBy("fingerprint")
         .agg(
-            F.min("rep_id").alias("keep_doc_id"),
-            F.sum("sz").alias("n_docs"),
+            F.min("doc_id").alias("keep_doc_id"),
+            F.sum("n_docs").alias("n_docs"),
         )
     )
 
@@ -286,41 +273,30 @@ def text_lang_id(spark, t):
     'und'.  The profile table is the tweet-era keyword-list pattern;
     swap in learned character-n-gram profiles for real corpora.
     """
-    from pyspark.sql import Window as _W
-
     profile = F.broadcast(
         spark.createDataFrame(
             [(w, lang) for lang, ws in LANG_PROFILES.items() for w in ws],
             "token string, plang string",
         )
     )
-    # Exact-collapse-first (r16, sf100 rung: this was the heaviest
-    # line at 25.8s): (pred_lang, score) is a pure function of the
-    # token multiset, so explode/score only the min-doc_id md5(text)
+    # Exact-collapse-first: (pred_lang, score) is a pure function of
+    # the token multiset, so explode/score only each clone group's
     # representative (~#distinct texts) and map the verdict back to
     # every member — the per-member form pushed 250M exploded tokens
-    # through the profile join at sf100 for ~5k distinct texts.
-    # NULL-text docs group under h = NULL, their rep explodes to zero
-    # tokens, the rep never scores, and the left join's coalesce
-    # yields ('und', 0) — exactly the rows the per-member form
-    # produced for them.  Same argument and shape as
-    # _simhash_fingerprints (llm/dedup.py).
-    docs = t["documents"].select(
-        "doc_id", F.md5("text").alias("h"), "text"
-    ).withColumn("rep_id", F.min("doc_id").over(_W.partitionBy("h")))
-    reps = docs.where(F.col("doc_id") == F.col("rep_id")).select(
-        F.col("doc_id").alias("rid"), "text"
-    )
-    tok = reps.select(
-        "rid", F.explode(F.split("text", " ")).alias("token")
-    )
+    # through the profile join at 5M docs for ~5k distinct texts.
+    # NULL-text reps explode to zero tokens and never score, and the
+    # left join's coalesce yields ('und', 0) — exactly the rows the
+    # per-member form produced for them.
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
+    reps = reps.select(F.col("doc_id").alias("rid"), "text")
+    tok = reps.select("rid", F.explode(F.split("text", " ")).alias("token"))
     scores = tok.join(profile, "token").groupBy("rid", "plang").agg(
         F.count("*").alias("score")
     )
     w = Window.partitionBy("rid").orderBy(F.col("score").desc(), F.col("plang"))
     best = scores.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
     return (
-        docs.select("doc_id", F.col("rep_id").alias("rid"))
+        mem.select("doc_id", F.col("rep_id").alias("rid"))
         .join(best, "rid", "left")
         .select(
             "doc_id",
@@ -366,23 +342,16 @@ def text_quality(spark, t):
     engines — no rounding discipline needed), and the final gate is a
     boolean conjunction of range checks.
     """
-    from pyspark.sql import Window as _W
-
-    # Exact-collapse-first (r16, with text_lang_id): the token stats
-    # are pure functions of the text, so explode/aggregate only the
-    # min-doc_id md5(text) representative and join the group stats
-    # back to every member — each member still contributes its OWN
-    # n_chars to avg_token_len, so the collapse is exact even if a
-    # clone's n_chars column disagreed with its text.  NULL-text docs
-    # explode to zero rows in the per-member form and are dropped by
-    # its inner join; here their rep has no stats row and the inner
-    # join on rep_id drops the same members.
-    docs = t["documents"].select(
-        "doc_id", F.md5("text").alias("h"), "text", "n_chars"
-    ).withColumn("rep_id", F.min("doc_id").over(_W.partitionBy("h")))
-    reps = docs.where(F.col("doc_id") == F.col("rep_id")).select(
-        F.col("doc_id").alias("rid"), "text"
-    )
+    # Exact-collapse-first: the token stats are pure functions of the
+    # text, so explode/aggregate only each clone group's
+    # representative and join the group stats back to every member —
+    # each member still contributes its OWN n_chars to avg_token_len,
+    # so the collapse is exact even if a clone's n_chars column
+    # disagreed with its text.  NULL-text reps explode to zero rows,
+    # have no stats row, and the inner join drops their members, as
+    # the per-member form's inner join does.
+    mem, reps = collapse(t["documents"].select("doc_id", "text", "n_chars"))
+    reps = reps.select(F.col("doc_id").alias("rid"), "text")
     tok = reps.select("rid", F.explode(F.split("text", " ")).alias("token"))
     stats = tok.groupBy("rid").agg(
         F.count("*").alias("n_tokens"),
@@ -392,7 +361,7 @@ def text_quality(spark, t):
     nt = F.col("n_tokens")
     distinct_ratio = F.col("n_distinct").cast("double") / nt
     return (
-        docs.select("doc_id", "n_chars", F.col("rep_id").alias("rid"))
+        mem.select("doc_id", "n_chars", F.col("rep_id").alias("rid"))
         .join(stats, "rid")
         .select(
             "doc_id",
@@ -740,32 +709,22 @@ def text_dup_ngram_fraction(spark, t):
     both sides: DuckDB's ``range`` and the guarded Spark ``sequence``
     are both empty there).
     """
-    # Exact-collapse-first (r13 sf100 rung): grams are a pure function
-    # of text, and the doc-frequency table re-weights by md5-group
-    # size (a clone group of sz ≥ 2 makes every one of its grams
-    # df ≥ 2 — exactly what the per-doc form computed).  Gram
-    # explode + df shuffle run once per DISTINCT text; the per-doc
-    # answer expands back over the member map.  470.7 s → rep-sized
-    # at 5M docs.  Oracle unchanged (the exact per-doc query).
-    from pyspark.sql import Window as _W
-
+    # Exact-collapse-first: grams are a pure function of text, and the
+    # doc-frequency table re-weights by clone-group size (a group of
+    # n_docs ≥ 2 makes every one of its grams df ≥ 2 — exactly what
+    # the per-doc form computed).  Gram explode + df shuffle run once
+    # per clone group; the per-doc answer expands back over the
+    # member map.  470.7 s → rep-sized at 5M docs.  Oracle unchanged
+    # (the exact per-doc query).
     grams = F.expr(
         "CASE WHEN size(split(text, ' ')) >= 5 THEN "
         "array_distinct(transform(sequence(1, size(split(text, ' ')) - 4), "
         "i -> array_join(slice(split(text, ' '), i, 5), ' '))) "
         "ELSE array() END"
     )
-    d = t["documents"].withColumn("h", F.md5("text")).withColumn(
-        "rep_id", F.min("doc_id").over(_W.partitionBy("h"))
-    )
-    mem = d.select("doc_id", "rep_id")
-    sized = d.groupBy("rep_id").agg(
-        F.count("*").alias("sz"), F.first("text").alias("text")
-    )
-    dg = sized.select(
-        "rep_id", "sz", F.explode(grams).alias("gram")
-    )
-    df_gram = dg.groupBy("gram").agg(F.sum("sz").alias("df"))
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
+    dg = reps.select("rep_id", "n_docs", F.explode(grams).alias("gram"))
+    df_gram = dg.groupBy("gram").agg(F.sum("n_docs").alias("df"))
     rep_frac = (
         dg.join(df_gram, "gram")
         .groupBy("rep_id")
@@ -924,16 +883,15 @@ def text_segment_dedup(spark, t):
     empty strings, shared headers/footers vanish while unique prose
     survives.
 
-    **Collapse-first + hashed df pass (r15, r14 verdict ask #4)**:
-    the r14 form tokenized/segmented every MEMBER doc and shuffled
-    full segment strings three times (df aggregation, flag join,
-    rebuild) — 81.2 s at the sf100 rung, pure clone-multiplied
-    segment mass (5M docs × ~60 segs ≈ 300M string-carrying rows per
-    exchange for a corpus with only ~5k distinct texts).  Exact
-    clones contribute identical segment sets, so: collapse to one
-    REPRESENTATIVE per md5(text) group first (the dedup-family
-    posture), segment only reps, and weight the df aggregation by
-    group size — df(seg) = Σ n_docs over the DISTINCT texts
+    **Collapse-first + hashed df pass**: the per-member form
+    tokenized/segmented every MEMBER doc and shuffled full segment
+    strings three times (df aggregation, flag join, rebuild) — 81.2 s
+    at 5M docs, pure clone-multiplied segment mass (~300M
+    string-carrying rows per exchange for a corpus with only ~5k
+    distinct texts).  Exact clones contribute identical segment sets,
+    so: collapse to one REPRESENTATIVE per clone group first
+    (:func:`collapse`), segment only reps, and weight the df
+    aggregation by group size — df(seg) = Σ n_docs over the DISTINCT texts
     containing seg, which is exactly count(DISTINCT doc_id) of the
     naive form.  The df shuffle carries xxhash64(segment) ids
     instead of segment strings (the text_decontaminate trick; same
@@ -950,18 +908,12 @@ def text_segment_dedup(spark, t):
         "i -> struct(i AS pos, "
         "array_join(slice(split(text, ' '), i * 8 + 1, 8), ' ') AS seg))"
     )
-    base = t["documents"].select("doc_id", "text")
-    grp = base.groupBy(F.md5("text").alias("h")).agg(
-        F.min("doc_id").alias("rep_id"),
-        F.count("*").alias("n_docs"),
-        F.first("text").alias("text"),
-    )
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
     # the size(split)>0 rep filter reproduces the naive form's member
     # filter exactly: every member of a group shares one text, hence
-    # one token count; NULL-text docs (md5 NULL ⇒ h NULL) drop here
-    # AND out of the member equi-join below — same population either
-    # way
-    reps = grp.where(F.size(F.split("text", " ")) > 0)
+    # one token count; NULL-text reps drop here, and their members
+    # with them at the per_rep join below
+    reps = reps.where(F.size(F.split("text", " ")) > 0)
     segs = (
         reps.select("rep_id", "n_docs", F.explode(segs_expr).alias("s"))
         .select(
@@ -992,9 +944,6 @@ def text_segment_dedup(spark, t):
         ).alias("clean_text"),
         F.count("*").alias("n_segs"),
         F.sum(F.when(F.col("kept"), 0).otherwise(1)).alias("n_dropped"),
-    )
-    mem = base.select("doc_id", F.md5("text").alias("h")).join(
-        grp.select("h", "rep_id"), "h"
     )
     return mem.join(per_rep, "rep_id").select(
         "doc_id", "clean_text", "n_segs", "n_dropped"
@@ -2505,23 +2454,21 @@ def text_decontaminate_bloom(spark, t):
     pins the exact FINAL answer — so the cheap hash wins (the
     portable per-char hash cost 2.6× on the sf0.1 ladder).
 
-    **Exact-collapse-first on each side of the %7 split (r13 sf100
-    rung)**: clone replicas share text, hence grams, hence n_shared —
-    but the bench/training split cuts ACROSS clone groups (a group's
+    **Exact-collapse-first on each side of the %7 split**: clone
+    replicas share text, hence grams, hence n_shared — but the
+    bench/training split cuts ACROSS clone groups (a group's
     members differ in doc_id % 7), so each side collapses
     independently: the bench side only ever needed its DISTINCT gram
     set (distinct TEXTS first, then grams — same set, 1000× fewer
     exploded rows on the clone fixture), and the training side
-    probes/joins one md5(text) representative, expanding (rep,
-    n_shared) back to members as a narrow join.  At sf100 (5M docs)
-    the uncollapsed form exploded ~1.5B grams through four semi
-    probes — 1180 s, one decade from the watchdog; dedup-before-
+    probes/joins one representative per clone group
+    (:func:`collapse`), expanding (rep, n_shared) back to members as a
+    narrow join.  At 5M docs the uncollapsed form exploded ~1.5B grams
+    through four semi probes — 1180 s, one decade from the watchdog; dedup-before-
     expensive-work is also just what a production pipeline does.
     The oracle stays the EXACT uncollapsed query, so the equivalence
     is value-hash-checked every round.
     """
-    from pyspark.sql import Window as _W
-
     docs = t["documents"].select("doc_id", "text")
     bench_g = (
         docs.where(F.col("doc_id") % 7 == 0)
@@ -2530,17 +2477,9 @@ def text_decontaminate_bloom(spark, t):
         .select(F.explode(F.expr(_GRAMS_EXPR)).alias("gram"))
         .distinct()
     )
-    train = docs.where(F.col("doc_id") % 7 != 0).withColumn(
-        "h", F.md5("text")
-    )
-    train = train.withColumn(
-        "rep_id", F.min("doc_id").over(_W.partitionBy("h"))
-    )
-    mem = train.select("doc_id", "rep_id")
-    rep_g = (
-        train.where(F.col("doc_id") == F.col("rep_id"))
-        .select(F.col("doc_id").alias("rep_id"), F.expr(_GRAMS_EXPR).alias("grams"))
-    )
+    mem, reps = collapse(docs.where(F.col("doc_id") % 7 != 0))
+    mem = mem.select("doc_id", "rep_id")
+    rep_g = reps.select("rep_id", F.expr(_GRAMS_EXPR).alias("grams"))
     positions = _bloom_positions(F.col("gram"))
     hits = rep_g.select(
         "rep_id", F.explode("grams").alias("gram")

@@ -438,7 +438,7 @@ def fn_levenshtein_blocked(spark, t):
         # catch): 142k rep pairs expand to 1.4B member pairs; without
         # the round-robin shuffle the whole expansion inherits the ~1
         # AQE-coalesced input partition and runs in one task (see
-        # llm/dedup.py _expand_rep_pairs for the full reasoning)
+        # llm/collapse.py _expand_rep_pairs for the full reasoning)
         rep_pairs.repartition(
             rep_pairs.sparkSession.sparkContext.defaultParallelism
         )

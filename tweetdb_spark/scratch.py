@@ -54,15 +54,19 @@ def session_token(spark) -> str:
 _DERIVED: dict[tuple[str, str, tuple[str, ...]], tuple] = {}
 
 
-def fingerprint(paths) -> tuple:
+def fingerprint(paths) -> tuple | None:
     """``(path, size, mtime_ns)`` of every file under each path (a file
     or a dir) from ``os.stat``, not ``inputFiles()`` (a DataFrame's
-    listing is frozen when it is created).  Missing paths add nothing."""
+    listing is frozen when it is created).  ``None`` when some path
+    lists no local file — a URI (``file:``, ``hdfs://``, ``s3a://``) or
+    a missing path — since nothing then shows that it changed."""
     out = []
     for p in paths:
         files = [p] if os.path.isfile(p) else sorted(
             os.path.join(d, f) for d, _, fs in os.walk(p) for f in fs
         )
+        if not files:
+            return None
         for f in files:
             st = os.stat(f)
             out.append((f, st.st_size, st.st_mtime_ns))
@@ -76,7 +80,8 @@ def derived(spark, name: str, sources, build):
     are keyed on (session token, ``name``, source paths).  A hit needs
     an unchanged source :func:`fingerprint` and every dir (and table)
     the build made still present; a miss drops the stale entry's tables
-    and dirs, then builds.  ``out(kind)`` gives the build a fresh dir
+    and dirs, then builds.  A source without a fingerprint is built on
+    every call and never served from the cache.  ``out(kind)`` gives the build a fresh dir
     prefixed ``<kind>_<session>_<hash of the source paths>``, so a
     rebuild reaps only its own entry's dirs, never another corpus's or
     session's.  ``out(kind, table=True)`` also hands the entry the
@@ -90,7 +95,8 @@ def derived(spark, name: str, sources, build):
     if key in _DERIVED:
         old_fp, dirs, tables, value = _DERIVED[key]
         if (
-            old_fp == fp
+            fp is not None
+            and old_fp == fp
             and all(map(os.path.exists, dirs))
             and all(map(spark.catalog.tableExists, tables))
         ):
