@@ -2213,7 +2213,7 @@ def dedup_minhash_banded(spark, t):
     in clone multiplicity (~10M pairs × ~2.4 KB of arrays each at
     500k docs in ~100-clone groups, GC death at 8-48 g heap), while
     reps stay ~constant.  The DuckDB oracle keeps the naive form — the
-    driver hash-check is exactly the proof the two forms agree.  The
+    oracle hash-check is exactly the proof the two forms agree.  The
     empty-gram ingest filter is evaluated on reps and reaches members
     through a semi join: a group shares one text, hence one gram set,
     and the naive form bands neither empty signatures nor NULL texts.
@@ -2229,7 +2229,7 @@ def dedup_minhash_banded(spark, t):
     doc_b tiebreak) — output linear in corpus size, generated without
     ever enumerating the full pair mass.  At fixture scales (≤ the
     threshold) the pair list stays EXACT, and the oracle applies the
-    IDENTICAL conditional cap in SQL, so the driver hash-check covers
+    IDENTICAL conditional cap in SQL, so the oracle hash-check covers
     the capped form end-to-end at every sf.
     """
     mem, reps = collapse(
