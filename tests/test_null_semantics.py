@@ -294,3 +294,41 @@ def test_collapse_null_rule_parity(spark, tmp_path):
             i, True, i, "kept"
         )
     assert {verdicts[i].component_id for i in (3, 5, 6)} == {3}
+
+
+# (vec_id, embedding): three ordinary vectors, an all-zero vector and
+# an empty one.  The values are small dyadic rationals, so every
+# product and sum is exact on both engines.  In the "equal" corpus the
+# ordinary vectors are cyclic shifts with one cosine to the mean, so
+# the scores' stddev is 0.
+OUTLIER_VECS = {
+    "distinct": [[1.0, 0.0, 0.5, 0.25], [0.5, 1.0, 0.0, 0.0], [0.0, 0.5, 1.0, 0.75]],
+    "equal": [[1.0, 0.0, 0.5, 0.25], [0.5, 1.0, 0.0, 0.25], [0.0, 0.5, 1.0, 0.25]],
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(OUTLIER_VECS))
+def test_embed_outlier_mean_zero_and_empty_vector_parity(spark, tmp_path, corpus):
+    """A vector with no direction has a NULL cosine to the mean and a
+    NULL z-score on both engines: the all-zero vector must not raise
+    DIVIDE_BY_ZERO, and the empty one stays NULL.  Equal scores give a
+    NULL z, not a crash."""
+    from tweetdb_spark.llm.similarity import embed_outlier_mean
+
+    vecs = OUTLIER_VECS[corpus] + [[0.0] * 4, []]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(vecs, 1)],
+        "vec_id long, embedding array<float>, label int",
+    ).coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    fixture = ({"embeddings": spark.read.parquet(path)}, con)
+    rows = _parity("embed_outlier_mean", embed_outlier_mean, fixture, spark)
+    rows = {r[0]: r for r in rows}
+    assert rows[4][1:] == (None, None, None)
+    assert rows[5][1:] == (None, None, None)
+    assert all(rows[i][1] is not None for i in (1, 2, 3))
+    assert all((rows[i][2] is None) == (corpus == "equal") for i in (1, 2, 3))

@@ -63,13 +63,14 @@ def test_cosine_self_similarity_is_1(spark, registry):
     from pyspark.sql import functions as F
 
     from tweetdb_spark.catalog import load_tables
-    from tweetdb_spark.llm.similarity import dot, l2_norm
+    from tweetdb_spark.llm.similarity import cosine, dot, with_norm
 
     t = load_tables(spark, SF_DIR)
-    e = t["embeddings"].limit(20)
+    e = with_norm(t["embeddings"].limit(20))
     rows = e.select(
-        (dot(F.col("embedding"), F.col("embedding"))
-         / (l2_norm(F.col("embedding")) * l2_norm(F.col("embedding")))).alias("c")
+        cosine(
+            dot(F.col("embedding"), F.col("embedding")), F.col("norm"), F.col("norm")
+        ).alias("c")
     ).collect()
     for r in rows:
         assert abs(r.c - 1.0) < 1e-12

@@ -142,6 +142,18 @@ def test_derby_log_never_lands_in_cwd(spark):
     )
 
 
+def test_derby_home_is_a_reaped_scratch_dir(spark):
+    """The pinned Derby home is this process's pid-tagged scratch dir,
+    so ``scratch`` reaps it once the process is gone."""
+    import os
+
+    from tweetdb_spark import scratch
+
+    home = spark._jvm.java.lang.System.getProperty("derby.system.home")
+    assert home in scratch.own_dirs("tweetdb_derby_home"), home
+    assert os.path.isdir(home)
+
+
 def test_sink_jdbc_sqlite_fallback_matches_batch(registry, spark, tables):
     """The SQLite fallback branch stays green even while the container
     has Derby (the gate would otherwise be the only thing exercising

@@ -26,6 +26,7 @@ COALESCE, events_sliding NULL-ts window group.
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -210,6 +211,8 @@ def main() -> int:
     finally:
         cat.load_tables = orig
         reg.load_tables = orig
+        con.close()
+        shutil.rmtree(out_dir, ignore_errors=True)
     print(f"# totals: {counts}")
     return 0
 

@@ -525,7 +525,7 @@ def dedup_embedding_cosine(spark, t):
     Size-guarded: refuses >50k vectors.
     """
     from tweetdb_spark.guards import exact_twin_input
-    from tweetdb_spark.llm.similarity import dot, with_norm
+    from tweetdb_spark.llm.similarity import cosine, dot, with_norm
 
     n = with_norm(
         exact_twin_input(
@@ -533,9 +533,10 @@ def dedup_embedding_cosine(spark, t):
         )
     ).select("vec_id", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
-    cos = F.try_divide(
+    cos = cosine(
         dot(F.col("a.embedding"), F.col("b.embedding")),
-        F.col("a.norm") * F.col("b.norm"),
+        F.col("a.norm"),
+        F.col("b.norm"),
     )
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))

@@ -1,10 +1,16 @@
 """Similarity-search / embedding operators (SURVEY.md §2.10, L4, L5, L9).
 
 All vector math runs JVM-side via higher-order functions
-(``zip_with`` + ``aggregate``) — no Python in the loop, stays inside
-Tungsten.  float32 elements are widened to float64 *before* any
-arithmetic, and sums accumulate left-to-right, mirroring DuckDB's
-``list_sum`` order so raw doubles agree bit-for-bit.
+(``zip_with`` + ``aggregate``, evaluated interpreted, outside
+whole-stage codegen) — no Python in the loop.  float32 elements are
+widened to float64 *before* any arithmetic, and sums accumulate
+left-to-right, mirroring DuckDB's ``list_sum`` order so raw doubles
+agree bit-for-bit.
+
+Every score is :func:`cosine` over a :func:`dot` and two norms the
+frames already carry: :func:`with_norm` stores each vector's norm once,
+on the corpus side and on the one- or Q-row query side, so no norm is
+computed per pair.
 
 Scale story: brute-force cosine is O(N·d) per query — fine to ~10⁷
 vectors per executor-core batch.  Past that, bucket with LSH (random
@@ -41,24 +47,49 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity with SQL-NULL zero-norm semantics: an empty or
-    all-zero vector has no direction, so its cosine is NULL — exactly
-    what DuckDB's x/0 yields; Spark's ANSI `/` would crash instead
-    (r11 empty-value survey).  Downstream thresholds/ranks then drop
-    the row identically on both engines."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+def with_norm(df: DataFrame) -> DataFrame:
+    """``df`` plus ``norm``, the L2 norm of its ``embedding``: the one
+    place a norm is computed, once per vector."""
+    return df.withColumn("norm", l2_norm(F.col("embedding")))
 
 
-def with_norm(df: DataFrame, vec: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", l2_norm(F.col(vec)))
+def cosine(d: Column, na: Column, nb: Column) -> Column:
+    """Cosine of a dot product ``d`` and the two vectors' norms, with
+    SQL-NULL zero-norm semantics: an empty or all-zero vector has no
+    direction, so its cosine is NULL — exactly what DuckDB's x/0
+    yields; Spark's ANSI `/` would crash instead.  Downstream
+    thresholds/ranks then drop the row identically on both engines.
+    ``na * nb`` is the product the oracles divide by (IEEE
+    multiplication is commutative, so operand order is immaterial)."""
+    return F.try_divide(d, na * nb)
+
+
+def _queries(n: DataFrame, where: Column) -> DataFrame:
+    """The query vectors of the normed frame ``n`` selected by ``where``,
+    as a broadcast frame ``(q_id, qv, qnorm)``: a query *parameter*,
+    not data."""
+    return F.broadcast(
+        n.where(where).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("qv"),
+            F.col("norm").alias("qnorm"),
+        )
+    )
+
+
+def _query_cos() -> Column:
+    """Exact cosine of a corpus row (``embedding``, ``norm``) against
+    the query (``qv``, ``qnorm``) it is joined to, rounded to 6."""
+    return F.round(
+        cosine(dot(F.col("embedding"), F.col("qv")), F.col("norm"), F.col("qnorm")),
+        6,
+    )
 
 
 # DuckDB-side mirror of dot(): identical association order.
 # CASE/COALESCE mirror Spark's fold-from-0.0 exactly: an EMPTY vector
 # has norm 0 (list_sum([]) is NULL in DuckDB, but Spark's aggregate
-# starts at 0.0), while a NULL vector has norm NULL on both engines
-# (r11 empty-value survey).
+# starts at 0.0), while a NULL vector has norm NULL on both engines.
 _DUCK_NORM = (
     "(CASE WHEN {v} IS NULL THEN NULL ELSE sqrt(COALESCE("
     "list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 0)) END)"
@@ -90,19 +121,11 @@ def sim_topk_cosine(spark, t):
     *parameter*, not data).  Scoring is a narrow map over embeddings —
     no shuffle; TakeOrderedAndProject merges per-partition top-10s.
     """
-    e = t["embeddings"]
-    q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
+    n = with_norm(t["embeddings"])
     scored = (
-        e.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(
-                cosine(F.col("embedding"), F.col("qv")),
-                6,
-            ).alias("cos_sim"),
-        )
+        n.where(F.col("vec_id") != 0)
+        .crossJoin(_queries(n, F.col("vec_id") == 0))
+        .select("vec_id", "label", _query_cos().alias("cos_sim"))
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(10)
 
@@ -146,22 +169,11 @@ def sim_topk_cosine_batch(spark, t):
     """
     from pyspark.sql.window import Window
 
-    e = t["embeddings"]
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
+    n = with_norm(t["embeddings"])
     scored = (
-        e.where(F.col("vec_id") >= 5)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            F.round(
-                cosine(F.col("embedding"), F.col("qv")),
-                6,
-            ).alias("cos_sim"),
-        )
+        n.where(F.col("vec_id") >= 5)
+        .crossJoin(_queries(n, F.col("vec_id") < 5))
+        .select("q_id", "vec_id", "label", _query_cos().alias("cos_sim"))
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id")
@@ -206,9 +218,10 @@ def sim_pairwise_label(spark, t):
         )
     ).select("vec_id", "label", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
-    cos = F.try_divide(
+    cos = cosine(
         dot(F.col("a.embedding"), F.col("b.embedding")),
-        F.col("a.norm") * F.col("b.norm"),
+        F.col("a.norm"),
+        F.col("b.norm"),
     )
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -218,9 +231,8 @@ def sim_pairwise_label(spark, t):
         .agg(
             F.count("*").alias("n_pairs"),
             # "+ 0" absorbs IEEE -0.0 (a near-zero mean can round to
-            # -0.0 on one engine and +0.0 on the other — caught by the
-            # r9 sf0.001 strict sweep; the established analytics.py
-            # parity rule)
+            # -0.0 on one engine and +0.0 on the other; the
+            # established analytics.py parity rule)
             (F.round(F.avg(cos), 3) + F.lit(0.0)).alias("mean_cos"),
         )
     )
@@ -254,29 +266,27 @@ def ensure_ivf_index(spark, t) -> tuple[str, str]:
 def _build_ivf_index(spark, t, out) -> tuple[str, str]:
     import numpy as np
 
-    # degenerate-vector ingest filter (r12, rows-only edge survey): a
-    # NULL or empty embedding would crash quantizer training and can
-    # never be a meaningful neighbor anyway (its cosine is NULL in the
-    # exact twin, sorted last) — drop it from the index, mirroring the
-    # exact tier's effective semantics.  Also keeps the PQ tier clean:
-    # ensure_pq_index trains/encodes over THIS table's residuals.
+    # degenerate-vector ingest filter: a NULL or empty embedding would
+    # crash quantizer training and can never be a meaningful neighbor
+    # anyway (its cosine is NULL in the exact twin, sorted last) — drop
+    # it from the index, mirroring the exact tier's effective
+    # semantics.  Also keeps the PQ tier clean: ensure_pq_index
+    # trains/encodes over THIS table's residuals.
     e = _valid_embeddings(t["embeddings"])
-    # Coarse quantizer trained driver-side on a BOUNDED seeded sample
-    # (r15, same change dedup_semantic_blocked got and for the same
-    # two reasons, sweeps/ab_r15_semantic_cap.log): the r14 MLlib fit
-    # ran over the FULL corpus (2M vectors at the sf100 rung — the
-    # dominant share of the 45 s index build) and was run-to-run
-    # nondeterministic (treeAggregate arrival-order float reductions),
-    # which is exactly the variance class that cost the r13/r14
-    # sim_ann_ivf bench adjudications.  faiss-style train-on-sample:
-    # ~100 vectors/centroid, constant in corpus size; seeded numpy
-    # Lloyd is byte-stable.  The cell ASSIGNMENT pass stays
-    # distributed (Arrow-batched argmin against the broadcast centers
-    # — one BLAS product per batch, no ml.Vector conversion).
+    # Coarse quantizer trained driver-side on a BOUNDED seeded sample,
+    # as dedup_semantic_blocked does and for the same two reasons
+    # (sweeps/ab_r15_semantic_cap.log): a fit over the FULL corpus was
+    # the dominant share of the index build (45 s at 2M vectors) and
+    # run-to-run nondeterministic (treeAggregate arrival-order float
+    # reductions).  faiss-style train-on-sample: ~100 vectors/centroid,
+    # constant in corpus size; seeded numpy Lloyd is byte-stable.  The
+    # cell ASSIGNMENT pass stays distributed (Arrow-batched argmin
+    # against the broadcast centers — one BLAS product per batch, no
+    # ml.Vector conversion).
     n_valid = e.count()
-    # Explicit empty-input error (r16 ADVICE): zero valid embeddings
-    # would otherwise surface as an opaque np.stack ValueError ("need
-    # at least one array to stack") from the driver-side fit.
+    # Explicit empty-input error: zero valid embeddings would otherwise
+    # surface as an opaque np.stack ValueError ("need at least one
+    # array to stack") from the driver-side fit.
     if n_valid == 0:
         raise ValueError(
             "ensure_ivf_index: embeddings table has no valid (non-NULL, "
@@ -344,13 +354,14 @@ def sim_ann_ivf(spark, t):
 
     idx_path, cents_path = ensure_ivf_index(spark, t)
 
-    q_row = t["embeddings"].where(F.col("vec_id") == 0).select("embedding").first()
-    emb = None if q_row is None else q_row.embedding
+    q = _queries(with_norm(t["embeddings"]), F.col("vec_id") == 0)
+    q_row = q.select("qv").first()
+    emb = None if q_row is None else q_row.qv
     if emb is None or len(emb) == 0:
         # degenerate query (missing row, NULL or empty vector): probe
         # nothing — the pipeline below then returns an empty frame with
         # the production schema, mirroring the exact twin where such a
-        # query scores every row NULL (r12 rows-only edge survey)
+        # query scores every row NULL
         probe = []
     else:
         qv = np.asarray(emb, dtype="float64")
@@ -359,21 +370,15 @@ def sim_ann_ivf(spark, t):
         # probe the 8 centroids nearest the query (driver-side: 16×64 floats)
         probe = np.argsort(((centers - qv) ** 2).sum(axis=1))[:8].tolist()
 
-    q = t["embeddings"].where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
     assigned = spark.read.parquet(idx_path)
     scored = (
-        assigned.where(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
-        .crossJoin(F.broadcast(q))
+        with_norm(assigned.where(F.col("cell").isin(probe) & (F.col("vec_id") != 0)))
+        .crossJoin(q)
         .select(
             "vec_id",
             "label",
             F.col("cell").cast("int").alias("cell"),
-            F.round(
-                cosine(F.col("embedding"), F.col("qv")),
-                6,
-            ).alias("cos_sim"),
+            _query_cos().alias("cos_sim"),
         )
     )
     return scored.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(10)
@@ -416,12 +421,11 @@ def multimodal_norm(spark, t):
 # vec_id, expressible identically in Spark SQL and DuckDB.  The key is
 # reduced mod P BEFORE the multiply: replica-offset vec_ids reach ~9e9
 # at sf1+ and 9e9 × 2654435761 overflows int64 (ANSI
-# ARITHMETIC_OVERFLOW in sim_ann_ivf_pq's codebook sample — caught by
-# the r9 sf1 strict sweep, same class as the sample_group_fixed_k /
-# sketch_cms_merge / corpus_split catches); (P−1) × 2654435761 ≈ 5.7e18
-# < 2^63.  Used instead of rand(seed) because engine RNGs never agree;
-# determinism makes the SAMPLED estimator hash-checkable against an
-# oracle that draws the same sample.
+# ARITHMETIC_OVERFLOW in sim_ann_ivf_pq's codebook sample);
+# (P−1) × 2654435761 ≈ 5.7e18 < 2^63.  Used instead of rand(seed)
+# because engine RNGs never agree; determinism makes the SAMPLED
+# estimator hash-checkable against an oracle that draws the same
+# sample.
 _PORTABLE_SHUFFLE = "((vec_id % 2147483647) * 2654435761) % 2147483647"
 
 
@@ -466,22 +470,19 @@ def sim_pairwise_label_sampled(spark, t):
     """
     from pyspark.sql.window import Window
 
-    # Skinny-rank sampling (r17, r16 verdict ask #5; guide §2.3
-    # "shuffle keys and metadata instead of payloads"): the stratified
-    # row_number/count windows only need (vec_id, label) — ranking the
-    # full frame shipped the 64-float embedding through the label
-    # exchange and its sort, TWICE (the a/b self-join below duplicates
-    # the unreferenced subtree).  Rank a two-column projection instead
-    # and equi-join the surviving vec_ids back to the vector table:
-    # the window exchange carries ~16 B/row instead of ~540 B/row, and
-    # only SAMPLED vectors move through the join.  Output-identical:
-    # rn/cnt are computed over the identical row set (the projection
-    # drops no rows), vec_id is the embeddings key so the join
-    # re-attaches exactly the sampled rows, and a NULL vec_id row —
-    # which the old form kept in `sampled` but which contributed
-    # nothing downstream (a.vec_id < b.vec_id is UNKNOWN for NULL) —
-    # is dropped by the equi-join with the same net output.  The
-    # driver hash-checks this key against the unchanged oracle.
+    # Skinny-rank sampling ("shuffle keys and metadata instead of
+    # payloads"): the stratified row_number/count windows need only
+    # (vec_id, label), so they rank a two-column projection and the
+    # surviving vec_ids equi-join back to the vector table.  The window
+    # exchange carries ~16 B/row, not the full frame's ~540 B/row
+    # (twice: the a/b self-join below duplicates the subtree), and only
+    # SAMPLED vectors move through the join.  Output-identical to
+    # ranking the full frame: rn/cnt are computed over the identical
+    # row set (the projection drops no rows), vec_id is the embeddings
+    # key so the join re-attaches exactly the sampled rows, and a NULL
+    # vec_id row — which contributes nothing downstream (a.vec_id <
+    # b.vec_id is UNKNOWN for NULL) — is dropped by the equi-join with
+    # the same net output.
     w = Window.partitionBy("label").orderBy(F.expr(_PORTABLE_SHUFFLE), "vec_id")
     wc = Window.partitionBy("label")
     keys = (
@@ -495,9 +496,10 @@ def sim_pairwise_label_sampled(spark, t):
     sampled = t["embeddings"].join(keys, "vec_id")
     n = with_norm(sampled).select("vec_id", "label", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
-    cos = F.try_divide(
+    cos = cosine(
         dot(F.col("a.embedding"), F.col("b.embedding")),
-        F.col("a.norm") * F.col("b.norm"),
+        F.col("a.norm"),
+        F.col("b.norm"),
     )
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -558,9 +560,9 @@ def embed_project_jl(spark, t):
         "* CAST(try_element_at(embedding, CAST(i AS INT) + 1) AS DOUBLE)) "
         "/ 4.0, 6) + 0)"
     )
-    # Exact-collapse-first (r13 sf100 rung): the projection is a pure
-    # function of the embedding, and the 16×64 interpreted fold is the
-    # whole cost (254 s at 2M vectors) — evaluate it once per DISTINCT
+    # Exact-collapse-first: the projection is a pure function of the
+    # embedding, and the 16×64 interpreted fold is the whole cost
+    # (254 s at 2M vectors) — evaluate it once per DISTINCT
     # vector (xxhash64 collapse, as in dedup_semantic_blocked) and
     # expand (rep, k, proj) back over the member map.  The fold itself
     # is untouched, so the bit-for-bit cross-engine arithmetic the
@@ -629,9 +631,8 @@ def embed_quantize_i8(spark, t):
         "transform(embedding, x -> CAST(x AS DOUBLE) "
         "- (lo + floor(try_divide(CAST(x AS DOUBLE) - lo, sc) + 0.5) * sc))"
     )
-    # try_divide: an EMPTY vector has size 0 (ANSI / crashed; DuckDB
-    # yields NULL) and a constant vector has scale 0 (same class) —
-    # r11 empty-value survey
+    # try_divide: an EMPTY vector has size 0 (ANSI / crashes; DuckDB
+    # yields NULL) and a constant vector has scale 0 (same class)
     mse = F.try_divide(
         F.aggregate(err, F.lit(0.0), lambda acc, v: acc + v * v),
         F.size("embedding"),
@@ -769,7 +770,7 @@ def _lsh_probe(spark, t, probes):
     ) == 0:
         # degenerate query (missing row, NULL/empty vector -> NULL
         # signature): probe nothing — empty result, production schema
-        # (r12 rows-only edge survey, same contract as the IVF guards)
+        # (same contract as the IVF guards)
         pred = F.lit(False)
         qv = spark.createDataFrame([], "qv array<double>, qnorm double")
     else:
@@ -787,13 +788,8 @@ def _lsh_probe(spark, t, probes):
         .dropDuplicates(["vec_id"])
         .crossJoin(F.broadcast(qv))
     )
-    cos = F.round(
-        F.try_divide(
-            dot(F.col("embedding"), F.col("qv")), F.col("norm") * F.col("qnorm")
-        ), 6
-    )
     return (
-        cand.select("vec_id", "label", cos.alias("cos_sim"))
+        cand.select("vec_id", "label", _query_cos().alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -905,10 +901,10 @@ def ensure_pq_index(spark, t) -> tuple[str, str]:
     top of :func:`ensure_ivf_index`'s cell layout.
 
     Returns (codes_path, codebook_path).  The codes table holds
-    (vec_id, label, cell, codes array<int>) partitioned by cell; the
-    codebook table holds (s, k, center array<double>) — m×ksub tiny
-    reference rows, read driver-side at probe time like the IVF
-    centroids.
+    (vec_id, label, cell, norm, codes array<int>) partitioned by
+    cell; the codebook table holds (s, k, center array<double>) —
+    m×ksub tiny reference rows, read driver-side at probe time like
+    the IVF centroids.
     """
     return scratch.derived(
         spark, "pq", [table_path(t.sf_dir, "embeddings")],
@@ -960,7 +956,8 @@ def _build_pq_index(spark, t, out) -> tuple[str, str]:
 
     codes_path = out("tweetdb_pq")
     (
-        assigned.join(F.broadcast(cents), "cell")
+        with_norm(assigned)
+        .join(F.broadcast(cents), "cell")
         .withColumn(
             "resid",
             F.expr("zip_with(embedding, center, (x, c) -> CAST(x AS DOUBLE) - c)"),
@@ -971,7 +968,7 @@ def _build_pq_index(spark, t, out) -> tuple[str, str]:
             "cell",
             # one scalar per vector: lets ADC rank by approximate COSINE
             # (the exact metric) instead of L2, at 8 extra bytes/vector
-            l2_norm(F.col("embedding")).alias("norm"),
+            "norm",
             encode("resid").alias("codes"),
         )
         .write.mode("overwrite")
@@ -1011,13 +1008,14 @@ def sim_ann_ivf_pq(spark, t):
     codes_path, books_path = ensure_pq_index(spark, t)
     _, cents_path = ensure_ivf_index(spark, t)
 
-    q_row = t["embeddings"].where(F.col("vec_id") == 0).select("embedding").first()
+    e = t["embeddings"]
+    q = _queries(with_norm(e), F.col("vec_id") == 0)
+    q_row = q.select("qv").first()
     m, ksub = _PQ_M, _PQ_KSUB
-    emb = None if q_row is None else q_row.embedding
+    emb = None if q_row is None else q_row.qv
     if emb is None or len(emb) == 0:
         # degenerate query: empty probe/LUT set -> empty result with
-        # the production schema (r12 rows-only edge survey; same
-        # contract as sim_ann_ivf's guard)
+        # the production schema (same contract as sim_ann_ivf's guard)
         probe, lut_rows, qnorm = [], [], 0.0
     else:
         qv = np.asarray(emb, dtype="float64")
@@ -1057,30 +1055,20 @@ def sim_ann_ivf_pq(spark, t):
             (s * ksub + F.element_at(F.col("codes"), s + 1) + 1).cast("int"),
         ),
     )
-    acos = F.try_divide(adot, F.col("norm") * F.lit(qnorm))
+    acos = cosine(adot, F.col("norm"), F.lit(qnorm))
     cand = (
         codes.where(F.col("cell").isin(probe) & (F.col("vec_id") != 0))
         .join(F.broadcast(lut), "cell")
-        .select("vec_id", acos.alias("acos"))
+        .select("vec_id", "norm", acos.alias("acos"))
         .orderBy(F.col("acos").desc(), F.col("vec_id"))
         .limit(50)
     )
 
-    q = t["embeddings"].where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
+    # the candidates carry the norm the codes table stores per vector
     return (
-        t["embeddings"]
-        .join(F.broadcast(cand), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "label",
-            F.round(
-                cosine(F.col("embedding"), F.col("qv")),
-                6,
-            ).alias("cos_sim"),
-        )
+        e.join(F.broadcast(cand), "vec_id")
+        .crossJoin(q)
+        .select("vec_id", "label", _query_cos().alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -1099,8 +1087,7 @@ def sim_ann_ivf_pq_batch(spark, t):
     the queries probing its cell.  The only driver-side reads are the
     index's MODEL data (16 IVF centroids + m·ksub codebook rows, both
     corpus-size-independent), shipped to executors in the UDF closure;
-    query vectors themselves never leave the executors (round-10
-    verdict ask #5 — the r9/r10 form collected them).  ADC ranks by
+    query vectors themselves never leave the executors.  ADC ranks by
     approximate cosine inside codegen; a row_number window takes the
     50 ADC-best PER QUERY (WindowGroupLimit pre-prunes below the
     shuffle); exact cosine re-ranks those to 3.  At 10⁶ queries the
@@ -1133,12 +1120,12 @@ def sim_ann_ivf_pq_batch(spark, t):
     def _qprep(emb: pd.Series) -> pd.DataFrame:
         rows = []
         for e in emb:
-            # degenerate query guard (r11 ADVICE): a NULL embedding
-            # arrives as None (np.asarray -> 0-d array, the subvector
-            # slice would raise IndexError) and an empty/wrong-width
-            # one breaks the (centers - qv) broadcast.  Emit an empty
-            # probe list; the explode below then drops the query —
-            # mirroring cosine()/try_divide's degenerate-vector path.
+            # degenerate query guard: a NULL embedding arrives as None
+            # (np.asarray -> 0-d array, the subvector slice would raise
+            # IndexError) and an empty/wrong-width one breaks the
+            # (centers - qv) broadcast.  Emit an empty probe list; the
+            # explode below then drops the query — mirroring cosine()'s
+            # NULL for a degenerate vector.
             if e is None or len(e) != d:
                 rows.append((None, None, []))
                 continue
@@ -1203,30 +1190,21 @@ def sim_ann_ivf_pq_batch(spark, t):
         .select(
             "q_id",
             "vec_id",
-            F.try_divide(adot, F.col("norm") * F.col("qnorm")).alias("acos"),
+            "norm",
+            cosine(adot, F.col("norm"), F.col("qnorm")).alias("acos"),
         )
         .withColumn("arn", F.row_number().over(w_adc))
         .where(F.col("arn") <= 50)
-        .select("q_id", "vec_id")
+        .select("q_id", "vec_id", "norm")
     )
 
-    q = t["embeddings"].where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
+    # the candidates carry the norm the codes table stores per vector
+    e = t["embeddings"]
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return (
-        t["embeddings"]
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(q), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            F.round(
-                cosine(F.col("embedding"), F.col("qv")),
-                6,
-            ).alias("cos_sim"),
-        )
+        e.join(F.broadcast(cand), "vec_id")
+        .join(_queries(with_norm(e), F.col("vec_id") < 5), "q_id")
+        .select("q_id", "vec_id", "label", _query_cos().alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= 3)
     )
@@ -1298,11 +1276,7 @@ def sim_maxsim_multivector(spark, t):
         F.col("sv").alias("qv"),
     )
     dtok = tok.where(F.col("vec_id") >= 3)
-    pair_dot = F.aggregate(
-        F.zip_with("qv", "sv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    pair_dot = dot(F.col("qv"), F.col("sv"))
     # ONE aggregation, not max-per-token then sum: the 4 per-token
     # maxima pivot into columns of a single groupBy(q_id, vec_id), so
     # token-pair scores cross exactly one Exchange (verified in
@@ -1357,15 +1331,10 @@ def embed_pca_power(spark, t):
     emb = t["embeddings"].select("embedding")
     v = [1.0 / dim**0.5] * dim
     for _ in range(iters):
-        vl = F.array(*[F.lit(float(x)) for x in v])
-        dot = F.aggregate(
-            F.zip_with("embedding", vl, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in v]))
         scaled = emb.select(
             F.posexplode(
-                F.transform("embedding", lambda x: x * dot)
+                F.transform("embedding", lambda x: x * proj)
             ).alias("pos", "val")
         )
         rows = (
@@ -1512,16 +1481,11 @@ def sim_hybrid_rrf(spark, t):
         .limit(100)
         .select("doc_id", F.row_number().over(wt).alias("text_rank"))
     )
-    e = t["embeddings"]
-    q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    cos = F.round(
-        cosine(F.col("embedding"), F.col("qv")),
-        6,
-    )
+    n = with_norm(t["embeddings"])
     wv = Window.orderBy(F.col("cos").desc(), "doc_id")
     vrank = (
-        e.crossJoin(F.broadcast(q))
-        .select(F.col("vec_id").alias("doc_id"), cos.alias("cos"))
+        n.crossJoin(_queries(n, F.col("vec_id") == 0))
+        .select(F.col("vec_id").alias("doc_id"), _query_cos().alias("cos"))
         .orderBy(F.col("cos").desc(), "doc_id")
         .limit(100)
         .select("doc_id", F.row_number().over(wv).alias("vec_rank"))
@@ -1592,7 +1556,8 @@ def embed_outlier_mean(spark, t):
     implied by the z parity the hash already requires.
     """
     emb = t["embeddings"]
-    mu = (
+    # the mean vector and its norm, once, in a one-row frame
+    mu = with_norm(
         emb.select(F.posexplode("embedding").alias("pos", "v"))
         .groupBy("pos")
         .agg(F.avg(F.col("v").cast("double")).alias("mu"))
@@ -1600,25 +1565,20 @@ def embed_outlier_mean(spark, t):
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "mu"))),
                 lambda s: s["mu"],
-            ).alias("mu_vec")
+            ).alias("embedding")
         )
-    )
-    ed = F.expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    dot = F.aggregate(
-        F.zip_with(ed, F.col("mu_vec"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    nrm = lambda arr: F.sqrt(  # noqa: E731
-        F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-    scored = emb.crossJoin(F.broadcast(mu)).select(
-        "vec_id", (dot / (nrm(ed) * nrm(F.col("mu_vec")))).alias("c")
+    ).select(F.col("embedding").alias("mu_vec"), F.col("norm").alias("mu_norm"))
+    scored = with_norm(emb).crossJoin(F.broadcast(mu)).select(
+        "vec_id",
+        cosine(
+            dot(F.col("embedding"), F.col("mu_vec")), F.col("norm"), F.col("mu_norm")
+        ).alias("c"),
     )
     st = scored.agg(
         F.avg("c").alias("m"), F.stddev_samp("c").alias("sd")
     )
-    z = (F.col("c") - F.col("m")) / F.col("sd")
+    # try_divide: equal scores give sd 0 — DuckDB yields NULL, ANSI `/` crashes
+    z = F.try_divide(F.col("c") - F.col("m"), F.col("sd"))
     return scored.crossJoin(F.broadcast(st)).select(
         "vec_id",
         (F.round("c", 6) + 0).alias("cos_mean"),

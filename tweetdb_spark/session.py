@@ -27,6 +27,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from tweetdb_spark import scratch
+
 # Runtime-settable SQL confs (safe to apply to a live session).
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -71,12 +73,12 @@ def _pin_derby_home(spark: SparkSession) -> None:
     root.  Idempotent: re-setting after boot is a no-op but harmless.
     """
     try:
-        import tempfile
-
         jvm = spark._jvm
         sysprop = jvm.java.lang.System
         if not sysprop.getProperty("derby.system.home"):
-            home = tempfile.mkdtemp(prefix="tweetdb_derby_home_")
+            # pid-tagged, so scratch reaps it once this process is gone
+            home = scratch.fresh_dir("tweetdb_derby_home")
+            os.makedirs(home)
             sysprop.setProperty("derby.system.home", home)
             sysprop.setProperty(
                 "derby.stream.error.file", os.path.join(home, "derby.log")
