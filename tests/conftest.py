@@ -9,59 +9,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# TEST_EDGE_MODE=null|empty serves EVERY test from an edge-riddled copy
-# of the catalog (tools/null_survey.py's deterministic injection) — the
-# rows-only keys' twin-equality tests then run under the same injection
-# the 232 hash keys get from the tools-level surveys (r11 verdict ask
-# #5).  Intended for the curated twin-test subset driven by
-# tools/rows_only_survey.py, not the full suite.
+
+def _session():
+    from tweetdb_spark.session import get_spark
+
+    return get_spark("tweetdb-tests", shuffle_partitions=8)
+
+
+# TEST_EDGE_MODE=null|empty serves every test an edge-riddled copy of
+# the fixture (tools/keys.py's riddled(), the copy the hash keys' edge
+# check reads): SF_DIR points at it, so the rows-only keys'
+# twin-equality tests run under the same injection.  Intended for the
+# twin-test subset that tools/rows_only_survey.py selects, not the
+# full suite.
 EDGE_MODE = os.environ.get("TEST_EDGE_MODE")
+if EDGE_MODE:
+    from tools.keys import riddled
 
-
-def _patch_edge_catalog(spark, mode: str) -> None:
-    import tempfile
-
-    import tweetdb_spark.catalog as cat
-    import tweetdb_spark.registry as reg
-    import tweetdb_spark.streaming.sources as ssrc
-    from tools.null_survey import INJECT, KEYCOL, nullify
-
-    src = cat.load_tables(spark, SF_DIR)
-    out = tempfile.mkdtemp(prefix=f"edge_{mode}_")
-    paths = {}
-    for name, df in src.items():
-        if name in INJECT:
-            df = nullify(df, INJECT[name], KEYCOL[name], mode=mode)
-        p = f"{out}/{name}.parquet"
-        df.coalesce(1).write.mode("overwrite").parquet(p)
-        paths[name] = p
-
-    def patched(spark_arg, _sf, subset=None, *a, **kw):
-        d = {}
-        for n in list(subset) if subset else list(paths):
-            d[n] = spark_arg.read.parquet(paths[n])
-            d[n].createOrReplaceTempView(n)
-        return d
-
-    cat.load_tables = patched
-    reg.load_tables = patched
-    # sources.py binds load_tables by name at import time
-    ssrc.load_tables = patched
-    # the staged-events dir is fingerprinted on the SOURCE fixture;
-    # edge catalogs must stage separately from (and never reuse) the
-    # clean vintage of the same sf_dir
-    orig_staging = ssrc._staging
-    ssrc._staging = lambda d, n, kind: orig_staging(d, n, f"{kind}_edge_{mode}")
+    SF_DIR = riddled(_session(), SF_DIR, EDGE_MODE)
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from tweetdb_spark.session import get_spark
-
-    s = get_spark("tweetdb-tests", shuffle_partitions=8)
-    if EDGE_MODE:
-        _patch_edge_catalog(s, EDGE_MODE)
-    yield s
+    yield _session()
 
 
 @pytest.fixture(scope="session")

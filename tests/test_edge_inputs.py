@@ -14,7 +14,7 @@ import os
 import duckdb
 import pytest
 
-from tools.check import rows_multiset
+from tools.keys import rows_multiset
 
 EDGE_DOCS = [
     # (doc_id, text): empty, 1 token, 2 tokens, 1 char, token-dupes
@@ -160,7 +160,7 @@ def test_pii_scrub_planted_corpus_parity(pii_corpus, spark):
     assert by_id[105][3] == 1 and by_id[105][6] == 0 and by_id[105][2] == 0
 
 
-def test_segment_dedup_edge_corpus_parity(edge, spark):
+def test_segment_dedup_edge_corpus_parity(edge, spark, tmp_path):
     """text_segment_dedup on empty/1-token/short docs: the empty-string
     split ([''] on both engines) and sub-8-token tail segments must
     agree with the oracle; duplicated doc 7 (clone of 6) collapses both
@@ -174,10 +174,8 @@ def test_segment_dedup_edge_corpus_parity(edge, spark):
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs = t["documents"].unionByName(extra)
-    import tempfile as _tf
-
-    path = _tf.mkdtemp(prefix="edge_segdedup_") + "/documents.parquet"
-    docs.coalesce(1).write.mode("overwrite").parquet(path)
+    path = str(tmp_path / "documents.parquet")
+    docs.coalesce(1).write.parquet(path)
     con2 = _duck.connect()
     con2.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"

@@ -1392,12 +1392,6 @@ def test_banded_candidates_exactly_once_vs_multiband_distinct(spark):
     assert {(1, 2), (1, 6), (2, 6)} <= ref
 
 
-@pytest.mark.skipif(
-    bool(__import__("tests.conftest", fromlist=["EDGE_MODE"]).EDGE_MODE),
-    reason="builds its OWN degenerate fixture; the EDGE_MODE-patched "
-    "catalog loader shadows the custom dir, so the probe targets "
-    "(vec_id 0/2/7/8) no longer carry the degenerates being tested",
-)
 def test_ann_family_degenerate_vectors(spark, registry, tmp_path_factory):
     """r12 rows-only edge survey (verdict ask #5 + ADVICE _qprep): NULL
     and empty embeddings must neither crash the index builds (corpus
@@ -1409,7 +1403,7 @@ def test_ann_family_degenerate_vectors(spark, registry, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
-    src = "/root/testdata/sf0.001"
+    src = SF_DIR
     d = str(tmp_path_factory.mktemp("ann_edge"))
     for name in (
         "region", "nation", "customer", "supplier", "part",
@@ -1424,6 +1418,14 @@ def test_ann_family_degenerate_vectors(spark, registry, tmp_path_factory):
         .when(F.col("vec_id").isin(2, 8), F.array().cast(dt))
         .otherwise(F.col("embedding")),
     ).coalesce(1).write.parquet(f"{d}/embeddings.parquet")
+    # the four planted here, plus any an edge-riddled fixture brings
+    degenerate = {
+        r.vec_id
+        for r in spark.read.parquet(f"{d}/embeddings.parquet")
+        .where("coalesce(size(embedding), 0) <= 0")
+        .collect()
+    }
+    assert {0, 2, 7, 8} <= degenerate, degenerate
 
     # single-query tiers: the query vector itself is degenerate ->
     # empty result with the production schema, never a crash
@@ -1438,9 +1440,9 @@ def test_ann_family_degenerate_vectors(spark, registry, tmp_path_factory):
     per_q = {}
     for r in rows:
         per_q.setdefault(r.q_id, []).append(r.vec_id)
-    assert set(per_q) == {1, 3, 4}, per_q
+    assert set(per_q) == {1, 3, 4} - degenerate, per_q
     assert all(len(v) == 3 for v in per_q.values()), per_q
-    assert not any(v in (7, 8) for vs in per_q.values() for v in vs), per_q
+    assert not any(v in degenerate for vs in per_q.values() for v in vs), per_q
 
 
 def test_corpus_interleave_two_pass_equals_single_sort(

@@ -16,7 +16,7 @@ import datetime as dt
 import duckdb
 import pytest
 
-from tools.check import rows_multiset
+from tools.keys import rows_multiset
 
 _TS = dt.datetime(2024, 3, 1, 12, 0, 0)
 

@@ -1,10 +1,10 @@
 """Regression lock for the r11 registry-wide NULL / empty-value surveys.
 
-tools/null_survey.py swept every oracle-backed key over edge-riddled
-fixture catalogs in two modes — NULL injection (two widening rounds)
-and empty-value injection ('' strings, array() vectors) — finding 9
-crashes + 28 semantic divergences in total, all fixed in r11 (final
-sweeps: 232/232 PASS in BOTH modes).  This module re-runs exactly the
+``tools/keys.py check --edge`` runs every oracle-backed key over an
+edge-riddled copy of the fixture, in two modes: NULL injection and
+empty-value injection ('' strings, array() vectors).  The first such
+sweeps found 9 crashes + 28 semantic divergences in total, all fixed
+(final sweeps: 232/232 PASS in BOTH modes).  This module re-runs exactly the
 keys that were broken, per mode — the full sweeps stay tools-level
 checks (~5 min each); this subset keeps the fixed bug classes from
 regressing at pytest speed.
@@ -12,13 +12,12 @@ regressing at pytest speed.
 
 from __future__ import annotations
 
-import tempfile
-
 import duckdb
 import pytest
 
-from tools.check import rows_multiset
-from tools.null_survey import INJECT, KEYCOL, nullify
+from tests.conftest import SF_DIR
+from tools.keys import register_duck_views, riddled, rows_multiset
+from tweetdb_spark.catalog import load_tables
 
 # keys the NULL-mode surveys caught (crash or divergence)
 NULL_FIXED_KEYS = [
@@ -84,52 +83,15 @@ EMPTY_FIXED_KEYS = [
 ]
 
 
-def _build_catalog(spark, mode):
-    """Edge-riddled copy of the sf0.001 catalog + a DuckDB connection
-    over the same parquet, with catalog.load_tables patched to serve it
-    (same mechanics as tools/null_survey.py).  Returns (con, restore)."""
-    import tweetdb_spark.catalog as cat
-    import tweetdb_spark.registry as reg
-
-    src = cat.load_tables(spark, "/root/testdata/sf0.001")
-    out_dir = tempfile.mkdtemp(prefix=f"{mode}_regress_")
-    con = duckdb.connect()
-    paths = {}
-    for name, df in src.items():
-        if name in INJECT:
-            df = nullify(df, INJECT[name], KEYCOL[name], mode=mode)
-        p = f"{out_dir}/{name}.parquet"
-        paths[name] = p
-        df.coalesce(1).write.mode("overwrite").parquet(p)
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}/*.parquet')"
-        )
-
-    def patched(spark_arg, _sf, subset=None, *a, **kw):
-        d = {}
-        for n in list(subset) if subset else list(paths):
-            d[n] = spark_arg.read.parquet(paths[n])
-            d[n].createOrReplaceTempView(n)
-        return d
-
-    orig_cat, orig_reg = cat.load_tables, reg.load_tables
-    cat.load_tables = patched
-    reg.load_tables = patched
-
-    def restore():
-        cat.load_tables = orig_cat
-        reg.load_tables = orig_reg
-        for name, df in src.items():
-            df.createOrReplaceTempView(name)
-
-    return con, restore
-
-
 @pytest.fixture(scope="module", params=["null", "empty"])
 def edge_catalog(spark, request):
-    con, restore = _build_catalog(spark, request.param)
-    yield request.param, con
-    restore()
+    """The riddled copy of the fixture and a DuckDB connection over it."""
+    d = riddled(spark, SF_DIR, request.param)
+    con = duckdb.connect()
+    register_duck_views(con, d)
+    yield request.param, d, con
+    con.close()
+    load_tables(spark, SF_DIR)  # point the temp views back at the fixture
 
 
 _ALL = sorted(set(NULL_FIXED_KEYS) | set(EMPTY_FIXED_KEYS))
@@ -137,14 +99,14 @@ _ALL = sorted(set(NULL_FIXED_KEYS) | set(EMPTY_FIXED_KEYS))
 
 @pytest.mark.parametrize("key", _ALL)
 def test_fixed_key_matches_oracle_on_edge_catalog(key, edge_catalog, spark, registry):
-    mode, con = edge_catalog
+    mode, sf_dir, con = edge_catalog
     relevant = NULL_FIXED_KEYS if mode == "null" else EMPTY_FIXED_KEYS
     if key not in relevant:
         pytest.skip(f"{key} was a {('empty' if mode == 'null' else 'null')}-mode catch")
     from tweetdb_spark.registry import ordered_queries
 
     queries, oracles = ordered_queries()
-    sdf = queries[key](spark, "/root/testdata/sf0.001")
+    sdf = queries[key](spark, sf_dir)
     s_rows = [tuple(r) for r in sdf.collect()]
     res = con.execute(oracles[key])
     d_cols = [d[0] for d in res.description]
@@ -158,7 +120,7 @@ def test_fixed_key_matches_oracle_on_edge_catalog(key, edge_catalog, spark, regi
     )
 
 
-def test_interpolate_half_boundary_is_engine_exact(spark, registry):
+def test_interpolate_half_boundary_is_engine_exact(spark, registry, tmp_path):
     """r14 second-seed survey catch (NULL_SEED=77002331): when linear
     interpolation lands exactly on a 4th-decimal HALF, the engines'
     double-ROUND pipelines could disagree by one final digit even with
@@ -168,13 +130,8 @@ def test_interpolate_half_boundary_is_engine_exact(spark, registry):
     at hour 0 and 100.01 at hour 8 put the hour-1 interpolation at
     exactly 100.00125 -> 100.0013 (away from zero), identical in both
     engines."""
-    import tempfile
-
-    import duckdb
-
-    import tweetdb_spark.catalog as cat
-    import tweetdb_spark.registry as reg
-    from tweetdb_spark.registry import ordered_queries
+    from tweetdb_spark.operators.events import events_interpolate
+    from tweetdb_spark.registry import ORACLES
 
     ev = spark.createDataFrame(
         [
@@ -187,30 +144,15 @@ def test_interpolate_half_boundary_is_engine_exact(spark, registry):
         "event_id", "CAST(ts_s AS TIMESTAMP) AS ts", "user_id",
         "event_type", "value", "props",
     )
-    out = tempfile.mkdtemp(prefix="interp_tie_")
-    p = f"{out}/events.parquet"
-    ev.coalesce(1).write.mode("overwrite").parquet(p)
+    p = str(tmp_path / "events.parquet")
+    ev.coalesce(1).write.parquet(p)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{p}/*.parquet')")
-
-    def patched(spark_arg, _sf, subset=None, *a, **kw):
-        d = {"events": spark_arg.read.parquet(p)}
-        d["events"].createOrReplaceTempView("events")
-        return d
-
-    orig_cat, orig_reg = cat.load_tables, reg.load_tables
-    cat.load_tables = patched
-    reg.load_tables = patched
-    try:
-        queries, oracles = ordered_queries()
-        s = {
-            r.hour_start: r.revenue_interp
-            for r in queries["events_interpolate"](spark, "/ignored").collect()
-        }
-        d = {r[0]: r[2] for r in con.execute(oracles["events_interpolate"]).fetchall()}
-    finally:
-        cat.load_tables = orig_cat
-        reg.load_tables = orig_reg
+    s = {
+        r.hour_start: r.revenue_interp
+        for r in events_interpolate(spark, {"events": spark.read.parquet(p)}).collect()
+    }
+    d = {r[0]: r[2] for r in con.execute(ORACLES["events_interpolate"]).fetchall()}
     assert s == d, (s, d)
     import datetime
 

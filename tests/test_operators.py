@@ -1,9 +1,9 @@
 """Operator-semantics unit tests at sf0.001 (SURVEY.md §5.3).
 
 The DuckDB hash parity for every declared key is exercised by
-tools/check.py (and the driver); these tests assert *semantic*
-properties the hash can't see: ordering, algebraic invariants,
-determinism across runs.
+``tools/keys.py check`` (and ``__spark_entry__``'s CORRECTNESS check);
+these tests assert *semantic* properties the hash can't see: ordering,
+algebraic invariants, determinism across runs.
 """
 
 from __future__ import annotations
@@ -68,9 +68,7 @@ def test_cosine_self_similarity_is_1(spark, registry):
     t = load_tables(spark, SF_DIR)
     e = with_norm(t["embeddings"].limit(20))
     rows = e.select(
-        cosine(
-            dot(F.col("embedding"), F.col("embedding")), F.col("norm"), F.col("norm")
-        ).alias("c")
+        cosine(dot("embedding", "embedding"), F.col("norm"), F.col("norm")).alias("c")
     ).collect()
     for r in rows:
         assert abs(r.c - 1.0) < 1e-12

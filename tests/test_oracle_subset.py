@@ -1,8 +1,8 @@
 """In-pytest oracle parity for a fast subset of hash-checked keys.
 
-The full sweep lives in tools/check.py (and the driver); this guards
-the same contract for anyone running only `pytest` — one key per
-operator family, at sf0.001 for speed.
+The full sweep is ``tools/keys.py check``; this guards the same
+contract for anyone running only `pytest` — one key per operator
+family, at sf0.001 for speed.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from tests.conftest import SF_DIR
-from tools.check import TABLES, rows_multiset
+from tools.keys import register_duck_views, rows_multiset
 
 FAST_KEYS = [
     "scan_pruned",
@@ -34,8 +34,7 @@ FAST_KEYS = [
 @pytest.fixture(scope="module")
 def duck():
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    register_duck_views(con, SF_DIR)
     return con
 
 

@@ -55,7 +55,6 @@ def test_portable_hash_spark_matches_python(spark):
 
 def test_dot_and_norm_match_numpy(spark):
     import numpy as np
-    from pyspark.sql import functions as F
 
     from tweetdb_spark.llm.similarity import dot, l2_norm
 
@@ -65,8 +64,8 @@ def test_dot_and_norm_match_numpy(spark):
     df = spark.createDataFrame(rows, "i int, a array<float>, b array<float>")
     out = df.select(
         "i",
-        dot(F.col("a"), F.col("b")).alias("d"),
-        l2_norm(F.col("a")).alias("n"),
+        dot("a", "b").alias("d"),
+        l2_norm("a").alias("n"),
     ).collect()
     for r in out:
         a = vecs[r.i].astype("float64")

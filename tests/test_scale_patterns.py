@@ -8,9 +8,6 @@ the tables the engine itself writes lives in tests/test_plans.py.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 
 from tests.conftest import SF_DIR
@@ -95,11 +92,11 @@ def test_bucketed_join_has_no_shuffle(spark, tables, tmp_path):
     assert n_bucketed == n_plain
 
 
-def test_dynamic_partition_pruning(spark, tables):
+def test_dynamic_partition_pruning(spark, tables, tmp_path):
     """A partitioned fact joined to a filtered dim must plan a
     dynamicpruning subquery on the partition column — at 100 TB this
     skips whole partitions based on the dim filter's runtime result."""
-    out = os.path.join(tempfile.gettempdir(), "tweetdb_dpp_fact")
+    out = str(tmp_path / "dpp_fact")
     (
         tables["events"]
         .write.mode("overwrite")

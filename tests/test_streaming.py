@@ -190,7 +190,7 @@ def test_sink_jdbc_sqlite_fallback_matches_batch(registry, spark, tables):
     assert sunk == batch
 
 
-def test_sink_jdbc_derby_upsert_redelivery_idempotent(spark):
+def test_sink_jdbc_derby_upsert_redelivery_idempotent(spark, tmp_path, request):
     """The literal branch's exactly-once contract: re-delivering the
     SAME micro-batch (staging overwrite + DELETE+INSERT replay) must
     leave the target table unchanged, and a later batch updating a key
@@ -199,7 +199,6 @@ def test_sink_jdbc_derby_upsert_redelivery_idempotent(spark):
     statement mis-reads stored pages (XSDA7), which is why the sink
     uses DELETE+INSERT.  Skips only if the container has no Derby
     driver."""
-    import tempfile
     import uuid
 
     import pytest
@@ -210,8 +209,14 @@ def test_sink_jdbc_derby_upsert_redelivery_idempotent(spark):
         pytest.skip("no embedded Derby driver on the classpath")
 
     jvm = spark._jvm
-    home = tempfile.mkdtemp(prefix="tweetdb_derby_test_")
-    jvm.java.lang.System.setProperty("derby.system.home", home)
+    home, system = str(tmp_path), jvm.java.lang.System
+    prior = system.getProperty("derby.system.home")
+    request.addfinalizer(
+        lambda: system.setProperty("derby.system.home", prior)
+        if prior is not None
+        else system.clearProperty("derby.system.home")
+    )
+    system.setProperty("derby.system.home", home)
     url = f"jdbc:derby:{home}/t_{uuid.uuid4().hex[:8]};create=true"
 
     con = jvm.java.sql.DriverManager.getConnection(url)
@@ -324,13 +329,12 @@ def test_custom_stream_source_drains_full_feed(q, spark):
     assert s == b
 
 
-def test_checkpoint_restart_is_exactly_once(spark, tables):
+def test_checkpoint_restart_is_exactly_once(spark, tables, tmp_path):
     """Restarting a stream on the same checkpoint must process each
     input file exactly once: second availableNow run with no new files
     appends nothing; new files append only their own rows."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -339,7 +343,7 @@ def test_checkpoint_restart_is_exactly_once(spark, tables):
 
     src_full = stage_events_json(spark, SF_DIR)
     files = sorted(f for f in os.listdir(src_full) if f.endswith(".json"))
-    work = tempfile.mkdtemp(prefix="tweetdb_recovery_")
+    work = str(tmp_path)
     src = os.path.join(work, "in")
     os.makedirs(src)
     half = len(files) // 2
@@ -498,6 +502,9 @@ def test_staged_fixture_invalidated_on_vintage_change(spark, tmp_path):
     assert out2 != out
     assert os.path.exists(marker), "old vintage deleted in place"
     assert os.path.exists(os.path.join(out2, "_STAGED"))
+    # both vintages are staged in the system temp dir, not under tmp_path
+    for d in (out, out2):
+        shutil.rmtree(d)
 
 
 def test_run_to_memory_leaves_one_checkpoint_dir(spark):

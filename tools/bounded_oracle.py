@@ -861,12 +861,12 @@ FROM wi, xr
 
 
 def _keyed_sum_compare(sdf, con, sql) -> tuple[bool, str]:
-    """check_sum's mod-P keyed-sum compare (same mappers/multipliers,
+    """``tools/keys.py sum``'s mod-P keyed-sum compare (same mappers/multipliers,
     so numbers are comparable across tools) for outputs too wide/tall
     to fetch row-by-row."""
     from pyspark.sql import functions as F
 
-    from tools.check_sum import KS, P, _mappers
+    from tools.keys import KS, P, _mappers
 
     specs = []
     for f in sorted(sdf.schema.fields, key=lambda f: f.name):
@@ -898,7 +898,7 @@ def main() -> int:
     import tweetdb_spark
     from tweetdb_spark.llm.dedup import _DUCK_TOKHASH, _HAMMING_MAX
     from tweetdb_spark.session import get_spark
-    from tools.check import register_duck_views
+    from tools.keys import register_duck_views
 
     tweetdb_spark.load_all_operators()
     spark = get_spark("tweetdb-bounded-oracle")

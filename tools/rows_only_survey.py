@@ -1,8 +1,8 @@
 """Rows-only twin edge survey (r12 verdict ask #5 / r13 delivery).
 
 The 232 hash-oracled keys get NULL/empty-injection coverage from
-tools/null_survey.py (engine vs DuckDB oracle on the same riddled
-catalog).  The 33 rows-only keys have no ANSI oracle — their
+``tools/keys.py check --edge`` (engine vs DuckDB oracle on the same
+riddled fixture).  The 33 rows-only keys have no ANSI oracle — their
 correctness evidence is batch-TWIN EQUALITY pytests (streaming key ==
 its batch twin, approx tier ⊆/≈ its exact twin).  This tool runs
 exactly those twin tests under the SAME deterministic injection, in
@@ -10,7 +10,8 @@ both modes, so the rows-only family gets the edge coverage the
 hash-checked family already has:
 
   TEST_EDGE_MODE=null   — NULLs into nullable non-key columns (+ NULL
-                          event keys), via tools/null_survey.nullify
+                          event keys): tests/conftest.py points SF_DIR
+                          at tools/keys.riddled's copy of the fixture
   TEST_EDGE_MODE=empty  — ''/array() into string/array columns
 
 Test selection is DYNAMIC: every test function in tests/ whose source

@@ -534,7 +534,7 @@ def dedup_embedding_cosine(spark, t):
     ).select("vec_id", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
     cos = cosine(
-        dot(F.col("a.embedding"), F.col("b.embedding")),
+        dot("a.embedding", "b.embedding"),
         F.col("a.norm"),
         F.col("b.norm"),
     )

@@ -34,23 +34,25 @@ from tweetdb_spark.catalog import table_path
 from tweetdb_spark.registry import query
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ in float64, left-to-right (matches DuckDB list_sum)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot(a: str, b: str) -> Column:
+    """Σ aᵢ·bᵢ in float64, left-to-right (matches DuckDB list_sum), of
+    the array columns named ``a`` and ``b`` (SQL names, so ``x.col``
+    qualifies).  One SQL expression: a fold built from Python lambdas
+    costs tens of ms of Python time per call, this one py4j call."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
-def l2_norm(a: Column) -> Column:
+def l2_norm(a: str) -> Column:
     return F.sqrt(dot(a, a))
 
 
 def with_norm(df: DataFrame) -> DataFrame:
     """``df`` plus ``norm``, the L2 norm of its ``embedding``: the one
     place a norm is computed, once per vector."""
-    return df.withColumn("norm", l2_norm(F.col("embedding")))
+    return df.withColumn("norm", l2_norm("embedding"))
 
 
 def cosine(d: Column, na: Column, nb: Column) -> Column:
@@ -81,7 +83,7 @@ def _query_cos() -> Column:
     """Exact cosine of a corpus row (``embedding``, ``norm``) against
     the query (``qv``, ``qnorm``) it is joined to, rounded to 6."""
     return F.round(
-        cosine(dot(F.col("embedding"), F.col("qv")), F.col("norm"), F.col("qnorm")),
+        cosine(dot("embedding", "qv"), F.col("norm"), F.col("qnorm")),
         6,
     )
 
@@ -219,7 +221,7 @@ def sim_pairwise_label(spark, t):
     ).select("vec_id", "label", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
     cos = cosine(
-        dot(F.col("a.embedding"), F.col("b.embedding")),
+        dot("a.embedding", "b.embedding"),
         F.col("a.norm"),
         F.col("b.norm"),
     )
@@ -497,7 +499,7 @@ def sim_pairwise_label_sampled(spark, t):
     n = with_norm(sampled).select("vec_id", "label", "embedding", "norm")
     a, b = n.alias("a"), n.alias("b")
     cos = cosine(
-        dot(F.col("a.embedding"), F.col("b.embedding")),
+        dot("a.embedding", "b.embedding"),
         F.col("a.norm"),
         F.col("b.norm"),
     )
@@ -1276,7 +1278,7 @@ def sim_maxsim_multivector(spark, t):
         F.col("sv").alias("qv"),
     )
     dtok = tok.where(F.col("vec_id") >= 3)
-    pair_dot = dot(F.col("qv"), F.col("sv"))
+    pair_dot = dot("qv", "sv")
     # ONE aggregation, not max-per-token then sum: the 4 per-token
     # maxima pivot into columns of a single groupBy(q_id, vec_id), so
     # token-pair scores cross exactly one Exchange (verified in
@@ -1331,10 +1333,10 @@ def embed_pca_power(spark, t):
     emb = t["embeddings"].select("embedding")
     v = [1.0 / dim**0.5] * dim
     for _ in range(iters):
-        proj = dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in v]))
-        scaled = emb.select(
+        # the current direction as a literal array column, named for dot
+        scaled = emb.withColumn("v", F.array(*[F.lit(float(x)) for x in v])).select(
             F.posexplode(
-                F.transform("embedding", lambda x: x * proj)
+                F.transform("embedding", lambda x: x * dot("embedding", "v"))
             ).alias("pos", "val")
         )
         rows = (
@@ -1571,7 +1573,7 @@ def embed_outlier_mean(spark, t):
     scored = with_norm(emb).crossJoin(F.broadcast(mu)).select(
         "vec_id",
         cosine(
-            dot(F.col("embedding"), F.col("mu_vec")), F.col("norm"), F.col("mu_norm")
+            dot("embedding", "mu_vec"), F.col("norm"), F.col("mu_norm")
         ).alias("c"),
     )
     st = scored.agg(
