@@ -2,7 +2,8 @@
 
 The catalyst size-estimate gate is ``guards.size_gate``: operators with
 a direct and a scale form ask it, never the optimized plan's stats
-directly.  The exact-clone key and election are ``llm/collapse.py``.
+directly.  The exact-clone key, election and member-pair expansion are
+``llm/collapse.py``.
 Vector scoring is ``llm/similarity.py``'s one dot product, one norm
 and one cosine kernel.  Keys are run from ``tools/`` by one runner."""
 
@@ -78,7 +79,9 @@ def test_one_cosine_kernel():
     expression with one ``zip_with(``, and neither an ``F.zip_with``
     call nor another copy of its product lambda anywhere else in
     ``llm/``.  ``with_norm`` makes the only ``l2_norm`` call, and only
-    the ``cosine`` kernel divides by a product of norms."""
+    the ``cosine`` kernel divides by a product of norms.  No ``dot``
+    call sits inside a Python ``lambda`` (a higher-order function's
+    body runs once per element, so the dot would too)."""
     calls = list(_calls(_PKG))
     zips = [
         (f, fn) for f, fn, c in calls
@@ -108,6 +111,74 @@ def test_one_cosine_kernel():
         and isinstance(c.args[1].op, ast.Mult)
     }
     assert norm_divs == {(_SIM, "cosine")}, norm_divs
+    dots_in_lambdas = [
+        (os.path.relpath(p, _PKG), lam.lineno)
+        for p in glob.glob(os.path.join(_PKG, "llm", "*.py"))
+        for lam in ast.walk(ast.parse(open(p, encoding="utf-8").read()))
+        if isinstance(lam, ast.Lambda)
+        and any(
+            isinstance(c, ast.Call) and _name(c) == "dot" for c in ast.walk(lam.body)
+        )
+    ]
+    assert dots_in_lambdas == [], dots_in_lambdas
+
+
+def _col_name(node):
+    """The string argument of an ``F.col("...")`` call, else None."""
+    if (
+        isinstance(node, ast.Call)
+        and _name(node) == "col"
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Constant)
+        and isinstance(node.args[0].value, str)
+    ):
+        return node.args[0].value
+    return None
+
+
+def _alias_compares(cond):
+    """``(op, column)`` for every comparison in the ``&``-chain ``cond``
+    of two ``F.col("alias.column")`` sides naming one column under two
+    different aliases (``x.rep_id == y.rep_id`` is ``(Eq, "rep_id")``)."""
+    if isinstance(cond, ast.BinOp) and isinstance(cond.op, ast.BitAnd):
+        return _alias_compares(cond.left) + _alias_compares(cond.right)
+    if isinstance(cond, ast.Compare) and len(cond.ops) == 1:
+        a, b = _col_name(cond.left), _col_name(cond.comparators[0])
+        if a and b and "." in a and "." in b:
+            (qa, ca), (qb, cb) = a.split(".", 1), b.split(".", 1)
+            if ca == cb and qa != qb:
+                return [(type(cond.ops[0]), ca)]
+    return []
+
+
+def _within_legs(tree):
+    """Join conditions of a member-pair within leg: a self-join equal on
+    a rep id and ordered by ``<`` on another column (the member id)."""
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitAnd)
+        and any(op is ast.Eq and "rep" in c for op, c in _alias_compares(node))
+        and any(op is ast.Lt and "rep" not in c for op, c in _alias_compares(node))
+    ]
+
+
+_DUCK_FP_BODY = "CAST(SUM(CASE WHEN s > 0"
+
+
+def test_one_member_pair_expansion_and_one_fingerprint_cte():
+    """``collapse._expand_rep_pairs`` is the one member-pair expansion:
+    no other module self-joins a member map on its rep id with
+    ``doc_id <``.  The DuckDB simhash fingerprint CTE is written once in
+    ``llm/dedup.py`` and interpolated into each simhash oracle."""
+    legs = {}
+    for p in glob.glob(os.path.join(_PKG, "**", "*.py"), recursive=True):
+        n = len(_within_legs(ast.parse(open(p, encoding="utf-8").read())))
+        if n:
+            legs[os.path.relpath(p, _PKG)] = n
+    assert legs == {os.path.join("llm", "collapse.py"): 1}, legs
+    dedup = open(os.path.join(_PKG, "llm", "dedup.py"), encoding="utf-8").read()
+    assert dedup.count(_DUCK_FP_BODY) == 1, dedup.count(_DUCK_FP_BODY)
 
 
 def _assigns_load_tables(tree) -> bool:

@@ -231,7 +231,11 @@ def test_events_funnel_null_and_boundary_parity(spark, tmp_path):
 
 _CLONE = "the fast big merge spill error skew slow small"
 # (doc_id, text): two NULL texts, two '' texts, a clone group of three
-# and a singleton whose text contains the clones' (a containment pair)
+# and a singleton whose text contains the clones' (a containment
+# pair).  The simhash keys see more: doc 9 (the clones' tokens
+# reordered) has their fingerprint in a clone group of its own, docs
+# 10 and 11 are a clone pair at hamming 1 from them and doc 12 is at
+# hamming 2, so both legs of the member-pair expansion are reached.
 CLONE_DOCS = [
     (7, None),
     (2, ""),
@@ -241,6 +245,26 @@ CLONE_DOCS = [
     (8, ""),
     (6, _CLONE),
     (1, _CLONE + " and a tail of its own"),
+    (9, "fast the big merge spill error skew slow small"),
+    (10, _CLONE + " skew"),
+    (11, _CLONE + " skew"),
+    (12, _CLONE + " fast"),
+]
+
+# (s_suppkey, s_name): two NULL names, clone groups of three, two and
+# two (the last of '' names), and names one or two edits apart
+CLONE_SUPPLIERS = [
+    (6, None),
+    (1, "Supplier#01"),
+    (3, "Supplier#02"),
+    (2, "Supplier#01"),
+    (4, None),
+    (5, "Supplier#01"),
+    (8, "Supplier#02"),
+    (7, "Supplier#12"),
+    (9, ""),
+    (11, ""),
+    (10, "ab"),
 ]
 
 
@@ -249,9 +273,13 @@ def test_collapse_null_rule_parity(spark, tmp_path):
     group, the least doc_id represents every group, and the text keys
     that collapse clones keep their oracle answers on NULL, empty and
     cloned texts.  dedup_minhash_verdicts gives each NULL-text doc its
-    own kept component."""
+    own kept component.  The simhash keys and fn_levenshtein_blocked
+    expand representative pairs to member pairs; a NULL text or name
+    pairs with nothing."""
+    from tweetdb_spark.llm import dedup
     from tweetdb_spark.llm.collapse import collapse
     from tweetdb_spark.llm.dedup import dedup_containment, dedup_minhash_verdicts
+    from tweetdb_spark.operators.analytics import fn_levenshtein_blocked
     from tweetdb_spark.llm.text import (
         doc_fingerprint,
         text_lang_id,
@@ -268,14 +296,22 @@ def test_collapse_null_rule_parity(spark, tmp_path):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
     )
-    t = {"documents": spark.read.parquet(path)}
+    spath = str(tmp_path / "supplier.parquet")
+    spark.createDataFrame(
+        CLONE_SUPPLIERS, "s_suppkey long, s_name string"
+    ).coalesce(1).write.parquet(spath)
+    con.execute(
+        f"CREATE VIEW supplier AS SELECT * FROM read_parquet('{spath}/*.parquet')"
+    )
+    t = {"documents": spark.read.parquet(path), "supplier": spark.read.parquet(spath)}
 
     mem, reps = collapse(t["documents"].select("doc_id", "text"))
     assert sorted((r.doc_id, r.rep_id, r.n_docs) for r in mem.collect()) == [
         (1, 1, 1), (2, 2, 2), (3, 3, 3), (4, 4, 1),
         (5, 3, 3), (6, 3, 3), (7, 7, 1), (8, 2, 2),
+        (9, 9, 1), (10, 10, 2), (11, 10, 2), (12, 12, 1),
     ]
-    assert sorted(r.doc_id for r in reps.collect()) == [1, 2, 3, 4, 7]
+    assert sorted(r.doc_id for r in reps.collect()) == [1, 2, 3, 4, 7, 9, 10, 12]
 
     for key, fn in [
         ("text_quality", text_quality),
@@ -283,11 +319,28 @@ def test_collapse_null_rule_parity(spark, tmp_path):
         ("doc_fingerprint", doc_fingerprint),
         ("text_segment_dedup", text_segment_dedup),
         ("dedup_containment", dedup_containment),
+        ("dedup_simhash", dedup.dedup_simhash),
+        ("graph_pagerank", dedup.graph_pagerank),
+        ("graph_triangle_count", dedup.graph_triangle_count),
+        ("graph_degree_distribution", dedup.graph_degree_distribution),
+        ("dedup_cluster_resolve", dedup.dedup_cluster_resolve),
+        ("corpus_dedup_e2e", dedup.corpus_dedup_e2e),
+        ("corpus_pipeline_audit", dedup.corpus_pipeline_audit),
+        ("fn_levenshtein_blocked", fn_levenshtein_blocked),
     ]:
         _parity(key, fn, (t, con), spark)
 
+    # every member pair of {3, 5, 6, 9} × {10, 11}, the value group's
+    # bipartite block at hamming 1 (no NULL-text doc appears)
+    near = {(r.doc_a, r.doc_b): r.hamming for r in dedup.dedup_simhash(spark, t).collect()}
+    assert {near[a, b] for a in (3, 5, 6, 9) for b in (10, 11)} == {1}
+    assert not {4, 7} & {d for p in near for d in p}
+    lev = {(r.supp_a, r.supp_b): r.edit_dist for r in fn_levenshtein_blocked(spark, t).collect()}
+    assert (lev[1, 2], lev[2, 5], lev[3, 8], lev[9, 11], lev[2, 8]) == (0, 0, 0, 0, 1)
+    assert not {4, 6} & {k for p in lev for k in p}
+
     verdicts = {r.doc_id: r for r in dedup_minhash_verdicts(spark, t).collect()}
-    assert sorted(verdicts) == [1, 2, 3, 4, 5, 6, 7, 8]
+    assert sorted(verdicts) == list(range(1, 13))
     for i in (4, 7):
         v = verdicts[i]
         assert (v.component_id, v.keep, v.keep_doc_id, v.reason) == (

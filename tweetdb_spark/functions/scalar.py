@@ -677,7 +677,7 @@ def fn_struct_flatten(spark, t):
     flatten_structs` — the tested helper that every nested-struct
     operator uses to satisfy the driver canonicalizer's scalar-cells
     requirement (struct cells crash its pandas hasher; see
-    CORRECTNESS_r01 notes in tools/check.py).
+    ``tools/keys.py check --strict`` and its ``strict_canon``).
 
     The flatten is pure Catalyst GetStructField projection — no UDF,
     no serialization — so at 100 TB it is map-only and the parquet

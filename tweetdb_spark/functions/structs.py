@@ -2,8 +2,8 @@
 
 The per-round correctness driver canonicalizes results through a pandas
 value hasher that cannot hash non-scalar cells (struct cells crash
-pandas factorize — observed in CORRECTNESS_r01, documented in
-tools/check.py's strict mode).  Every operator whose natural output
+pandas factorize — observed in CORRECTNESS_r01, reproduced by
+``tools/keys.py check --strict``).  Every operator whose natural output
 carries struct columns therefore flattens them to scalar cells before
 returning.  ``fn_nested_struct`` (scalar.py) did this by hand; this
 helper makes the pattern shared and tested so future nested-struct

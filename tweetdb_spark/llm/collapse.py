@@ -40,7 +40,8 @@ NULL text tokenizes, shingles and splits to no rows, so
   exact duplicate of the others.
 
 ``tests/test_null_semantics.py`` pins this on a table with NULL, empty
-and cloned texts, and ``tools/null_survey.py`` checks every key.
+and cloned texts, and ``tools/keys.py check --edge null|empty`` checks
+every key.
 """
 
 from __future__ import annotations
@@ -91,24 +92,28 @@ def collapse(docs, **aggs):
     return mem, mem.where(F.col("doc_id") <= F.col("rep_id"))
 
 
-def _expand_rep_pairs(rep_pairs, mem, value_col: str, within_value: float):
-    """Expand REP-level verified near-dup pairs to member-level pairs.
+def _expand_rep_pairs(rep_pairs, mem, value_col: str, within_value):
+    """Expand REP-level verified near-dup pairs to member-level pairs:
+    the one member-pair expansion of every rep-pair key.
 
     ``rep_pairs`` is (rep_a, rep_b, <value_col>) with rep_a < rep_b,
-    one row per unordered pair of exact-duplicate groups; ``mem`` is
-    the (doc_id, rep_id) member→representative map of :func:`collapse`
-    (or of another exact collapse).  Emits
+    one row per unordered pair of groups; ``mem`` is the
+    (doc_id, rep_id) member→representative map of :func:`collapse`
+    (or of a coarser collapse whose groups are unions of clone groups,
+    such as the simhash value groups).  The key's verify value must be
+    a function of the group alone.  Emits
 
     - every CROSS-group member pair exactly once, as
-      (least, greatest, rep pair's value) — exact clones have
-      byte-identical text, hence identical shingle/token sets, hence
-      the member pair's exact-Jaccard verify value IS the rep pair's
-      (same arrays, same double, same round);
+      (least, greatest, rep pair's value) — members of a group share
+      the verified input (byte-identical text, hence identical
+      shingle/token sets or fingerprints), so the member pair's exact
+      verify value IS the rep pair's (same arrays, same value, same
+      round);
     - every WITHIN-group pair (doc_a < doc_b) at ``within_value``,
-      the identity similarity (identical sets ⇒ jaccard exactly 1 ⇒
-      1.0 / 0.0 depending on the key's sim/dist convention); such a
-      pair always banded together in the naive form (identical
-      signatures collide in every band) and always passed its verify.
+      the identity value (jaccard or containment 1.0, distance 0,
+      cast to ``value_col``'s type); such a pair always met in the
+      naive form's blocking (identical signatures collide in every
+      band or key) and always passed its verify.
 
     Both legs are pure small-row generation — no signature or token
     array ever rides an expansion join, which is what makes the
@@ -153,7 +158,9 @@ def _expand_rep_pairs(rep_pairs, mem, value_col: str, within_value: float):
         .select(
             F.col("x.doc_id").alias("doc_a"),
             F.col("y.doc_id").alias("doc_b"),
-            F.lit(float(within_value)).alias(value_col),
+            F.lit(within_value)
+            .cast(rep_pairs.schema[value_col].dataType)
+            .alias(value_col),
         )
     )
     return cross.unionAll(within)

@@ -192,186 +192,10 @@ _DUCK_TOKHASH = (
 
 _HAMMING_MAX = 3
 
-
-def _simhash_group_fps(spark, reps):
-    """(h, g_rep, simhash) per clone group of :func:`collapse`'s
-    ``reps`` — the 32-bit tf-weighted bit-vote fingerprint, computed
-    once per GROUP (a SimHash is a pure function of the tf multiset,
-    so exact clones share it by construction).  NULL-text groups
-    tokenize to no rows and get no fingerprint; empty-string texts do
-    (split('', ' ') is [''])."""
-    tok = reps.select(
-        F.col("rep_id").alias("g_rep"),
-        "h",
-        F.explode(F.split("text", " ")).alias("token"),
-    )
-    tf = tok.groupBy("g_rep", "h", "token").agg(F.count("*").alias("cnt"))
-    th = tf.select("token").distinct().withColumn("th", F.expr(_SPARK_TOKHASH))
-    bits = (
-        tf.join(F.broadcast(th), "token")
-        .crossJoin(F.broadcast(spark.range(32).select(F.col("id").alias("b"))))
-        .groupBy("g_rep", "h", "b")
-        .agg(
-            F.sum(
-                # pyspark's shiftright() only takes a literal shift, so
-                # the column-shift goes through SQL expr
-                F.when(
-                    F.expr("shiftright(th, cast(b as int)) & 1") == 1, F.col("cnt")
-                ).otherwise(-F.col("cnt"))
-            ).alias("s")
-        )
-    )
-    return bits.groupBy("h", "g_rep").agg(
-        F.sum(
-            F.when(
-                F.col("s") > 0,
-                F.expr("shiftleft(cast(1 as bigint), cast(b as int))"),
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("simhash")
-    )
-
-
-def _simhash_fingerprints(spark, t):
-    """(doc_id, simhash) for every document with a non-NULL text —
-    single implementation shared by dedup_simhash and the graph keys
-    so the Spark pipeline can never drift from the (identical) oracle
-    SQL they embed.
-
-    Collapse-first: fingerprint each clone group's representative and
-    map members back through ONE equi-join on h (the per-doc form
-    pushed ~800M vote rows through the (doc, bit) aggregation at 500k
-    docs and died in GC).  NULL-text groups have no fingerprint, so
-    the inner join drops exactly the rows the per-doc form never
-    produced."""
-    docs = t["documents"].select("doc_id", "text")
-    gfp = _simhash_group_fps(spark, collapse(docs)[1])
-    return (
-        docs.select("doc_id", clone_key().alias("h"))
-        .join(gfp.select("h", "simhash"), "h")
-        .select("doc_id", "simhash")
-    )
-
-
-def _simhash_rep_pairs(spark, fp, max_hamming):
-    """(m, rep_pairs): fingerprint-VALUE collapse of ``fp`` plus the
-    verified rep-level pair graph (r13, sf10 rung catch).
-
-    ``m`` is fp + rep_id where rep_id = min doc_id sharing the SAME
-    32-bit fingerprint — a superset of the md5(text) clone groups
-    (coincidental cross-text fingerprint collisions collapse too,
-    which is sound because every consumer treats equal fingerprints
-    identically: hamming 0 passes every threshold, and identical
-    values collide in every band).  ``rep_pairs`` is
-    (rep_a, rep_b, sh_a, sh_b) for distinct-value rep pairs that
-    band-collide AND pass hamming <= max_hamming.
-
-    Why the filter lives HERE, at rep granularity: 4×8-bit bands have
-    only 256 values per band, so once the corpus holds ≫256 distinct
-    fingerprints the buckets densify from RANDOM collisions — at sf10
-    (500k docs) the per-doc band join enumerated ~1.9B collision rows
-    and died of shuffle spill ("no space left on device", 33 GB free).
-    Collapsing to values first and hamming-filtering before any
-    member expansion makes enumeration O(distinct values² / 256) and
-    expansion proportional to TRUE near-dup output only.
-    """
-    from pyspark.sql import Window as _W
-
-    m = fp.withColumn("rep_id", F.min("doc_id").over(_W.partitionBy("simhash")))
-    reps = m.where(F.col("doc_id") == F.col("rep_id")).select("doc_id", "simhash")
-    bands = reps.crossJoin(
-        F.broadcast(spark.range(4).select(F.col("id").alias("j")))
-    ).select(
-        "doc_id",
-        "simhash",
-        "j",
-        F.expr("shiftright(simhash, cast(8 * j as int)) & 255").alias("band"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-            <= max_hamming
-        )
-        .select(
-            F.col("a.doc_id").alias("rep_a"),
-            F.col("b.doc_id").alias("rep_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return m, rep_pairs
-
-
-def _simhash_band_candidates(spark, fp, max_hamming=_HAMMING_MAX):
-    """Banded near-dup pairs (doc_a, doc_b, sh_a, sh_b) from
-    fingerprints: 4 bands × 8 bits, equi-join on (band index, band
-    value) — shared by dedup_simhash, graph_pagerank and the triangle
-    count so the banding scheme the hamming ≤ 3 pigeonhole proof
-    depends on lives in ONE place.
-
-    Since r13 the enumeration goes through the fingerprint-value
-    collapse (:func:`_simhash_rep_pairs`) and the hamming ≤
-    ``max_hamming`` verify happens BEFORE member expansion, so the
-    returned pairs are already verified — consumers' own hamming
-    re-filters become no-op re-assertions.  The output pair multiset
-    is IDENTICAL to the historical per-doc band join + filter: equal
-    fingerprints collide in every band and have hamming 0 (the WITHIN
-    leg), and a cross-group member pair band-collides/passes iff its
-    rep pair does (same two fingerprint values — the CROSS leg, with
-    sh columns swapped when least/greatest reorders the doc ids)."""
-    m, rep_pairs = _simhash_rep_pairs(spark, fp, max_hamming)
-    ma = m.select(F.col("simhash").alias("sh_a"), F.col("doc_id").alias("da"))
-    mb = m.select(F.col("simhash").alias("sh_b"), F.col("doc_id").alias("db"))
-    cross = (
-        # rebalance before the broadcast expansion joins — same
-        # output-explosion reasoning as _expand_rep_pairs (r16):
-        # without it the clone-quadratic cross mass lands in the ~1
-        # AQE-coalesced partition of the rep-pair frame
-        rep_pairs.select("sh_a", "sh_b")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .join(ma, "sh_a")
-        .join(mb, "sh_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            F.when(F.col("da") < F.col("db"), F.col("sh_a"))
-            .otherwise(F.col("sh_b"))
-            .alias("sh_a"),
-            F.when(F.col("da") < F.col("db"), F.col("sh_b"))
-            .otherwise(F.col("sh_a"))
-            .alias("sh_b"),
-        )
-    )
-    within = (
-        m.alias("x")
-        .join(
-            m.alias("y"),
-            (F.col("x.rep_id") == F.col("y.rep_id"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.simhash").alias("sh_a"),
-            F.col("y.simhash").alias("sh_b"),
-        )
-    )
-    return cross.unionAll(within)
-
-
-@query(
-    "dedup_simhash",
-    oracle=f"""
-    WITH tok AS (
+# The DuckDB twin of _simhash_group_fps, one fingerprint per document:
+# token tf, the portable token hash, the ±tf bit votes and their sign
+# vector.  Every simhash oracle opens its WITH clause with it.
+_DUCK_SIMHASH_FP = f"""tok AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
     ), tf AS (
       SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token
@@ -389,7 +213,173 @@ def _simhash_band_candidates(spark, fp, max_hamming=_HAMMING_MAX):
              CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << CAST(b AS INT)) ELSE 0 END)
                   AS BIGINT) AS simhash
       FROM bits GROUP BY doc_id
-    ), banded AS (
+    )"""
+
+
+def _simhash_group_fps(spark, reps):
+    """(h, g_rep, n_docs, simhash) per clone group of :func:`collapse`'s
+    ``reps`` — the 32-bit tf-weighted bit-vote fingerprint, computed
+    once per GROUP (a SimHash is a pure function of the tf multiset,
+    so exact clones share it by construction).  NULL-text groups
+    tokenize to no rows and get no fingerprint; empty-string texts do
+    (split('', ' ') is [''])."""
+    tok = reps.select(
+        F.col("rep_id").alias("g_rep"),
+        "h",
+        "n_docs",
+        F.explode(F.split("text", " ")).alias("token"),
+    )
+    g = ["g_rep", "h", "n_docs"]
+    tf = tok.groupBy(*g, "token").agg(F.count("*").alias("cnt"))
+    th = tf.select("token").distinct().withColumn("th", F.expr(_SPARK_TOKHASH))
+    bits = (
+        tf.join(F.broadcast(th), "token")
+        .crossJoin(F.broadcast(spark.range(32).select(F.col("id").alias("b"))))
+        .groupBy(*g, "b")
+        .agg(
+            F.sum(
+                # pyspark's shiftright() only takes a literal shift, so
+                # the column-shift goes through SQL expr
+                F.when(
+                    F.expr("shiftright(th, cast(b as int)) & 1") == 1, F.col("cnt")
+                ).otherwise(-F.col("cnt"))
+            ).alias("s")
+        )
+    )
+    return bits.groupBy(*g).agg(
+        F.sum(
+            F.when(
+                F.col("s") > 0,
+                F.expr("shiftleft(cast(1 as bigint), cast(b as int))"),
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("simhash")
+    )
+
+
+def _simhash_graph(spark, gfp, max_hamming):
+    """The simhash near-dup graph over fingerprint VALUES:
+    ``(vmap, rep_pairs)`` — the one graph builder every simhash key
+    reads.
+
+    ``gfp`` is :func:`_simhash_group_fps` of :func:`collapse`'s
+    ``reps`` (a caller whose graph feeds several jobs checkpoints it
+    first).  Clone groups with the same fingerprint form one value
+    group, represented by its least ``g_rep``.
+
+    - ``vmap`` is (h, g_rep, n_docs, rep_id): every fingerprinted
+      clone group and its value rep.
+    - ``rep_pairs`` is (rep_a, rep_b, hamming), rep_a < rep_b, one
+      row per pair of distinct values that share a band and have
+      hamming ≤ ``max_hamming``.
+
+    The rep ids are the member-level ones: each ``g_rep`` is its clone
+    group's least doc_id, so the value rep is its value group's least
+    member doc_id, and the group has Σ n_docs members.  Merging
+    coincidental cross-text collisions is sound because every consumer
+    treats equal fingerprints identically (hamming 0 passes every
+    threshold).  A member pair of two value groups is near iff their
+    rep pair is (the same two fingerprints), and members of one value
+    group are always near at hamming 0 — so the member graph is a
+    clique per value group plus a complete bipartite block per rep
+    pair, and :func:`_expand_rep_pairs` lists it.
+
+    Banding is 4 bands × 8 bits, an equi-join on (band index, band
+    value): a pair at hamming ≤ 3 differs in at most 3 bands, so by
+    pigeonhole it shares one, and the banding is exact.  The verify
+    runs on value reps, before any member expansion: with ≫256
+    distinct fingerprints the 256 values per band fill up with random
+    collisions (at 500k docs a per-document band join enumerated
+    ~1.9B collision rows and ran out of shuffle disk), so enumeration
+    is O(values² / 256) and expansion follows the true near-dup
+    output only.
+    """
+    from pyspark.sql.window import Window
+
+    vmap = gfp.select(
+        "h",
+        "g_rep",
+        "n_docs",
+        "simhash",
+        F.min("g_rep").over(Window.partitionBy("simhash")).alias("rep_id"),
+    )
+    bands = (
+        vmap.where(F.col("g_rep") == F.col("rep_id"))
+        .crossJoin(F.broadcast(spark.range(4).select(F.col("id").alias("j"))))
+        .select(
+            "rep_id",
+            "simhash",
+            "j",
+            F.expr("shiftright(simhash, cast(8 * j as int)) & 255").alias("band"),
+        )
+    )
+    a, b = bands.alias("a"), bands.alias("b")
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    rep_pairs = (
+        a.join(
+            b,
+            (F.col("a.j") == F.col("b.j"))
+            & (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.rep_id") < F.col("b.rep_id")),
+        )
+        .where(hamming <= max_hamming)
+        .select(
+            F.col("a.rep_id").alias("rep_a"),
+            F.col("b.rep_id").alias("rep_b"),
+            hamming.alias("hamming"),
+        )
+        .distinct()
+    )
+    return vmap.drop("simhash"), rep_pairs
+
+
+def _value_sizes(vmap):
+    """(rep_id, c): the member count of every value group."""
+    return vmap.groupBy("rep_id").agg(F.sum("n_docs").alias("c"))
+
+
+def _value_degrees(vmap, rep_pairs):
+    """``(rsym, deg)`` of the member graph :func:`_simhash_graph`
+    describes, without listing it: ``rsym`` is the symmetric rep
+    adjacency (r, nb), and ``deg`` is (rep_id, c, degree) for every
+    value group with an edge.  All c members of a group share one
+    degree, c − 1 (the clique) plus Σ c' over its adjacent groups; a
+    singleton group with no neighbour has degree 0, is no edge
+    endpoint, and is left out, as the member edge list leaves it
+    out."""
+    sizes = _value_sizes(vmap)
+    rsym = rep_pairs.select(
+        F.col("rep_a").alias("r"), F.col("rep_b").alias("nb")
+    ).unionAll(
+        rep_pairs.select(F.col("rep_b").alias("r"), F.col("rep_a").alias("nb"))
+    )
+    nsum = (
+        rsym.join(
+            sizes.select(F.col("rep_id").alias("nb"), F.col("c").alias("nc")),
+            "nb",
+        )
+        .groupBy("r")
+        .agg(F.sum("nc").alias("nsum"))
+    )
+    deg = (
+        sizes.join(nsum, sizes.rep_id == nsum.r, "left")
+        .select(
+            "rep_id",
+            "c",
+            (F.col("c") - 1 + F.coalesce("nsum", F.lit(0).cast("long"))).alias(
+                "degree"
+            ),
+        )
+        .where(F.col("degree") > 0)
+    )
+    return rsym, deg
+
+
+@query(
+    "dedup_simhash",
+    oracle=f"""
+    WITH {_DUCK_SIMHASH_FP}, banded AS (
       SELECT doc_id, simhash, j, (simhash >> CAST(8 * j AS INT)) & 255 AS band
       FROM fp CROSS JOIN (SELECT unnest(range(0, 4)) AS j) bands
     ), cand AS (
@@ -412,14 +402,18 @@ def dedup_simhash(spark, t):
     (shuffle keyed on band buckets, never all-pairs) — then the exact
     Hamming filter (bit_count(xor) ≤ {3}) runs only on collisions.
     A true near-dup differs in few bits, so by pigeonhole it shares at
-    least one of the 4 bands.
+    least one of the 4 bands.  Both run on value reps
+    (:func:`_simhash_graph`); :func:`_expand_rep_pairs` lists the
+    member pairs, the within-group ones at hamming 0.  NULL-text docs
+    have no fingerprint and drop out of the member map.
     """
-    fp = _simhash_fingerprints(spark, t)
-    cand = _simhash_band_candidates(spark, fp)
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select(
-        "doc_a", "doc_b", hamming.alias("hamming")
-    ).where(F.col("hamming") <= _HAMMING_MAX)
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
+    vmap, rep_pairs = _simhash_graph(
+        spark, _simhash_group_fps(spark, reps), _HAMMING_MAX
+    )
+    return _expand_rep_pairs(
+        rep_pairs, mem.select("doc_id", "h").join(vmap, "h"), "hamming", 0
+    )
 
 
 @query(
@@ -554,25 +548,7 @@ def dedup_embedding_cosine(spark, t):
 # Quadratic in N on the oracle side by design — it is the ground truth
 # for the distributed label-propagation loop, run at fixture scale only.
 _SIMHASH_LABELS_CTE = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ), tf AS (
-      SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token
-    ), th AS (
-      SELECT token, {_DUCK_TOKHASH} AS h FROM (SELECT DISTINCT token FROM tf)
-    ), bits AS (
-      SELECT tf.doc_id, b.b,
-             SUM(CASE WHEN (th.h >> CAST(b.b AS INT)) & 1 = 1
-                      THEN tf.cnt ELSE -tf.cnt END) AS s
-      FROM tf JOIN th USING (token)
-      CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
-      GROUP BY tf.doc_id, b.b
-    ), fp AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << CAST(b AS INT)) ELSE 0 END)
-                  AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ), edges AS (
+    WITH {_DUCK_SIMHASH_FP}, edges AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM fp a JOIN fp b
         ON a.doc_id < b.doc_id
@@ -637,7 +613,7 @@ def dedup_cluster_resolve(spark, t):
     ).localCheckpoint(eager=True)
     glab = _simhash_group_labels(spark, reps)
     return (
-        reps.join(glab.select("h", "component_id"), "h", "left")
+        reps.join(glab, "h", "left")
         .groupBy(F.coalesce("component_id", "doc_id").alias("component_id"))
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -647,53 +623,41 @@ def dedup_cluster_resolve(spark, t):
 
 
 def _simhash_group_labels(spark, reps):
-    """Connected-component labels (h, g_rep, component_id) over the
-    simhash hamming ≤ 1 pair graph, at clone-GROUP granularity — one
-    row per fingerprinted group of :func:`collapse`'s ``reps``;
-    min-label propagation with pointer doubling.  Shared by
-    dedup_cluster_resolve, corpus_dedup_e2e and corpus_pipeline_audit,
-    which map members back through one equi-join on h.
+    """Connected-component labels (h, component_id) over the simhash
+    hamming ≤ 1 pair graph, one row per fingerprinted clone group of
+    :func:`collapse`'s ``reps``; min-label propagation with pointer
+    doubling.  Shared by dedup_cluster_resolve, corpus_dedup_e2e and
+    corpus_pipeline_audit, which map members back through one
+    equi-join on h.
 
-    Edges come from the banded candidate equi-join, NOT an all-pairs
-    join: hamming ≤ 1 < 4 bands, so by pigeonhole every qualifying
-    pair shares a band and the banding is EXACT here (same recall-1.0
-    argument dedup_simhash makes for ≤ 3).  The oracle's all-pairs
-    edge SQL therefore proves the banded generation complete as a side
-    effect of checking the components.
+    Edges are :func:`_simhash_graph`'s banded rep pairs, NOT an
+    all-pairs join: hamming ≤ 1 < 4 bands, so the banding is exact
+    here.  The oracle's all-pairs edge SQL therefore proves the banded
+    generation complete as a side effect of checking the components.
 
-    The fixpoint runs on the REP graph alone (bounded by #distinct
-    fingerprints): a member only ever inherits its rep's component,
-    which is a join, not a graph problem — a clique over a clone group
-    and a star onto its rep connect the same node set, and a
-    cross-group member pair qualifies iff its rep pair does.
-    component_id is the min doc_id of the member component: the
-    rep-graph min label is the min simhash-rep id, each simhash-rep is
-    the min g_rep of its value group, and each g_rep is its text
-    group's min doc_id."""
+    The fixpoint runs on the value-rep graph alone (bounded by
+    #distinct fingerprints): a member only ever inherits its value
+    rep's component, which is a join, not a graph problem — a clique
+    over a value group and a star onto its rep connect the same node
+    set, and a cross-group member pair qualifies iff its rep pair
+    does.  component_id is the min doc_id of the member component,
+    since the rep-graph min label is the least value rep, and each
+    value rep is its group's least member doc_id."""
     # checkpointed: the frame spans several jobs (edge checkpoint,
     # component solve, final map), each of which would otherwise
     # re-execute the token-explode × bit-vote fingerprint pipeline
     gfp = _simhash_group_fps(spark, reps).localCheckpoint(eager=True)
-    m, rep_pairs = _simhash_rep_pairs(
-        spark,
-        gfp.select(F.col("g_rep").alias("doc_id"), "simhash"),
-        max_hamming=1,
-    )
+    vmap, rep_pairs = _simhash_graph(spark, gfp, max_hamming=1)
     edges = rep_pairs.select(
         F.col("rep_a").alias("u"), F.col("rep_b").alias("v")
     )
-    rep_nodes = m.where(F.col("doc_id") == F.col("rep_id")).select("doc_id")
+    rep_nodes = vmap.where(F.col("g_rep") == F.col("rep_id")).select(
+        F.col("rep_id").alias("doc_id")
+    )
     rep_labels = _min_label_components(rep_nodes, edges).withColumnRenamed(
         "doc_id", "rep_id"
     )
-    return (
-        gfp.select("h", "g_rep")
-        .join(
-            m.select(F.col("doc_id").alias("g_rep"), "rep_id"), "g_rep"
-        )
-        .join(rep_labels, "rep_id")
-        .select("h", "g_rep", "component_id")
-    )
+    return vmap.join(rep_labels, "rep_id").select("h", "component_id")
 
 
 # Edge-count bound for solving connected components driver-side (the
@@ -1011,11 +975,11 @@ def corpus_dedup_e2e(spark, t):
     docs = t["documents"].select("doc_id", "text", "n_chars")
     # checkpointed: feeds the fingerprint pipeline and the keeper
     reps = collapse(docs, best=best)[1].select(
-        "doc_id", "rep_id", "h", "text", "best"
+        "doc_id", "rep_id", "h", "text", "n_docs", "best"
     ).localCheckpoint(eager=True)
     glab = _simhash_group_labels(spark, reps)
     canon = (
-        reps.join(glab.select("h", "component_id"), "h")
+        reps.join(glab, "h")
         .groupBy("component_id")
         .agg(F.min(F.struct("best", "h")).alias("k"))
         .select(
@@ -1027,7 +991,7 @@ def corpus_dedup_e2e(spark, t):
     keep_id = F.coalesce("keep_doc_id", F.col("doc_id"))
     return (
         docs.select("doc_id", clone_key().alias("h"))
-        .join(glab.select("h", "component_id"), "h", "left")
+        .join(glab, "h", "left")
         .withColumn(
             "component_id", F.coalesce("component_id", F.col("doc_id"))
         )
@@ -2292,25 +2256,7 @@ def _pagerank_iter_ctes(n_iters: int) -> str:
 @query(
     "graph_pagerank",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ), tf AS (
-      SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token
-    ), th AS (
-      SELECT token, {{_DUCK_TOKHASH}} AS h FROM (SELECT DISTINCT token FROM tf)
-    ), bits AS (
-      SELECT tf.doc_id, b.b,
-             SUM(CASE WHEN (th.h >> CAST(b.b AS INT)) & 1 = 1
-                      THEN tf.cnt ELSE -tf.cnt END) AS s
-      FROM tf JOIN th USING (token)
-      CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
-      GROUP BY tf.doc_id, b.b
-    ), fp AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << CAST(b AS INT)) ELSE 0 END)
-                  AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ), edges AS (
+    WITH {_DUCK_SIMHASH_FP}, edges AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM fp a JOIN fp b
         ON a.doc_id < b.doc_id
@@ -2325,12 +2271,10 @@ def _pagerank_iter_ctes(n_iters: int) -> str:
       SELECT u, CAST(count(*) AS DOUBLE) AS d FROM sym GROUP BY u
     ), pr0 AS (
       SELECT id, 1.0 / nn.n AS p FROM nodes CROSS JOIN nn
-    ), {{_ITERS}}
+    ), {_pagerank_iter_ctes(5)}
     SELECT id AS doc_id, ROUND(p, 6) + 0 AS pagerank
     FROM pr5
-    """.replace("{_DUCK_TOKHASH}", _DUCK_TOKHASH.replace("{s}", "token")
-                if "{s}" in _DUCK_TOKHASH else _DUCK_TOKHASH)
-       .replace("{_ITERS}", _pagerank_iter_ctes(5)),
+    """,
 )
 def graph_pagerank(spark, t):
     """PageRank (5 synchronous iterations, d = 0.85) over the simhash
@@ -2345,58 +2289,31 @@ def graph_pagerank(spark, t):
     form — the hash match additionally proves band completeness at
     hamming ≤ 3.  The symmetric graph has no dangling nodes, so no
     redistribution term is needed.
+
+    Collapsed iteration: the member graph is a clique per value group
+    plus a complete bipartite block per rep pair
+    (:func:`_simhash_graph`), so every member of a group carries the
+    SAME rank and degree at every step; the 5 synchronous rounds run
+    on the rep graph with size weights — the contribution to G is
+    (c_G−1)·p_G/d_G (fellow members) plus Σ_{G'~G} c_{G'}·p_{G'}/d_{G'}
+    — and members inherit their group's rank at the end.  The member
+    pair list (quadratic in clone multiplicity) never materializes;
+    round(…, 6) absorbs the multiply-vs-repeated-add ulp drift exactly
+    as it already does between Spark's and DuckDB's member-level sum
+    orders.
     """
-    # checkpoint the fingerprint table once (r15): the iterative key
-    # is multi-JOB (a checkpoint per round), and every downstream
-    # consumer (sizes via m, rsym via rep_pairs, the final member
-    # join) otherwise re-executes the token-explode × 32-bit-vote
-    # pipeline in its own job — the dominant fixed cost at fixture
-    # scale (sf0.1 build 15.6 s → 8.6 s with rsym cut, → ~4 s with
-    # this).  Single-plan consumers of _simhash_fingerprints don't
-    # need this: exchange reuse covers them inside one job.
-    fp = _simhash_fingerprints(spark, t).localCheckpoint(eager=True)
-    m, rep_pairs = _simhash_rep_pairs(spark, fp, _HAMMING_MAX)
-    # Collapsed iteration (r13): the member graph is clique-per-group
-    # + complete-bipartite across adjacent groups, so every member of
-    # a group carries the SAME rank and degree at every step; the 5
-    # synchronous rounds run on the rep graph with size weights —
-    # contribution to G is (c_G−1)·p_G/d_G (fellow members) plus
-    # Σ_{G'~G} c_{G'}·p_{G'}/d_{G'} — and members inherit their
-    # group's rank at the end.  The member pair list (quadratic in
-    # clone multiplicity) never materializes; round(…, 6) absorbs the
-    # multiply-vs-repeated-add ulp drift exactly as it already does
-    # between Spark's and DuckDB's member-level sum orders.
-    sizes = m.groupBy("rep_id").agg(F.count("*").alias("c"))
-    # checkpoint the symmetric rep adjacency ONCE (r15): it rides the
-    # cross-contribution join in EVERY iteration, and without the
-    # lineage cut each round's job re-executed the whole
-    # banding+verify pipeline upstream of rep_pairs — five recomputes
-    # of the expensive part for five cheap rounds
-    rsym = rep_pairs.select(
-        F.col("rep_a").alias("r"), F.col("rep_b").alias("nb")
-    ).unionAll(
-        rep_pairs.select(F.col("rep_b").alias("r"), F.col("rep_a").alias("nb"))
+    mem, reps = collapse(t["documents"].select("doc_id", "text"))
+    # checkpointed: the key runs a job per round, and each would
+    # otherwise re-execute the token-explode × bit-vote fingerprint
+    # pipeline (at sf0.1 this cut the build from 8.6 s to ~4 s)
+    gfp = _simhash_group_fps(spark, reps).localCheckpoint(eager=True)
+    vmap, rep_pairs = _simhash_graph(spark, gfp, _HAMMING_MAX)
+    # checkpointed: the adjacency rides the cross-contribution join in
+    # every round, which would otherwise re-run the banding and verify
+    rsym, deg = _value_degrees(vmap, rep_pairs.localCheckpoint(eager=True))
+    grp = deg.select(
+        "rep_id", "c", F.col("degree").cast("double").alias("d")
     ).localCheckpoint(eager=True)
-    nsum = (
-        rsym.join(
-            sizes.select(F.col("rep_id").alias("nb"), F.col("c").alias("nc")),
-            "nb",
-        )
-        .groupBy("r")
-        .agg(F.sum("nc").alias("nsum"))
-    )
-    grp = (
-        sizes.join(nsum, sizes.rep_id == nsum.r, "left")
-        .select(
-            "rep_id",
-            "c",
-            (F.col("c") - 1 + F.coalesce("nsum", F.lit(0).cast("long")))
-            .cast("double")
-            .alias("d"),
-        )
-        .where(F.col("d") > 0)
-        .localCheckpoint(eager=True)
-    )
     nn = F.broadcast(grp.agg(F.sum("c").cast("double").alias("n")))
     p = grp.crossJoin(nn).select(
         "rep_id", (F.lit(1.0) / F.col("n")).alias("p")
@@ -2426,8 +2343,11 @@ def graph_pagerank(spark, t):
             )
             .localCheckpoint(eager=True)
         )
-    return m.select("doc_id", "rep_id").join(p, "rep_id").select(
-        "doc_id", (F.round("p", 6) + 0).alias("pagerank")
+    return (
+        mem.select("doc_id", "h")
+        .join(vmap.select("h", "rep_id"), "h")
+        .join(p, "rep_id")
+        .select("doc_id", (F.round("p", 6) + 0).alias("pagerank"))
     )
 
 
@@ -2754,25 +2674,7 @@ def dedup_containment(spark, t):
 @query(
     "graph_triangle_count",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ), tf AS (
-      SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token
-    ), th AS (
-      SELECT token, {_DUCK_TOKHASH} AS h FROM (SELECT DISTINCT token FROM tf)
-    ), bits AS (
-      SELECT tf.doc_id, b.b,
-             SUM(CASE WHEN (th.h >> CAST(b.b AS INT)) & 1 = 1
-                      THEN tf.cnt ELSE -tf.cnt END) AS s
-      FROM tf JOIN th USING (token)
-      CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
-      GROUP BY tf.doc_id, b.b
-    ), fp AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << CAST(b AS INT)) ELSE 0 END)
-                  AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ), edges AS (
+    WITH {_DUCK_SIMHASH_FP}, edges AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM fp a JOIN fp b
         ON a.doc_id < b.doc_id
@@ -2794,9 +2696,9 @@ def graph_triangle_count(spark, t):
     oracle rebuilds them ALL-PAIRS, so this hash check proves band
     completeness AND the count in one shot.
 
-    **Collapsed counting (r13)**: the expanded member graph is a
-    pure function of the fingerprint-value groups — equal-value
-    members form cliques, adjacent groups complete bipartite blocks —
+    **Collapsed counting**: the expanded member graph is a pure
+    function of the fingerprint-value groups — equal-value members
+    form cliques, adjacent groups complete bipartite blocks —
     so the triangle count decomposes exactly into (1) ΣC(c,3) within
     groups, (2) C(c,2)·c' + C(c',2)·c per adjacent group pair, and
     (3) a compact-forward join over the REP graph (rep_a < rep_b
@@ -2809,9 +2711,11 @@ def graph_triangle_count(spark, t):
     reps get mostly in-edges), and group sizes ride a broadcast-sized
     frame.
     """
-    fp = _simhash_fingerprints(spark, t)
-    m, rep_pairs = _simhash_rep_pairs(spark, fp, _HAMMING_MAX)
-    sizes = m.groupBy("rep_id").agg(F.count("*").alias("c"))
+    _, reps = collapse(t["documents"].select("doc_id", "text"))
+    vmap, rep_pairs = _simhash_graph(
+        spark, _simhash_group_fps(spark, reps), _HAMMING_MAX
+    )
+    sizes = _value_sizes(vmap)
     # (1) all three inside one group: C(c,3); product of 3 consecutive
     # ints is divisible by 6, so integral `div` is exact
     t1 = sizes.select(F.expr("c * (c - 1) * (c - 2) div 6").alias("tri"))
@@ -2830,18 +2734,18 @@ def graph_triangle_count(spark, t):
     # compact-forward on the (rep_a < rep_b)-oriented rep graph, one
     # row per rep triangle, weighted by the size product
     r = rep_pairs.select("rep_a", "rep_b")
-    r1, r2, r3 = r.alias("r1"), r.alias("r2"), r.alias("r3")
+    e1, e2, e3 = r.alias("e1"), r.alias("e2"), r.alias("e3")
     rep_tri = (
-        r1.join(r2, F.col("r1.rep_b") == F.col("r2.rep_a"))
+        e1.join(e2, F.col("e1.rep_b") == F.col("e2.rep_a"))
         .join(
-            r3,
-            (F.col("r3.rep_a") == F.col("r1.rep_a"))
-            & (F.col("r3.rep_b") == F.col("r2.rep_b")),
+            e3,
+            (F.col("e3.rep_a") == F.col("e1.rep_a"))
+            & (F.col("e3.rep_b") == F.col("e2.rep_b")),
         )
         .select(
-            F.col("r1.rep_a").alias("ga"),
-            F.col("r1.rep_b").alias("gb"),
-            F.col("r2.rep_b").alias("gc"),
+            F.col("e1.rep_a").alias("ga"),
+            F.col("e1.rep_b").alias("gb"),
+            F.col("e2.rep_b").alias("gc"),
         )
     )
     t3 = (
@@ -2860,25 +2764,7 @@ def graph_triangle_count(spark, t):
 @query(
     "graph_degree_distribution",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ), tf AS (
-      SELECT doc_id, token, count(*) AS cnt FROM tok GROUP BY doc_id, token
-    ), th AS (
-      SELECT token, {{_DUCK_TOKHASH}} AS h FROM (SELECT DISTINCT token FROM tf)
-    ), bits AS (
-      SELECT tf.doc_id, b.b,
-             SUM(CASE WHEN (th.h >> CAST(b.b AS INT)) & 1 = 1
-                      THEN tf.cnt ELSE -tf.cnt END) AS s
-      FROM tf JOIN th USING (token)
-      CROSS JOIN (SELECT unnest(range(0, 32)) AS b) b
-      GROUP BY tf.doc_id, b.b
-    ), fp AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN s > 0 THEN (1::BIGINT << CAST(b AS INT)) ELSE 0 END)
-                  AS BIGINT) AS simhash
-      FROM bits GROUP BY doc_id
-    ), edges AS (
+    WITH {_DUCK_SIMHASH_FP}, edges AS (
       SELECT a.doc_id AS u, b.doc_id AS v
       FROM fp a JOIN fp b
         ON a.doc_id < b.doc_id
@@ -2890,8 +2776,7 @@ def graph_triangle_count(spark, t):
     )
     SELECT degree, count(*) AS n_nodes
     FROM deg GROUP BY degree
-    """.replace("{_DUCK_TOKHASH}", _DUCK_TOKHASH.replace("{s}", "token")
-                if "{s}" in _DUCK_TOKHASH else _DUCK_TOKHASH),
+    """,
 )
 def graph_degree_distribution(spark, t):
     """Degree distribution of the near-dup graph — the first statistic
@@ -2903,45 +2788,17 @@ def graph_degree_distribution(spark, t):
     graph_pagerank / graph_triangle_count), the oracle rebuilds them
     ALL-PAIRS — so band completeness is re-proven through yet another
     lens, and the whole histogram is value-hash-checked.  Computed on
-    the COLLAPSED rep graph (r13): all members of a fingerprint-value
-    group share one degree, so the histogram is a size-weighted agg
-    over rep rows, never the member pair list.  At 100 TB this is the
-    cheap pre-flight before pointer-doubling components: degrees are
-    one agg over the rep edge list, and the histogram tells you the
-    iteration count and the skew story before you commit to the
-    expensive pass.
+    the COLLAPSED rep graph (:func:`_value_degrees`): all members of a
+    fingerprint-value group share one degree, so the histogram is a
+    size-weighted agg over rep rows, never the member pair list.  At
+    100 TB this is the cheap pre-flight before pointer-doubling
+    components: degrees are one agg over the rep edge list, and the
+    histogram tells you the iteration count and the skew story before
+    you commit to the expensive pass.
     """
-    fp = _simhash_fingerprints(spark, t)
-    m, rep_pairs = _simhash_rep_pairs(spark, fp, _HAMMING_MAX)
-    # Collapsed degrees (r13): every member of a fingerprint-value
-    # group G has the same degree (|G|-1 clique edges) + Σ|G'| over
-    # adjacent groups — so the histogram is computable on the REP
-    # graph with size weights, without expanding the member pair list
-    # (quadratic in clone multiplicity).  Isolated docs (singleton
-    # group, no neighbors → degree 0) never appear in the edge list,
-    # matching the member-level form.
-    sizes = m.groupBy("rep_id").agg(F.count("*").alias("c"))
-    rsym = rep_pairs.select(
-        F.col("rep_a").alias("r"), F.col("rep_b").alias("nb")
-    ).unionAll(
-        rep_pairs.select(F.col("rep_b").alias("r"), F.col("rep_a").alias("nb"))
+    _, reps = collapse(t["documents"].select("doc_id", "text"))
+    vmap, rep_pairs = _simhash_graph(
+        spark, _simhash_group_fps(spark, reps), _HAMMING_MAX
     )
-    nsum = (
-        rsym.join(
-            sizes.select(F.col("rep_id").alias("nb"), F.col("c").alias("nc")),
-            "nb",
-        )
-        .groupBy("r")
-        .agg(F.sum("nc").alias("nsum"))
-    )
-    deg = (
-        sizes.join(nsum, sizes.rep_id == nsum.r, "left")
-        .select(
-            "c",
-            (
-                F.col("c") - 1 + F.coalesce("nsum", F.lit(0).cast("long"))
-            ).alias("degree"),
-        )
-        .where(F.col("degree") > 0)
-    )
+    _, deg = _value_degrees(vmap, rep_pairs)
     return deg.groupBy("degree").agg(F.sum("c").alias("n_nodes"))

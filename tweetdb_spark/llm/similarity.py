@@ -1309,8 +1309,9 @@ def embed_pca_power(spark, t):
 
     Each of the 5 iterations is ONE distributed pass: broadcast the
     current 64-float direction as a literal array, compute every
-    row's projection ``x·v`` in codegen (``zip_with`` +
-    ``aggregate``), scale the row by it, and elementwise-sum via
+    row's projection ``x·v`` once in codegen (:func:`dot`, a column of
+    its own, so the scaling lambda reads it instead of recomputing
+    it per element), scale the row by it, and elementwise-sum via
     ``posexplode → groupBy(pos)`` — a 64-group aggregation whose
     partials combine map-side, so the driver receives exactly 64
     doubles per iteration regardless of corpus size.
@@ -1334,10 +1335,14 @@ def embed_pca_power(spark, t):
     v = [1.0 / dim**0.5] * dim
     for _ in range(iters):
         # the current direction as a literal array column, named for dot
-        scaled = emb.withColumn("v", F.array(*[F.lit(float(x)) for x in v])).select(
-            F.posexplode(
-                F.transform("embedding", lambda x: x * dot("embedding", "v"))
-            ).alias("pos", "val")
+        scaled = (
+            emb.withColumn("v", F.array(*[F.lit(float(x)) for x in v]))
+            .select("embedding", dot("embedding", "v").alias("proj"))
+            .select(
+                F.posexplode(
+                    F.transform("embedding", lambda x: x * F.col("proj"))
+                ).alias("pos", "val")
+            )
         )
         rows = (
             scaled.groupBy("pos").agg(F.sum("val").alias("s")).collect()

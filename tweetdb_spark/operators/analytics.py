@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tweetdb_spark.llm.collapse import _expand_rep_pairs, collapse
 from tweetdb_spark.registry import query
 
 
@@ -387,27 +388,28 @@ def fn_levenshtein_blocked(spark, t):
     ALL-PAIRS QUERY — the hash check proves the blocked rewrite
     returns byte-identical results.  Same candidate-generation shape
     as the dedup ladder (simhash bands / LSH buckets / IVF cells).
-    """
-    from pyspark.sql import Window as _W
 
-    s = t["supplier"].select("s_suppkey", "s_name")
-    # Exact-collapse-first (r13, sf10 rung catch): identical names
-    # share every index AND probe key, so the blocked join was
-    # quadratic in name multiplicity on clone-heavy data (the sf10
-    # fixture's ~100-clone name groups stalled the candidate join).
-    # Block and verify one representative per distinct name, then
-    # expand rep pairs to member pairs: identical names always
-    # collide in the naive form (the identity probe lp=len, d=0 IS
-    # the index key) at edit distance 0, and a cross-group member
-    # pair is a candidate with the same distance iff its rep pair is
-    # (same two names).  NULL names produce NULL join keys in the
-    # naive form and never pair — the member map drops them so the
-    # within leg cannot fabricate NULL-name pairs.  The all-pairs
-    # oracle is unchanged; the hash check proves the collapse exact.
-    s = s.withColumn("rep", F.min("s_suppkey").over(_W.partitionBy("s_name")))
-    mem = s.where(F.col("s_name").isNotNull()).select("s_suppkey", "rep")
-    reps = s.where(F.col("s_suppkey") == F.col("rep")).select(
-        "s_suppkey", "s_name"
+    Exact-collapse-first: identical names share every index AND probe
+    key, so the blocked join is quadratic in name multiplicity on
+    clone-heavy data (the sf10 fixture's ~100-clone name groups stalled
+    the candidate join).
+    :func:`collapse` elects one representative per distinct name; the
+    blocking and verify run on representatives, and
+    :func:`_expand_rep_pairs` lists the member pairs.  Identical names
+    always collide in the naive form (the identity probe lp = len,
+    d = 0 IS the index key) at edit distance 0, and a cross-group
+    member pair is a candidate with the same distance iff its rep pair
+    is (same two names).  A NULL name is its own singleton group whose
+    NULL index keys never join, so it pairs with nothing, as in the
+    naive form.
+    """
+    mem, reps = collapse(
+        t["supplier"].select(
+            F.col("s_suppkey").alias("doc_id"), F.col("s_name").alias("text")
+        )
+    )
+    reps = reps.select(
+        F.col("doc_id").alias("s_suppkey"), F.col("text").alias("s_name")
     )
     a = reps.select(
         F.col("s_suppkey").alias("supp_a"),
@@ -431,39 +433,9 @@ def fn_levenshtein_blocked(spark, t):
         F.col("supp_b").alias("rep_b"),
         dist.alias("edit_dist"),
     )
-    ma = mem.select(F.col("rep").alias("rep_a"), F.col("s_suppkey").alias("ka"))
-    mb = mem.select(F.col("rep").alias("rep_b"), F.col("s_suppkey").alias("kb"))
-    cross = (
-        # rebalance before the broadcast expansion joins (r16, sf10
-        # catch): 142k rep pairs expand to 1.4B member pairs; without
-        # the round-robin shuffle the whole expansion inherits the ~1
-        # AQE-coalesced input partition and runs in one task (see
-        # llm/collapse.py _expand_rep_pairs for the full reasoning)
-        rep_pairs.repartition(
-            rep_pairs.sparkSession.sparkContext.defaultParallelism
-        )
-        .join(ma, "rep_a")
-        .join(mb, "rep_b")
-        .select(
-            F.least("ka", "kb").alias("supp_a"),
-            F.greatest("ka", "kb").alias("supp_b"),
-            "edit_dist",
-        )
+    return _expand_rep_pairs(rep_pairs, mem, "edit_dist", 0).select(
+        F.col("doc_a").alias("supp_a"), F.col("doc_b").alias("supp_b"), "edit_dist"
     )
-    within = (
-        mem.alias("x")
-        .join(
-            mem.alias("y"),
-            (F.col("x.rep") == F.col("y.rep"))
-            & (F.col("x.s_suppkey") < F.col("y.s_suppkey")),
-        )
-        .select(
-            F.col("x.s_suppkey").alias("supp_a"),
-            F.col("y.s_suppkey").alias("supp_b"),
-            F.lit(0).cast("int").alias("edit_dist"),
-        )
-    )
-    return cross.unionAll(within)
 
 
 @query(

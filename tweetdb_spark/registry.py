@@ -81,7 +81,7 @@ def query(name: str, oracle: Optional[str] = None, eager: bool = False):
 # window; the rotation policy is that every parked key holds driver-green
 # rows from ≥2 recent rounds (the dated rotation history is in CHANGES.md).
 # If the driver's window size or selection policy ever differs,
-# ``tools/check.py --strict`` still verifies ALL registered hashable keys
+# ``tools/keys.py check --strict`` still verifies ALL registered hashable keys
 # locally regardless of position — that local sweep, not this ordering,
 # is the completeness backstop.
 # ---------------------------------------------------------------------------

@@ -4,7 +4,7 @@ cache of artifacts derived from a corpus's source files.
 
 Dirs are namespaced ``<prefix>_<pid-tag>_<time_ns>`` so that
 
-- concurrent sessions (e.g. ``tools/check.py`` and ``pytest`` at the
+- concurrent sessions (e.g. ``tools/keys.py check`` and ``pytest`` at the
   same time) can never reap each other's in-flight output or
   checkpoint dirs — each process only ever deletes dirs carrying its
   OWN pid tag;

@@ -61,7 +61,7 @@ def _staging(sf_dir: str, name: str, kind: str) -> tuple[str, str | None]:
     across driver rounds, and /tmp outlives them.  The dir is
     FINGERPRINT-SUFFIXED: a regenerated fixture stages into a new dir
     instead of rmtree'ing the old one in place — a concurrent
-    process (pytest + tools/check.py) may still have a running
+    process (pytest + ``tools/keys.py check``) may still have a running
     file-stream query over the previous vintage, and deleting its
     source files mid-query would kill it.  Other vintages are reaped
     once 2 h stale (file streams here run seconds), never while
